@@ -249,12 +249,15 @@ object Bench {
     val calJson = calibration.map { case (k, v) =>
       jstr(k) + ":" + math.round(v * 1000)
     }.mkString("{", ",", "}")
+    // `cpus` is the core count the session actually ran on (local[N]),
+    // so a scaling comparison across runs can tell an overhead-bound
+    // total from a CPU setting that never reached the session
     val head =
       s""""metric":"total","value":${num(total)},"unit":"sec","runs":$Passes,"sf":"$sfDir",""" +
         s""""n_failed":${errors.size},"errors":$errs,""" +
         s""""spread_max":${num(spreadMax)},"spread_max_query":${jstr(spreadMaxQ)},""" +
         s""""gc_ms":$gcTotalMs,"steal_ms":$stealTotalMs,"storage_peak_mb":$storagePeakMb,""" +
-        s""""calibration":$calJson,""" +
+        s""""cpus":${spark.sparkContext.defaultParallelism},"calibration":$calJson,""" +
         s""""n_remeasured":${records.count(_.remeasured)},"jvm_opts":${jstr(jvmOpts)}"""
     val gcJson = gcPairs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
     val stealJson = stealPairs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")

@@ -163,11 +163,17 @@ object Graft {
     ops.Dedup.containmentPairs(ops.Dedup.hashedShinglesOf(docs), maxShingleDf, minContainment)
 
   /** Min-label connected components over an undirected (i, j) edge
-    * list: (id, label) with label = min reachable id. High-diameter
-    * graphs converge in O(log n) rounds via path doubling. Set
-    * `reliable = true` (with `SparkContext.setCheckpointDir`) for
-    * cluster runs where the loop's lineage must survive executor
-    * loss. */
+    * list: (id, label) with label = min reachable id. The edge pipeline
+    * is checkpointed once; an edge set of at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes (Spark's own bound
+    * for holding a relation whole in one process) is then closed on the
+    * driver by union-find and returned as a local relation. A larger
+    * one — or any, with the threshold at `-1` — runs the distributed
+    * min-label propagation loop, where high-diameter graphs converge in
+    * O(log n) rounds via path doubling. Both paths return the same rows
+    * and schema. Set `reliable = true` (with
+    * `SparkContext.setCheckpointDir`) for cluster runs where the
+    * checkpointed lineage must survive executor loss. */
   def connectedComponents(edges: DataFrame, reliable: Boolean = false): DataFrame =
     ops.Components.connectedComponents(edges, reliable = reliable)
 
@@ -198,6 +204,9 @@ object Graft {
 
   /** The deduplicated corpus: drops every near-dup that is not its
     * component's min doc_id. All non-key columns pass through. The
+    * pair closure is [[connectedComponents]]: on the driver when the
+    * pair set fits under `spark.sql.autoBroadcastJoinThreshold`, by the
+    * propagation loop otherwise (or with the threshold at `-1`). The
     * drop set is duplication-bounded but not bounded by construction,
     * so the anti-join is plain — AQE broadcasts it when small. */
   def dedup(docs: DataFrame): DataFrame = {

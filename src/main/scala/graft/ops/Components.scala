@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.Q
 
 /** Connected components over the near-dup pair graph — the stage that
@@ -11,19 +14,39 @@ import graft.Q
   * (which never dedups); this is the standard closing step of a corpus
   * dedup pipeline.
   *
-  * Algorithm: Pregel-style min-label propagation on DataFrames — each
-  * round every node takes the min of its own label and its neighbors',
-  * until no label changes. Rounds = graph diameter; near-dup components
-  * are small dense clusters (diameter 2-3 in practice), so the loop
-  * terminates in a handful of rounds. Per round: one shuffle for the
-  * (edges ⋈ labels) min-aggregation, one broadcast-or-shuffle join to
-  * merge, one `localCheckpoint` to truncate lineage (without it the plan
-  * doubles per round and Catalyst analysis goes quadratic), and one
-  * `count` action for the convergence check — driver-side scalars only,
-  * never row data. For adversarial long-chain graphs the same loop
-  * structure admits the large-star/small-star optimization (Kiveris et
-  * al.), which contracts chains in O(log n) rounds; not needed for
-  * near-dup shapes.
+  * Two paths, one contract. The caller's pair pipeline is evaluated
+  * exactly once into a checkpointed edge frame; what closes it depends
+  * on the edge count the checkpoint observed:
+  *
+  *  - Driver finish (edges ≤ cap): the edge blocks are read back —
+  *    bounded at cap + 1 rows, so the driver never holds more — and
+  *    closed with union-find, always linking the larger root under the
+  *    smaller, so each root is its component's min id. The result is a
+  *    local relation. `cap` is `spark.sql.autoBroadcastJoinThreshold`
+  *    (bytes) over the edge schema's row size — the same bound Spark
+  *    uses to hold a relation whole in one process for a broadcast
+  *    join; `-1` turns the driver finish off. Near-dup pair graphs are
+  *    ∝ duplicated docs, so this is the common case, and it replaces
+  *    rounds × (shuffle + checkpoint barrier + convergence action) with
+  *    one read-back job.
+  *  - Loop (every other case: edges > cap, the threshold off, a null
+  *    endpoint, ids neither int nor bigint): Pregel-style min-label
+  *    propagation on DataFrames — each round every node takes the min of
+  *    its own label and its neighbors', until no label changes. Rounds =
+  *    graph diameter; near-dup components are small dense clusters
+  *    (diameter 2-3 in practice), so the loop terminates in a handful of
+  *    rounds. Per round: one shuffle for the (edges ⋈ labels)
+  *    min-aggregation, one broadcast-or-shuffle join to merge, one
+  *    `localCheckpoint` to truncate lineage (without it the plan doubles
+  *    per round and Catalyst analysis goes quadratic), and one `count`
+  *    action for the convergence check — driver-side scalars only, never
+  *    row data. Past [[PlainRounds]] a path-doubling shortcut joins each
+  *    round, so long chains converge in O(log n) rounds.
+  *
+  * Both paths return the same (id, label) rows, column types and
+  * nullability (ComponentsSpec runs them side by side). The gate is the
+  * OBSERVED edge count, not a size estimate: at 100 TB the pair set is
+  * past any cap and the loop runs.
   *
   * Scale: state is one (id, label) row per node appearing in any pair —
   * proportional to DUPLICATED docs only, typically a small fraction of
@@ -86,18 +109,12 @@ object Components {
     * columns (i, j). Returns (id, component) for every node in the edge
     * list, component = min doc_id reachable.
     *
-    * Each round materializes via checkpoint and folds the convergence
-    * check into the same action. Min-propagation is monotone, so a
-    * round that changes nothing proves the fixpoint — the loop exits on
-    * the first zero-change round, and near-dup graphs have diameter
-    * 2-3, so that is 3-4 actions total. After [[PlainRounds]] rounds a
-    * path-doubling shortcut (label := label's label) joins each round,
-    * so adversarial high-diameter chains converge in O(log n) rounds
-    * instead of O(diameter) — `maxIter` = 30 then covers diameters past
-    * 2²⁰ rather than aborting at 31. (See the inline note below on why
-    * multi-round batching was tried and reverted.)
+    * The pair pipeline is checkpointed once (`e`). When `e` holds at
+    * most [[driverCap]] edges it closes on the driver
+    * ([[closeOnDriver]]) and `e` is released; otherwise the propagation
+    * loop ([[closeByPropagation]]) runs over `e`.
     *
-    * @param reliable when true, materialize rounds with reliable
+    * @param reliable when true, materialize with reliable
     *   `checkpoint()` (requires `SparkContext.setCheckpointDir`) so the
     *   truncated lineage survives executor loss on a real cluster; the
     *   default `localCheckpoint()` stores blocks executor-local — fine
@@ -108,6 +125,104 @@ object Components {
     val rel = reliable || sessionReliable(edges)
     if (rel) requireCheckpointDir(edges)
     def ckpt(df: DataFrame): DataFrame = materialize(df, rel)
+    // Checkpoint the DIRECTED pairs first (r14): ckpt-ing the union of
+    // the raw pipeline evaluated the caller's pair pipeline once per
+    // union branch — ReuseExchange dedups the exchanges below, but
+    // everything between the last exchange and the union top (the
+    // Jaccard-verification join with its array_intersect over shingle
+    // arrays) ran TWICE per CC call. The pipeline evaluates exactly
+    // once, here; both closing paths read e's blocks.
+    val e = ckpt(edges.select(col("i"), col("j")))
+    closeOnDriver(e) match {
+      case Some(labels) =>
+        releaseBlocks(e)
+        labels
+      case None => closeByPropagation(e, maxIter, ckpt)
+    }
+  }
+
+  /** Most edges the driver finish closes: the session's broadcast
+    * threshold in bytes over the edge schema's row size, sized the way
+    * Spark sizes a local relation against that threshold. `None` when
+    * the threshold is negative (broadcasting, and the driver finish,
+    * off). */
+  private[graft] def driverCap(e: DataFrame): Option[Long] = {
+    val threshold = e.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val rowBytes = EstimationUtils.getSizePerRow(e.queryExecution.analyzed.output).toLong
+    if (threshold < 0) None else Some(threshold / rowBytes)
+  }
+
+  /** The loop's (src, dst) view of the directed edge frame: both
+    * orientations, column types widened the way the union widens them. */
+  private def symmetrized(e: DataFrame): DataFrame =
+    e.select(col("i").as("src"), col("j").as("dst"))
+      .union(e.select(col("j").as("src"), col("i").as("dst")))
+
+  /** Driver finish: read `e` back — at most cap + 1 rows, through one
+    * task, so neither the wire nor the driver ever carries more — and
+    * close it with union-find. Node ids are sorted into dense indexes
+    * and every link puts the larger root under the smaller, so each
+    * root is its component's min id: the label the loop converges to.
+    * The (id, label) relation is local, with the loop's column names,
+    * type (i and j widened as the loop's union widens them) and
+    * nullability.
+    *
+    * `None` (run the loop) when the threshold is off, the edge set
+    * exceeds the cap, the ids are neither int nor bigint, or an endpoint is
+    * null: the loop keeps a null-id row whose label depends on its round
+    * schedule (path-doubling rounds rewrite or drop it), which no
+    * closed form reproduces. */
+  private def closeOnDriver(e: DataFrame): Option[DataFrame] = {
+    val src = symmetrized(e).schema("src")
+    val box: Option[Long => Any] = src.dataType match {
+      case LongType    => Some(v => v)
+      case IntegerType => Some(_.toInt)
+      case _           => None
+    }
+    for {
+      boxed <- box
+      cap <- driverCap(e)
+      edgeRows = e.select(col("i").cast(LongType), col("j").cast(LongType))
+        .coalesce(1).limit(math.min(cap + 1, Int.MaxValue.toLong).toInt).collect()
+      if edgeRows.length <= cap && !edgeRows.exists(r => r.isNullAt(0) || r.isNullAt(1))
+    } yield {
+      val is = edgeRows.map(_.getLong(0))
+      val js = edgeRows.map(_.getLong(1))
+      val ids = (is ++ js).distinct.sorted
+      val parent = Array.range(0, ids.length)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var y = x
+        while (parent(y) != r) { val n = parent(y); parent(y) = r; y = n }
+        r
+      }
+      is.indices.foreach { k =>
+        val a = find(java.util.Arrays.binarySearch(ids, is(k)))
+        val b = find(java.util.Arrays.binarySearch(ids, js(k)))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      }
+      val schema = StructType(Seq(
+        StructField("id", src.dataType, src.nullable),
+        StructField("label", src.dataType, src.nullable)))
+      e.sparkSession.createDataFrame(
+        ids.indices.map(k => Row(boxed(ids(k)), boxed(ids(find(k))))).asJava, schema)
+    }
+  }
+
+  /** The propagation loop over the checkpointed directed edges `e`.
+    * Each round materializes via checkpoint and folds the convergence
+    * check into the same action. Min-propagation is monotone, so a
+    * round that changes nothing proves the fixpoint — the loop exits on
+    * the first zero-change round, and near-dup graphs have diameter
+    * 2-3, so that is 3-4 actions total. After [[PlainRounds]] rounds a
+    * path-doubling shortcut (label := label's label) joins each round,
+    * so adversarial high-diameter chains converge in O(log n) rounds
+    * instead of O(diameter) — `maxIter` = 30 then covers diameters past
+    * 2²⁰ rather than aborting at 31. (See the inline note below on why
+    * multi-round batching was tried and reverted.) */
+  private def closeByPropagation(e: DataFrame, maxIter: Int,
+                                 ckpt: DataFrame => DataFrame): DataFrame = {
     // No `.distinct()` on the symmetrized edges: the min-aggregation is
     // duplicate-tolerant, and near-dup pair generators emit distinct
     // (i<j) pairs already — the dedup shuffle bought nothing.
@@ -116,13 +231,7 @@ object Components {
     // whether or not it is materialized, so batching only added overshoot
     // rounds past convergence and Catalyst analysis of deeper plans.
     // Measured at sf0.1: per-round 1.45s, 4-round batches 2.0-3.1s.)
-    // Checkpoint the DIRECTED pairs first, then the symmetrized view
-    // FROM THOSE BLOCKS (r14): ckpt-ing the union of the raw pipeline
-    // evaluated the caller's pair pipeline once per union branch —
-    // ReuseExchange dedups the exchanges below, but everything between
-    // the last exchange and the union top (the Jaccard-verification
-    // join with its array_intersect over shingle arrays) ran TWICE per
-    // CC call. Two-step: the pipeline evaluates exactly once (e), the
+    // The symmetrized view is checkpointed FROM e's blocks (r14): the
     // sym ckpt is a cheap block-to-block union, and every loop round
     // reads ONE block set; e releases the moment sym materializes.
     // The sym ckpt is REPARTITIONED BY src (§2.4 "share one exchange"):
@@ -131,10 +240,7 @@ object Components {
     // the blocks exchange-free instead of re-shuffling the edge set
     // once per round. (The labels side is already id-partitioned by its
     // own round checkpoint for the same reason.)
-    val e = ckpt(edges.select(col("i"), col("j")))
-    val sym = ckpt(e.select(col("i").as("src"), col("j").as("dst"))
-      .union(e.select(col("j").as("src"), col("i").as("dst")))
-      .repartition(col("src")))
+    val sym = ckpt(symmetrized(e).repartition(col("src")))
     releaseBlocks(e)
     // Seed labels at min(self, direct neighbors): the node-collection
     // aggregation has to shuffle the edge list by src anyway, so folding

@@ -210,7 +210,9 @@ object Retrieval {
         .foreach(n => buf.write(tmp, 0, n))
       buf.toByteArray
     } finally in.close()
-    new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty).toSeq
+    val segs = new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty).toSeq
+    require(segs.nonEmpty, s"BM25 index at $path has an empty segments.txt manifest")
+    segs
   }
 
   /** Re-open a [[writeBm25Index]] artifact: (postings, df, stats).
@@ -218,12 +220,15 @@ object Retrieval {
     * per refresh since the base build); a term refreshed across
     * generations therefore carries one additive df row per segment —
     * [[bm25SearchFrom]] merges them after its query-term prune. */
-  def readBm25Index(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) = {
-    val segs = readSegmentManifest(s, path)
+  def readBm25Index(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) =
+    readBm25Segments(s, path, readSegmentManifest(s, path))
+
+  /** [[readBm25Index]] over an already-read segment manifest `segs`. */
+  private def readBm25Segments(s: SparkSession, path: String,
+                               segs: Seq[String]): (DataFrame, DataFrame, DataFrame) =
     (segs.map(p => s.read.parquet(s"$p/postings")).reduce(_.unionByName(_)),
       segs.map(p => s.read.parquet(s"$p/df")).reduce(_.unionByName(_)),
       s.read.parquet(s"$path/stats"))
-  }
 
   /** Refresh a stored [[writeBm25Index]] artifact with ADDED docs into a
     * NEW generation at `outPath` — the [[writeAnnIndex]]-family refresh
@@ -238,12 +243,16 @@ object Retrieval {
     * unioning it would double-count its term frequencies). The
     * collision guard is one semi-join on the postings' distinct doc_ids;
     * the old artifact's rows are COPIED, never re-derived — work beyond
-    * the copy is ∝ |delta|. */
+    * the copy is ∝ |delta|. `outPath` must be neither `path` nor any
+    * segment root its manifest references: writing there would overwrite
+    * a segment that every generation listing it still reads. */
   def refreshStoredBm25Index(s: SparkSession, path: String, deltaDocs: DataFrame,
                              outPath: String): Unit = {
-    require(outPath != path,
-      "refreshStoredBm25Index writes a new generation: outPath must differ from path")
-    val (f0, _, stats0) = readBm25Index(s, path)
+    val segs = readSegmentManifest(s, path)
+    require(outPath != path && !segs.contains(outPath),
+      "refreshStoredBm25Index writes a new generation: outPath must differ from path " +
+        s"and from every segment of its chain (${segs.mkString(", ")})")
+    val (f0, _, stats0) = readBm25Segments(s, path, segs)
     // checkpoint the delta postings ONCE (r14): fD otherwise re-derives
     // the delta tokenize + aggregation for each of the collision check,
     // the postings write, and the df write (dftD derives from fD)
@@ -278,7 +287,7 @@ object Retrieval {
         .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
         .withColumn("avgdl_milli", expr("(sum_dl * 1000) DIV n"))
         .coalesce(1).write.mode("overwrite").parquet(s"$outPath/stats")
-      writeSegmentManifest(s, outPath, readSegmentManifest(s, path) :+ outPath)
+      writeSegmentManifest(s, outPath, segs :+ outPath)
     } finally graft.ops.Components.releaseBlocks(fD)
   }
 

@@ -418,9 +418,12 @@ object Similarity {
     *
     * BLOCK-LIFETIME CONTRACT (ADVICE r14, shared by every API that
     * returns a LAZY frame over a localCheckpoint — ivfPqSearch,
-    * refreshComponents, refreshDecontamSpans): the returned frame reads
-    * the bucketed-norm frame's checkpoint blocks, so they cannot be
-    * released here. They stay pinned until the caller drops every
+    * refreshComponents, refreshDecontamSpans, connectedComponents on
+    * its loop path (its driver finish returns a local relation and pins
+    * nothing), Analytics.basketLiftOf, TextAnalysis.shingleOverlapOf):
+    * the returned frame reads checkpoint blocks — here the
+    * bucketed-norm frame's — so they cannot be released by the API.
+    * They stay pinned until the caller drops every
     * derived frame and unpersists (the Bench sweeps
     * `getPersistentRDDs.values.foreach(_.unpersist())` between
     * bursts). A long-lived session calling these APIs in a loop must

@@ -1,13 +1,49 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Components
 
 /** Connected-components invariants: exact labels on hand graphs,
-  * convergence past one propagation round (long chains), and agreement
-  * with an independent union-find over the real near-dup pair graph. */
+  * convergence past one propagation round (long chains), agreement
+  * with an independent union-find over the real near-dup pair graph,
+  * and row-for-row agreement of the driver finish with the loop.
+  *
+  * Every small test graph fits under the default broadcast threshold
+  * and so closes on the driver; the loop-shaped tests run inside
+  * [[loopOnly]], which turns the driver finish off. */
 class ComponentsSpec extends AnyFunSuite {
   import TestSpark._
+
+  private val broadcastKeys = Seq("spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold")
+
+  /** Runs `body` with the session confs `kvs` set; the previous
+    * settings come back afterwards. */
+  private def withConf[T](kvs: Seq[(String, String)])(body: => T): T = {
+    val conf = spark.conf
+    val before = kvs.map { case (k, _) => k -> conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => conf.set(k, v) }
+      body
+    } finally before.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None)    => conf.unset(k)
+    }
+  }
+
+  /** Runs `body` with broadcasting off (both thresholds -1), which also
+    * turns off connectedComponents' driver finish, so the propagation
+    * loop runs. */
+  private def loopOnly[T](body: => T): T = withConf(broadcastKeys.map(_ -> "-1"))(body)
+
+  private def onDriver(labels: DataFrame): Boolean =
+    labels.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  private def rowCounts(df: DataFrame): Map[Row, Int] =
+    df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
 
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
@@ -16,7 +52,7 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   test("min-label components on a hand graph") {
-    val got = cc(Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 10L), (10L, 11L)))
+    val got = loopOnly(cc(Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 10L), (10L, 11L))))
     val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       5L -> 5L, 6L -> 5L, 8L -> 8L, 9L -> 8L, 10L -> 8L, 11L -> 8L)
     assert(got == expected)
@@ -24,7 +60,7 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("a diameter-12 chain converges (multiple propagation rounds)") {
     val chain = (0L until 12L).map(k => (k, k + 1))
-    val got = cc(chain)
+    val got = loopOnly(cc(chain))
     assert(got == (0L to 12L).map(_ -> 0L).toMap)
   }
 
@@ -34,52 +70,56 @@ class ComponentsSpec extends AnyFunSuite {
     // diameter-100 path needs ~100 rounds and would abort at maxIter=15;
     // the post-PlainRounds shortcut must get there in ~4 + log2(100)
     val path = (0L until 100L).map(k => (k, k + 1)).toDF("i", "j")
-    val got = Components.connectedComponents(path, maxIter = 15)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = loopOnly(Components.connectedComponents(path, maxIter = 15)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(got == (0L to 100L).map(_ -> 0L).toMap)
   }
 
   test("reliable=true uses checkpointDir-backed checkpoints (and requires the dir)") {
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("i", "j")
-    // before a checkpoint dir exists the flag must fail fast, not
-    // surface as a job-time SparkException from inside the loop
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      intercept[IllegalArgumentException] {
-        Components.connectedComponents(edges, reliable = true)
+    loopOnly {
+      import spark.implicits._
+      val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("i", "j")
+      // before a checkpoint dir exists the flag must fail fast, not
+      // surface as a job-time SparkException from inside the loop
+      if (spark.sparkContext.getCheckpointDir.isEmpty) {
+        intercept[IllegalArgumentException] {
+          Components.connectedComponents(edges, reliable = true)
+        }
       }
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+      spark.sparkContext.setCheckpointDir(dir)
+      val got = Components.connectedComponents(edges, reliable = true)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+      // reliable checkpoints actually landed on disk (lineage survives
+      // executor loss precisely because the blocks live here)
+      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+      assert(wrote > 0, s"expected RDD checkpoint files under $dir")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val got = Components.connectedComponents(edges, reliable = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
-    // reliable checkpoints actually landed on disk (lineage survives
-    // executor loss precisely because the blocks live here)
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-    assert(wrote > 0, s"expected RDD checkpoint files under $dir")
   }
 
   test("ReliableConfKey session conf upgrades every checkpoint site (CC + triangles)") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-conf").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set(Components.ReliableConfKey, "true")
-    try {
-      val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("i", "j")
-      // no per-call flag anywhere — the conf alone must flip both the
-      // CC loop and triangles' oriented-frame checkpoint to reliable
-      val got = Components.connectedComponents(edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
-      val tri = Components.triangles(edges)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(tri == Set((1L, 2L, 3L)))
-      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(p => java.nio.file.Files.isRegularFile(p)).count()
-      assert(wrote > 0, s"expected reliable checkpoint files under $dir")
-    } finally spark.conf.unset(Components.ReliableConfKey)
+    loopOnly {
+      import spark.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-conf").toString
+      spark.sparkContext.setCheckpointDir(dir)
+      spark.conf.set(Components.ReliableConfKey, "true")
+      try {
+        val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("i", "j")
+        // no per-call flag anywhere — the conf alone must flip both the
+        // CC loop and triangles' oriented-frame checkpoint to reliable
+        val got = Components.connectedComponents(edges)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+        val tri = Components.triangles(edges)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(tri == Set((1L, 2L, 3L)))
+        val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+          .filter(p => java.nio.file.Files.isRegularFile(p)).count()
+        assert(wrote > 0, s"expected reliable checkpoint files under $dir")
+      } finally spark.conf.unset(Components.ReliableConfKey)
+    }
   }
 
   test("q72 components agree with an independent union-find over q26's pairs") {
@@ -99,6 +139,87 @@ class ComponentsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
     assert(got.nonEmpty, "fixture corpus must contain near-dup pairs")
+  }
+
+  test("driver finish == loop: same rows, column names, types and nullability") {
+    import spark.implicits._
+    val q26 = SparkEntry.queries("q26_neardup_minhash")(spark, Sf0001).select($"i", $"j")
+    // (input, closes on the driver under the default conf)
+    val cases: Seq[(String, DataFrame, Boolean)] = Seq(
+      ("empty edge set", spark.emptyDataset[(Long, Long)].toDF("i", "j"), true),
+      ("self-loops", Seq((1L, 1L), (2L, 2L), (2L, 3L)).toDF("i", "j"), true),
+      ("duplicate and reversed edges",
+        Seq((1L, 2L), (1L, 2L), (2L, 1L), (3L, 2L), (5L, 4L), (4L, 5L)).toDF("i", "j"), true),
+      ("int-typed i/j", Seq((1, 2), (2, 3), (7, 8), (9, 7)).toDF("i", "j"), true),
+      ("nullable columns, no nulls",
+        Seq((Option(1L), Option(2L)), (Option(3L), Option(2L))).toDF("i", "j"), true),
+      // a null endpoint runs the loop: its null-id row has no closed form
+      ("an edge with a null endpoint",
+        Seq((Option(1L), Option(2L)), (Option(2L), None), (None, Option(5L))).toDF("i", "j"), false),
+      ("string ids run the loop", Seq(("a", "b"), ("c", "b")).toDF("i", "j"), false),
+      ("q26's real pairs", q26, true))
+    for ((name, edges, driverPath) <- cases) {
+      val driver = Components.connectedComponents(edges)
+      val (loopSchema, loopRows) = loopOnly {
+        val loop = Components.connectedComponents(edges)
+        assert(!onDriver(loop), name)
+        (loop.schema, rowCounts(loop))
+      }
+      assert(onDriver(driver) == driverPath, name)
+      assert(driver.schema == loopSchema, name)
+      assert(rowCounts(driver) == loopRows, name)
+    }
+    assert(q26.count() > 0, "fixture corpus must contain near-dup pairs")
+  }
+
+  test("the gate is the observed edge count: cap edges close on the driver, cap + 1 loop") {
+    import spark.implicits._
+    // a (long, long) edge row is 24 bytes as Spark sizes a local relation
+    // (8 bytes of row overhead + 8 per column): 48 bytes caps at 2 edges
+    withConf(Seq("spark.sql.autoBroadcastJoinThreshold" -> "48")) {
+      val two = Seq((1L, 2L), (3L, 2L)).toDF("i", "j")
+      assert(Components.driverCap(two) == Some(2L))
+      assert(onDriver(Components.connectedComponents(two)))
+      val three = Seq((1L, 2L), (3L, 2L), (7L, 8L)).toDF("i", "j")
+      val looped = Components.connectedComponents(three)
+      assert(!onDriver(looped))
+      assert(looped.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+    }
+  }
+
+  test("driver finish: a 300-edge graph runs at most 2 jobs beyond the edge checkpoint") {
+    import spark.implicits._
+    // 30 chains of 10 edges each; chain c holds nodes 11c .. 11c + 10
+    val edges = (0L until 300L).map(k => (k + k / 10, k + k / 10 + 1)).toDF("i", "j")
+    val sc = spark.sparkContext
+    val group = "graft-components-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    def jobsOf[T](body: => T): (Int, T) = {
+      org.apache.spark.TestListenerBus.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      org.apache.spark.TestListenerBus.drain(sc)
+      (jobs.get, out)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (ckptJobs, e) = jobsOf(edges.select($"i", $"j").localCheckpoint())
+      Components.releaseBlocks(e)
+      val (driverJobs, got) = jobsOf(Components.connectedComponents(edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      assert(driverJobs - ckptJobs <= 2, s"driver finish ran $driverJobs jobs, checkpoint $ckptJobs")
+      assert(got == (0L until 330L).map(n => n -> (n - n % 11)).toMap)
+      // the listener sees the loop's rounds: the same graph costs more there
+      val (loopJobs, _) = jobsOf(loopOnly(Components.connectedComponents(edges).collect()))
+      assert(loopJobs > driverJobs + 2, s"loop ran $loopJobs jobs, driver finish $driverJobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Independent in-test PageRank: plain Scala maps, same integer
@@ -164,9 +285,6 @@ class ComponentsSpec extends AnyFunSuite {
     // broadcast() hint — AQE chooses. This pins the other leg: with
     // broadcasting disabled entirely (shuffled joins only), results
     // are byte-identical to the default-config run.
-    val conf = spark.conf
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
     def run(): (Set[Long], Set[Long], Map[Long, Long]) = {
       val surv = SparkEntry.queries("q73_dedup_survivors")(spark, Sf0001)
         .collect().map(_.getLong(0)).toSet
@@ -176,15 +294,8 @@ class ComponentsSpec extends AnyFunSuite {
         .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
       (surv, best, folds)
     }
-    val before = keys.map(k => k -> conf.getOption(k))
     val withBroadcast = run()
-    try {
-      keys.foreach(k => conf.set(k, "-1"))
-      assert(run() == withBroadcast)
-    } finally before.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
+    assert(loopOnly(run()) == withBroadcast)
   }
 
   test("clusteringCoeff: triangle members close fully, the hub partially, pendants zero") {

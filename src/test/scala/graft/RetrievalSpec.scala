@@ -161,6 +161,32 @@ class RetrievalSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("ADD-only"))
   }
 
+  test("an empty segment manifest fails with a clear message, not a bare reduce error") {
+    val d = "target/fixtures/bm25_empty_manifest"
+    Graft.writeBm25Index(df(Seq(1L -> "alpha beta", 2L -> "beta gamma")), d)
+    // truncate the manifest through the Hadoop FS API, which keeps its
+    // checksum sidecar consistent
+    val manifest = new org.apache.hadoop.fs.Path(s"$d/segments.txt")
+    manifest.getFileSystem(spark.sparkContext.hadoopConfiguration).create(manifest, true).close()
+    val ex = intercept[IllegalArgumentException](Graft.readBm25Index(spark, d))
+    assert(ex.getMessage.contains("empty segments.txt"))
+  }
+
+  test("refresh refuses an outPath anywhere in the base generation's segment chain") {
+    val d1 = "target/fixtures/bm25_chain_gen1"
+    val d2 = "target/fixtures/bm25_chain_gen2"
+    Graft.writeBm25Index(df(Seq(1L -> "alpha beta", 2L -> "beta gamma")), d1)
+    Graft.refreshStoredBm25Index(spark, d1, df(Seq(3L -> "gamma delta")), d2)
+    val before = Graft.readBm25Index(spark, d2)._1.count()
+    // gen 2 lists gen 1's root as a segment: refreshing gen 2 into it
+    // would overwrite postings gen 2 still reads
+    val ex = intercept[IllegalArgumentException] {
+      Graft.refreshStoredBm25Index(spark, d2, df(Seq(4L -> "delta eps")), d1)
+    }
+    assert(ex.getMessage.contains("every segment of its chain"))
+    assert(Graft.readBm25Index(spark, d2)._1.count() == before)
+  }
+
   test("q236 gate query returns full ranked top-10 blocks at sf0.01") {
     val rows = SparkEntry.queries("q236_batch_retrieval")(spark, Sf001).collect()
     val byQ = rows.groupBy(_.getLong(0))
