@@ -113,7 +113,10 @@ object Graft {
     ops.Quantize.writeAnnIndex(emb, path)
 
   /** Re-open a [[writeAnnIndex]] artifact: (centroids, codebook row,
-    * codes) — the pieces [[annSearchStored]] serves from. */
+    * codes) — the pieces [[annSearchStored]] serves from. The
+    * generation's manifest locates and types every piece, so opening
+    * starts no Spark job; a generation without one is read by schema
+    * inference. */
   def readAnnIndex(s: org.apache.spark.sql.SparkSession, path: String): (DataFrame, DataFrame, DataFrame) =
     ops.Quantize.readAnnIndex(s, path)
 
@@ -126,10 +129,13 @@ object Graft {
 
   /** Refresh a stored [[writeAnnIndex]] artifact through a
     * (vec_id, status, v) change feed into a NEW generation at
-    * `outPath`: quantizers copy verbatim (frozen — a retrain is a
-    * release, not a refresh), only the code table moves, work beyond
-    * the copy ∝ |delta|. Refreshed == gen-2 codes re-derived from
-    * scratch under the same quantizers (AnnIndexSpec). */
+    * `outPath`: only the code table moves, work beyond the copy ∝
+    * |delta|. The quantizers are frozen (a retrain is a release, not a
+    * refresh), so the new manifest references the base's `centroids/`
+    * and `codebook/` instead of copying them: the base generation must
+    * outlive it, and `outPath` may be neither `path` nor any root the
+    * base references. Refreshed == gen-2 codes re-derived from scratch
+    * under the same quantizers (AnnIndexSpec). */
   def refreshStoredAnnIndex(s: org.apache.spark.sql.SparkSession, path: String,
                             delta: DataFrame, outPath: String): Unit =
     ops.Quantize.refreshStoredAnnIndex(s, path, delta, outPath)
@@ -417,7 +423,8 @@ object Graft {
     ops.Decontam.writeBloomIndex(evalSet, path, bloomBits, bloomHashes)
 
   /** Re-open a [[writeBloomIndex]] artifact: (bitmap, shingles) — the
-    * pieces [[bloomDecontaminateStored]] serves from. */
+    * pieces [[bloomDecontaminateStored]] serves from, opened from the
+    * generation's manifest without a Spark job. */
   def readBloomIndex(s: org.apache.spark.sql.SparkSession, path: String): (DataFrame, DataFrame) =
     ops.Decontam.readBloomIndex(s, path)
 
@@ -431,8 +438,9 @@ object Graft {
     ops.Decontam.bloomDecontaminateStored(corpus, index, minFrac, bloomBits, bloomHashes)
 
   /** Refresh a stored [[writeBloomIndex]] artifact with ADDED eval docs
-    * into a NEW generation at `outPath` — work ∝ |delta|; the bitmap
-    * refresh is byte-identical to a rebuild (bit_or idempotence). */
+    * into a NEW, self-contained generation at `outPath` (never `path`)
+    * — work ∝ |delta|, the delta shingled once; the bitmap refresh is
+    * byte-identical to a rebuild (bit_or idempotence). */
   def refreshStoredBloomIndex(s: org.apache.spark.sql.SparkSession, path: String,
                               deltaEval: DataFrame, outPath: String,
                               bloomBits: Long = ops.Decontam.DefaultBloomBits,
@@ -706,14 +714,6 @@ object Graft {
   def triangles(edges: DataFrame): DataFrame =
     ops.Components.triangles(edges)
 
-  /** Winnowing fingerprints (MOSS; Schleimer et al. 2003) over
-    * (doc_id, text): (doc_id, nk, wmin) — per doc, the distinct
-    * window-min 5-word-k-gram hashes at window 4, `nk` = k-gram count.
-    * Any shared ≥8-word span shares a fingerprint; only ~2/(w+1) of
-    * k-grams survive, shrinking the cross-doc index before its shuffle. */
-  def winnow(docs: DataFrame): DataFrame =
-    ops.Dedup.winnowFingerprints(docs)
-
   /** Longest duplicated word span per doc pair at 12-gram grain:
     * (i, j, max_run, span_words) — the suffix-array passage-dedup
     * report (Lee et al. 2022) via diagonal runs of shared windows; hot
@@ -756,15 +756,6 @@ object Graft {
     * 10 tokens are excluded. */
   def repetitionSignals(docs: DataFrame): DataFrame =
     ops.TextAnalysis.repetitionSignalsOf(docs)
-
-  /** The full Gopher CHAR-weighted repetition battery (q220): per doc,
-    * the most-frequent-{2,3,4}-gram character fractions (capped at 1)
-    * and the duplicated-{5..10}-gram character fractions with
-    * union-of-spans semantics (each covered character counted once).
-    * One row-local projection — zero shuffle, runs at scan speed; docs
-    * under 10 tokens are excluded. */
-  def gopherRepetition(docs: DataFrame): DataFrame =
-    ops.TextAnalysis.gopherRepetitionOf(docs)
 
   /** Quality-aware [[dedup]]: one survivor per near-dup component — the
     * max-(quality, −doc_id) member rather than the min id, so clusters
@@ -832,18 +823,6 @@ object Graft {
     * rank + broadcast prefix offsets), never a one-partition window. */
   def curriculum(scored: DataFrame, phases: Int = 4): DataFrame =
     ops.Curate.curriculumOf(scored, phases)
-
-  /** Span-grain curation capstone (q227), ONE lazy plan: CDC dedup
-    * ([[cdcDedup]]) → contamination span splitting ([[decontamSpans]]
-    * over the DEDUPED text) → quality rule battery at piece grain →
-    * per-source funnel manifest (source, n_docs_in, words_in,
-    * words_dedup, n_pieces, words_spans, n_pieces_kept, words_final).
-    * `corpus` carries (doc_id, text, source); `evalSet` (doc_id, text). */
-  def spanCuration(corpus: DataFrame, evalSet: DataFrame,
-                   divisor: Int = 8, pad: Int = 2, minPieceWords: Int = 3,
-                   minQualityWords: Int = 10): DataFrame =
-    ops.Curate.spanCurationOf(corpus, evalSet, divisor, pad,
-      minPieceWords, minQualityWords)
 
   /** Intra-doc code-switch detection: per doc, the language-marker hit
     * count, dominant language and its share of all marker evidence, and
@@ -995,7 +974,7 @@ object Graft {
 
   /** Poisson-bootstrap confidence interval for the mean of `money` (a
     * 2-decimal value column) keyed by unique `id`: one row (n, mean,
-    * ci_lo, ci_hi), the brackets being the 2nd-smallest/2nd-largest of
+    * ci_lo, ci_hi) — none for an empty `df` — the brackets being the 2nd-smallest/2nd-largest of
     * `replicates` md5-deterministic Poisson(1)-weighted replicate means
     * (≈ the 94% interval at the default 32). Row-local weights — no
     * per-replicate sampling pass; shuffle is `replicates` rows per
@@ -1148,7 +1127,9 @@ object Graft {
     ops.Retrieval.writeBm25Index(docs, path)
 
   /** Re-open a [[writeBm25Index]] artifact: (postings, df, stats) —
-    * the pieces [[bm25SearchStored]] serves from. */
+    * the pieces [[bm25SearchStored]] serves from, opened from the
+    * generation's manifest without a Spark job; postings and df span
+    * every segment the manifest lists. */
   def readBm25Index(s: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, DataFrame, DataFrame) =
     ops.Retrieval.readBm25Index(s, path)
@@ -1163,9 +1144,12 @@ object Graft {
   /** Refresh a stored [[writeBm25Index]] artifact with ADDED docs into
     * a NEW generation at `outPath`: only the delta is tokenized —
     * postings append, per-term dfs merge additively, stats merge
-    * exactly through the stored (n, sum_dl). Refreshed == rebuilt
-    * piece for piece; a delta doc_id already indexed fails loudly
-    * (ADD-only; retire-then-add updates). */
+    * exactly through the stored (n, sum_dl). The new generation writes
+    * only the delta's segment and references its base's segments: the
+    * base must outlive it, and `outPath` may be neither `path` nor any
+    * segment root of its chain. Refreshed == rebuilt piece for piece; a
+    * delta doc_id already indexed fails loudly (ADD-only;
+    * retire-then-add updates). */
   def refreshStoredBm25Index(s: org.apache.spark.sql.SparkSession, path: String,
                              deltaDocs: DataFrame, outPath: String): Unit =
     ops.Retrieval.refreshStoredBm25Index(s, path, deltaDocs, outPath)
@@ -1255,7 +1239,8 @@ object Graft {
     streaming.Streaming.writeBandIndex(standing, path)
 
   /** Re-open a [[writeBandIndex]] artifact: (bands, docs) — the pieces
-    * [[nearDupServeStored]] serves from. */
+    * [[nearDupServeStored]] serves from, opened from the generation's
+    * manifest without a Spark job. */
   def readBandIndex(s: org.apache.spark.sql.SparkSession, path: String): (DataFrame, DataFrame) =
     streaming.Streaming.readBandIndex(s, path)
 
@@ -1267,8 +1252,9 @@ object Graft {
     streaming.Streaming.nearDupServeStored(incoming, index, minJaccard)
 
   /** Refresh a stored [[writeBandIndex]] artifact from a
-    * [[snapshotDelta]] change feed into a NEW generation at `outPath`
-    * — work ∝ |delta|, refreshed == rebuilt piece-for-piece. */
+    * [[snapshotDelta]] change feed into a NEW, self-contained
+    * generation at `outPath` (never `path`) — work ∝ |delta|,
+    * refreshed == rebuilt piece-for-piece. */
   def refreshStoredBandIndex(s: org.apache.spark.sql.SparkSession, path: String,
                              delta: DataFrame, outPath: String): Unit =
     streaming.Streaming.refreshStoredBandIndex(s, path, delta, outPath)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
@@ -35,21 +35,6 @@ object Chat {
   /** Event types mapped to the "user" role in the registry queries'
     * events-derived conversation frame (the rest are "assistant"). */
   private val UserTypes = Seq("click", "view", "signup")
-
-  /** Turn frame used by the registry queries: (conv_id, rn, role,
-    * content, prev_role) from the events table — rn is the turn index
-    * (ROW_NUMBER over (ts, event_id): a total order, event_id unique). */
-  private def eventTurns(spark: SparkSession, dir: String): DataFrame = {
-    val byConv = Window.partitionBy(col("conv_id")).orderBy(col("ts"), col("event_id"))
-    Tables.events(spark, dir)
-      .select(col("user_id").as("conv_id"),
-        when(col("event_type").isin(UserTypes.map(lit): _*), lit("user"))
-          .otherwise(lit("assistant")).as("role"),
-        col("event_type").as("content"), col("ts"), col("event_id"))
-      .select(col("conv_id"), col("role"), col("content"),
-        row_number().over(byConv).as("rn"),
-        lag(col("role"), 1).over(byConv).as("prev_role"))
-  }
 
   /** Shared oracle CTE: the same events → turns derivation in DuckDB. */
   private val oracleTurns: String =

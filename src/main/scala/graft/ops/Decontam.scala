@@ -347,17 +347,22 @@ object Decontam {
   private[graft] def bloomEvalIndex(evalSet: DataFrame,
                                     mBits: Long = DefaultBloomBits,
                                     kHashes: Int = DefaultBloomHashes): DataFrame = {
+    requireBloomParams(mBits, kHashes)
+    // the build parameters persist WITH the index (m_bits, k_hashes
+    // columns — 16 bytes on ≤ mBits/64 rows): refresh and probe verify
+    // them instead of trusting the caller to remember the format
+    stamped(bloomBitmap(Dedup.hashedShinglesOf(evalSet), mBits, kHashes), mBits, kHashes)
+  }
+
+  private def requireBloomParams(mBits: Long, kHashes: Int): Unit = {
     require(mBits >= 1024 && mBits <= (1L << 31),
       s"bloomBits must be in [1024, 2^31], got $mBits")
     require(kHashes >= 1 && kHashes <= 8,
       s"bloomHashes must be in [1, 8], got $kHashes")
-    // the build parameters persist WITH the index (m_bits, k_hashes
-    // columns — 16 bytes on ≤ mBits/64 rows): refresh and probe verify
-    // them instead of trusting the caller to remember the format
-    bloomBitmap(Dedup.hashedShinglesOf(evalSet), mBits, kHashes)
-      .select(col("word"), col("bits"),
-        lit(mBits).as("m_bits"), lit(kHashes).as("k_hashes"))
   }
+
+  private def stamped(bits: DataFrame, mBits: Long, kHashes: Int): DataFrame =
+    bits.select(col("word"), col("bits"), lit(mBits).as("m_bits"), lit(kHashes).as("k_hashes"))
 
   /** Incremental [[bloomEvalIndex]] maintenance: band only the ADDED
     * eval docs (work ∝ |delta|), OR the delta words into the standing
@@ -375,17 +380,21 @@ object Decontam {
     * a bitmap whose no-false-negative invariant downstream relies on. */
   private[graft] def refreshBloomIndex(index: DataFrame, deltaEval: DataFrame,
                                        mBits: Long = DefaultBloomBits,
-                                       kHashes: Int = DefaultBloomHashes): DataFrame = {
+                                       kHashes: Int = DefaultBloomHashes): DataFrame =
+    orDeltaBits(index, bloomBitmap(Dedup.hashedShinglesOf(deltaEval), mBits, kHashes),
+      mBits, kHashes)
+
+  /** OR a delta's (word, bits) rows into the format-gated standing
+    * bitmap `index`, stamped with the build parameters. */
+  private def orDeltaBits(index: DataFrame, deltaBits: DataFrame,
+                          mBits: Long, kHashes: Int): DataFrame = {
     require(index.columns.contains("m_bits") && index.columns.contains("k_hashes"),
       "stored bloom index lacks its (m_bits, k_hashes) format columns — " +
         "persist indexes via bloomEvalIndex, or rebuild")
-    formatGated(index, mBits, kHashes)
-      .unionByName(bloomEvalIndex(deltaEval, mBits, kHashes)
-        .select(col("word"), col("bits")))
+    requireBloomParams(mBits, kHashes)
+    stamped(formatGated(index, mBits, kHashes).unionByName(deltaBits)
       .groupBy(col("word"))
-      .agg(expr("bit_or(bits)").as("bits"))
-      .select(col("word"), col("bits"),
-        lit(mBits).as("m_bits"), lit(kHashes).as("k_hashes"))
+      .agg(expr("bit_or(bits)").as("bits")), mBits, kHashes)
   }
 
   /** Persist the decontamination index — the [[graft.Graft.writeAnnIndex]]
@@ -398,24 +407,32 @@ object Decontam {
     * TEXT is never stored: the index is the decontamination-sufficient
     * statistic, and shingle hashes don't invert. The eval suite is
     * shingled ONCE — the bitmap derives from the shingle table as
-    * persisted, so the two pieces can never disagree. */
+    * persisted, so the two pieces can never disagree. The generation's
+    * manifest ([[StoredIndex]]) is written last. */
   def writeBloomIndex(evalSet: DataFrame, path: String,
                       mBits: Long = DefaultBloomBits,
                       kHashes: Int = DefaultBloomHashes): Unit = {
-    Dedup.hashedShinglesOf(evalSet)
+    val s = evalSet.sparkSession
+    val shingles = Dedup.hashedShinglesOf(evalSet)
       .select(explode(col("hs")).as("h")).distinct()
       .repartition(col("h"))
-      .write.mode("overwrite").parquet(s"$path/shingles")
-    val stored = evalSet.sparkSession.read.parquet(s"$path/shingles")
-    bloomBitmapFromShingles(stored, mBits, kHashes)
-      .select(col("word"), col("bits"),
-        lit(mBits).as("m_bits"), lit(kHashes).as("k_hashes"))
-      .write.mode("overwrite").parquet(s"$path/bitmap")
+    val shinglesSchema = StoredIndex.schemaOf(shingles)
+    StoredIndex.retire(s, path)
+    shingles.write.mode("overwrite").parquet(s"$path/shingles")
+    val bitmap = stamped(bloomBitmapFromShingles(
+      s.read.schema(shinglesSchema).parquet(s"$path/shingles"), mBits, kHashes), mBits, kHashes)
+    bitmap.write.mode("overwrite").parquet(s"$path/bitmap")
+    StoredIndex.commit(s, path, "bloom",
+      Seq("shingles" -> shinglesSchema, "bitmap" -> StoredIndex.schemaOf(bitmap)))
   }
 
-  /** Re-open a [[writeBloomIndex]] artifact: (bitmap, shingles). */
+  /** Re-open a [[writeBloomIndex]] artifact: (bitmap, shingles), located
+    * and typed by the generation's manifest ([[StoredIndex]]). */
   def readBloomIndex(s: SparkSession, path: String): (DataFrame, DataFrame) =
-    (s.read.parquet(s"$path/bitmap"), s.read.parquet(s"$path/shingles"))
+    bloomPieces(s, StoredIndex.load(s, path, "bloom"))
+
+  private def bloomPieces(s: SparkSession, g: StoredIndex.Generation): (DataFrame, DataFrame) =
+    (g.frame(s, "bitmap"), g.frame(s, "shingles"))
 
   /** Serve the q213 contamination report from a STORED index —
     * bit-identical to the inline [[bloomDecontaminate]] over the same
@@ -433,29 +450,37 @@ object Decontam {
       index._2, index._1, minFrac, mBits, kHashes)
 
   /** Refresh a STORED [[writeBloomIndex]] artifact with ADDED eval docs
-    * — work ∝ |delta|: the delta is shingled alone, novel hashes found
-    * by one anti-join probe of the stored shingle table (bucket-pruned
-    * when shingles/ is a bucketed table at scale), the bitmap ORs the
-    * delta's words in at word grain ([[refreshBloomIndex]] — the
-    * refreshed bitmap is byte-identical to a rebuild because bit_or is
-    * idempotent). Writes a NEW artifact at `outPath` (artifacts are
+    * — work ∝ |delta|: the delta is shingled alone into one distinct
+    * hash frame, whose novel hashes one anti-join probe of the stored
+    * shingle table finds (bucket-pruned when shingles/ is a bucketed
+    * table at scale) and whose words the bitmap ORs in at word grain
+    * (the [[refreshBloomIndex]] merge — the refreshed bitmap is
+    * byte-identical to a rebuild because bit_or is idempotent). Writes
+    * a NEW, self-contained generation at `outPath` (artifacts are
     * immutable generations — reading and overwriting the same parquet
-    * path in one job is unsafe). Removals need a rebuild from the
-    * surviving suite, same contract as [[refreshBloomIndex]]. */
+    * path in one job is unsafe), which may not be `path`. Removals need
+    * a rebuild from the surviving suite, same contract as
+    * [[refreshBloomIndex]]. */
   def refreshStoredBloomIndex(s: SparkSession, path: String,
                               deltaEval: DataFrame, outPath: String,
                               mBits: Long = DefaultBloomBits,
                               kHashes: Int = DefaultBloomHashes): Unit = {
-    require(outPath != path,
-      "refreshStoredBloomIndex writes a new generation: outPath must differ from path")
-    val (bitmap, shingles) = readBloomIndex(s, path)
+    val base = StoredIndex.load(s, path, "bloom")
+    StoredIndex.requireNewGeneration("refreshStoredBloomIndex", s, base, outPath)
+    val (bitmap, shingles) = bloomPieces(s, base)
+    // the delta is shingled once: its distinct hashes feed both the
+    // novel-shingle append and the bitmap's delta words
     val deltaH = Dedup.hashedShinglesOf(deltaEval)
       .select(explode(col("hs")).as("h")).distinct()
-    shingles.unionByName(deltaH.join(shingles, Seq("h"), "left_anti"))
+    val shinglesOut = shingles.unionByName(deltaH.join(shingles, Seq("h"), "left_anti"))
       .repartition(col("h"))
-      .write.mode("overwrite").parquet(s"$outPath/shingles")
-    refreshBloomIndex(bitmap, deltaEval, mBits, kHashes)
-      .write.mode("overwrite").parquet(s"$outPath/bitmap")
+    val bitmapOut = orDeltaBits(bitmap, bloomBitmapFromShingles(deltaH, mBits, kHashes),
+      mBits, kHashes)
+    StoredIndex.retire(s, outPath)
+    shinglesOut.write.mode("overwrite").parquet(s"$outPath/shingles")
+    bitmapOut.write.mode("overwrite").parquet(s"$outPath/bitmap")
+    StoredIndex.commit(s, outPath, "bloom", Seq("shingles" -> StoredIndex.schemaOf(shinglesOut),
+      "bitmap" -> StoredIndex.schemaOf(bitmapOut)))
   }
 
   /** q213: the Bloom-pre-filtered decontamination path, hash-gated

@@ -263,7 +263,7 @@ object Eval {
     * key, cents: int64 fixed-point values); returns one row (n, mean,
     * ci_lo, ci_hi) where the CI brackets are the 2nd-smallest /
     * 2nd-largest of the `b` replicate means (≈ the 94% interval at
-    * b = 32).
+    * b = 32) — or no row when `rows` is empty.
     *
     * Determinism: weights are a pure md5 function of (id, replicate) —
     * integer nano-unit uniform against integer thresholds, so
@@ -301,7 +301,9 @@ object Eval {
     val meanR = (0 until b).map(r =>
       round(col(s"sr_$r").cast("double") / (col(s"nr_$r") * 100.0), 6))
     val sortedMeans = array_sort(array(meanR: _*))
-    one.select(
+    // the grouping-free aggregate yields one row even on empty input;
+    // an empty sample has no mean and no CI, so it yields no row
+    one.filter(col("n") > 0).select(
       col("n"),
       round(col("s_cents").cast("double") / (col("n") * 100.0), 6).as("mean"),
       element_at(sortedMeans, 2).as("ci_lo"),

@@ -596,19 +596,6 @@ object Quantize {
       .filter(col("rk") <= topK)
   }
 
-  /** Persist the frozen IVF-PQ index as its three production tables
-    * under `path`: `centroids/` (list_id, centroid — k rows),
-    * `codebook/` (cb — ONE row, the m × k × subDim nested array) and
-    * `codes/` (vec_id, list_id, codes — 10 bytes of payload per
-    * vector, the ONLY corpus-sized piece), codes partitioned by
-    * list_id so a served query's scan prunes to its probed posting
-    * lists (nProbe of k directories — at 100 TB the other k − nProbe
-    * never leave disk). `repartition(list_id)` aligns task outputs
-    * with directory partitions (writeTokenShards' small-files
-    * discipline). Raw vectors are NOT stored — the index is the
-    * quantizers plus codes, exactly what [[ivfPqSearchFrom]] serves
-    * from; [[refreshIvfPqCodes]] maintains `codes/` under a delta feed
-    * with the quantizers frozen. */
   /** Conf key: sub-splits per posting list for the `codes/` write.
     * `repartition(list_id)` alone funnels each list into ONE task and
     * ONE file — at 100 TB a hot list is tens of GB, both a write
@@ -626,6 +613,20 @@ object Quantize {
     n
   }
 
+  /** Persist the frozen IVF-PQ index as its three production tables
+    * under `path`: `centroids/` (list_id, centroid — k rows),
+    * `codebook/` (cb — ONE row, the m × k × subDim nested array) and
+    * `codes/` (vec_id, list_id, codes — 10 bytes of payload per
+    * vector, the ONLY corpus-sized piece), codes partitioned by
+    * list_id so a served query's scan prunes to its probed posting
+    * lists (nProbe of k directories — at 100 TB the other k − nProbe
+    * never leave disk). `repartition(list_id)` aligns task outputs
+    * with directory partitions (writeTokenShards' small-files
+    * discipline). Raw vectors are NOT stored — the index is the
+    * quantizers plus codes, exactly what [[ivfPqSearchFrom]] serves
+    * from; [[refreshIvfPqCodes]] maintains `codes/` under a delta feed
+    * with the quantizers frozen. The generation's manifest
+    * ([[StoredIndex]]) is written last. */
   private[graft] def writeAnnIndex(emb: DataFrame, path: String): Unit = {
     // checkpoint the build invariants once (r14, the ivfPqSearch
     // discipline): the three write ACTIONS otherwise each re-derive
@@ -641,12 +642,14 @@ object Quantize {
     val cbRow = Components.materialize(
       frozenPqCodebook(res.select(col("vec_id"), col("v"))), rel)
     try {
+      val s = emb.sparkSession
+      val codes = ivfPqEncode(res, cbRow)
+      StoredIndex.retire(s, path)
       cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
       cbRow.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-      ivfPqEncode(res, cbRow)
-        .repartition(col("list_id"),
-          pmod(xxhash64(col("vec_id")), lit(codesSlices(emb).toLong)))
-        .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/codes")
+      writeCodes(codes, codesSlices(emb), path)
+      StoredIndex.commit(s, path, "ann", Seq("centroids" -> StoredIndex.schemaOf(cents),
+        "codebook" -> StoredIndex.schemaOf(cbRow), "codes" -> StoredIndex.schemaOf(codes, "list_id")))
     } finally {
       Components.releaseBlocks(cents)
       Components.releaseBlocks(res)
@@ -654,13 +657,21 @@ object Quantize {
     }
   }
 
+  /** `codes/` under `path`, partitioned by list_id and salted into
+    * `slices` files per list ([[CodesSlicesKey]]). */
+  private def writeCodes(codes: DataFrame, slices: Int, path: String): Unit =
+    codes.repartition(col("list_id"), pmod(xxhash64(col("vec_id")), lit(slices.toLong)))
+      .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/codes")
+
   /** Re-open a [[writeAnnIndex]] artifact: (centroids, codebook row,
-    * codes) — the pieces [[ivfPqSearchFrom]] serves from. */
+    * codes) — the pieces [[ivfPqSearchFrom]] serves from, located and
+    * typed by the generation's manifest ([[StoredIndex]]): no Spark job. */
   private[graft] def readAnnIndex(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) =
-    (s.read.parquet(s"$path/centroids"),
-      s.read.parquet(s"$path/codebook"),
-      s.read.parquet(s"$path/codes")
-        .select(col("vec_id"), col("list_id").cast("int").as("list_id"), col("codes")))
+    annPieces(s, StoredIndex.load(s, path, "ann"))
+
+  private def annPieces(s: SparkSession, g: StoredIndex.Generation): (DataFrame, DataFrame, DataFrame) =
+    (g.frame(s, "centroids"), g.frame(s, "codebook"),
+      g.frame(s, "codes").select(col("vec_id"), col("list_id").cast("int").as("list_id"), col("codes")))
 
   /** Serve IVF-PQ top-k from a STORED index: queries are (query_id,
     * qv: array<double>) rows; the quantizer tables broadcast, the codes
@@ -675,23 +686,27 @@ object Quantize {
     * into a NEW generation at `outPath` — the stored-generation form of
     * [[refreshIvfPqCodes]], completing the write/read/serve/refresh
     * quartet the band/Bloom/BM25 indexes have. The quantizers are
-    * FROZEN across generations (copied verbatim — a quantizer retrain
-    * is a release, not a refresh), so only the code table moves:
-    * removed/changed rows anti-join out, added/changed vectors re-list
-    * and re-encode from their new embedding, unchanged rows copy
-    * through. Work beyond the copy ∝ |delta|; refreshed == a gen-2
+    * FROZEN across generations (a quantizer retrain is a release, not a
+    * refresh), so only the code table moves: removed/changed rows
+    * anti-join out, added/changed vectors re-list and re-encode from
+    * their new embedding, unchanged rows copy through. `centroids/` and
+    * `codebook/` are not rewritten: the new generation's manifest
+    * references the base's quantizer roots, so the base must outlive
+    * it, and `outPath` may be neither `path` nor any root the base
+    * references. Work beyond the copy ∝ |delta|; refreshed == a gen-2
     * code table re-derived from scratch under the same frozen
     * quantizers (AnnIndexSpec proves it piece for piece, serve path
     * included). */
   private[graft] def refreshStoredAnnIndex(s: SparkSession, path: String,
                                            delta: DataFrame, outPath: String): Unit = {
-    val (cents, cbRow, codes) = readAnnIndex(s, path)
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$outPath/centroids")
-    cbRow.coalesce(1).write.mode("overwrite").parquet(s"$outPath/codebook")
-    refreshIvfPqCodes(codes, delta, cents, cbRow)
-      .repartition(col("list_id"),
-        pmod(xxhash64(col("vec_id")), lit(codesSlices(delta).toLong)))
-      .write.partitionBy("list_id").mode("overwrite").parquet(s"$outPath/codes")
+    val base = StoredIndex.load(s, path, "ann")
+    StoredIndex.requireNewGeneration("refreshStoredAnnIndex", s, base, outPath)
+    val (cents, cbRow, codes) = annPieces(s, base)
+    val fresh = refreshIvfPqCodes(codes, delta, cents, cbRow)
+    StoredIndex.retire(s, outPath)
+    writeCodes(fresh, codesSlices(delta), outPath)
+    StoredIndex.commit(s, outPath, "ann", Seq("codes" -> StoredIndex.schemaOf(fresh, "list_id")),
+      Seq(base.described(s, "centroids"), base.described(s, "codebook")))
   }
 
   /** Incremental maintenance of the stored IVF-PQ code table under the

@@ -157,7 +157,8 @@ object Retrieval {
     * as the postings, never a single-task funnel), and the 1-row
     * stats/ (the only piece small enough to earn coalesce(1)). Raw
     * text is NOT stored — the index is the retrieval-sufficient
-    * statistic, the writeAnnIndex discipline. */
+    * statistic, the writeAnnIndex discipline. The generation's manifest
+    * ([[StoredIndex]]) is written last. */
   def writeBm25Index(docs: DataFrame, path: String): Unit = {
     // checkpoint the postings ONCE (r14): the postings and df writes are
     // separate ACTIONS, so the full-vocabulary tokenize + (doc, term)
@@ -171,64 +172,26 @@ object Retrieval {
     val f = graft.ops.Components.materialize(f0, rel)
     try {
       val dft = f.groupBy(col("t")).agg(count(when(col("tf") >= 1, 1)).as("df"))
+      StoredIndex.retire(docs.sparkSession, path)
       f.repartition(col("t")).write.mode("overwrite").parquet(s"$path/postings")
       dft.repartition(col("t")).write.mode("overwrite").parquet(s"$path/df")
       stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-      writeSegmentManifest(docs.sparkSession, path, Seq(path))
+      StoredIndex.commit(docs.sparkSession, path, "bm25", Seq("postings" -> StoredIndex.schemaOf(f),
+        "df" -> StoredIndex.schemaOf(dft), "stats" -> StoredIndex.schemaOf(stats)))
     } finally graft.ops.Components.releaseBlocks(f)
   }
 
-  /** The generation's SEGMENT manifest (r15, guide §6): `segments/`
-    * lists the roots whose `postings/` + `df/` files make up this
-    * generation, oldest first — the Lucene-segment / Iceberg-manifest
-    * discipline that lets [[refreshStoredBm25Index]] write only
-    * delta-proportional data while older generations' files are
-    * REFERENCED, never copied or rewritten. |segments| rows — a
-    * refresh cadence count, never data-sized. */
-  private def writeSegmentManifest(s: SparkSession, path: String,
-                                   segs: Seq[String]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/segments.txt")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write((segs.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** A generation's segment roots, manifest order. Plain newline-
-    * separated text read through the Hadoop FS API — manifest metadata
-    * (|segments| short strings, like a file listing), deliberately NOT
-    * a Spark job: a parquet manifest cost one scheduled job per
-    * read/write, measurable against a delta-sized refresh. */
-  private def readSegmentManifest(s: SparkSession, path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/segments.txt")
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val in = fs.open(p)
-    val bytes = try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](8192)
-      Iterator.continually(in.read(tmp)).takeWhile(_ >= 0)
-        .foreach(n => buf.write(tmp, 0, n))
-      buf.toByteArray
-    } finally in.close()
-    val segs = new String(bytes, "UTF-8").linesIterator.filter(_.nonEmpty).toSeq
-    require(segs.nonEmpty, s"BM25 index at $path has an empty segments.txt manifest")
-    segs
-  }
-
   /** Re-open a [[writeBm25Index]] artifact: (postings, df, stats).
-    * Postings and df are the UNION of the generation's segments (one
-    * per refresh since the base build); a term refreshed across
+    * Postings and df each read the generation's segments (one per
+    * refresh since the base build, listed in its manifest —
+    * [[StoredIndex]]) as ONE multi-path scan; a term refreshed across
     * generations therefore carries one additive df row per segment —
     * [[bm25SearchFrom]] merges them after its query-term prune. */
   def readBm25Index(s: SparkSession, path: String): (DataFrame, DataFrame, DataFrame) =
-    readBm25Segments(s, path, readSegmentManifest(s, path))
+    bm25Pieces(s, StoredIndex.load(s, path, "bm25"))
 
-  /** [[readBm25Index]] over an already-read segment manifest `segs`. */
-  private def readBm25Segments(s: SparkSession, path: String,
-                               segs: Seq[String]): (DataFrame, DataFrame, DataFrame) =
-    (segs.map(p => s.read.parquet(s"$p/postings")).reduce(_.unionByName(_)),
-      segs.map(p => s.read.parquet(s"$p/df")).reduce(_.unionByName(_)),
-      s.read.parquet(s"$path/stats"))
+  private def bm25Pieces(s: SparkSession, g: StoredIndex.Generation): (DataFrame, DataFrame, DataFrame) =
+    (g.frame(s, "postings"), g.frame(s, "df"), g.frame(s, "stats"))
 
   /** Refresh a stored [[writeBm25Index]] artifact with ADDED docs into a
     * NEW generation at `outPath` — the [[writeAnnIndex]]-family refresh
@@ -242,17 +205,16 @@ object Retrieval {
     * updated doc needs retire-then-add, the q218 discipline — silently
     * unioning it would double-count its term frequencies). The
     * collision guard is one semi-join on the postings' distinct doc_ids;
-    * the old artifact's rows are COPIED, never re-derived — work beyond
-    * the copy is ∝ |delta|. `outPath` must be neither `path` nor any
-    * segment root its manifest references: writing there would overwrite
-    * a segment that every generation listing it still reads. */
+    * the base's segments are REFERENCED by the new generation's
+    * manifest, never copied or re-derived — work is ∝ |delta|. `outPath`
+    * must be neither `path` nor any segment root its manifest
+    * references: writing there would overwrite a segment that every
+    * generation listing it still reads. */
   def refreshStoredBm25Index(s: SparkSession, path: String, deltaDocs: DataFrame,
                              outPath: String): Unit = {
-    val segs = readSegmentManifest(s, path)
-    require(outPath != path && !segs.contains(outPath),
-      "refreshStoredBm25Index writes a new generation: outPath must differ from path " +
-        s"and from every segment of its chain (${segs.mkString(", ")})")
-    val (f0, _, stats0) = readBm25Segments(s, path, segs)
+    val base = StoredIndex.load(s, path, "bm25")
+    StoredIndex.requireNewGeneration("refreshStoredBm25Index", s, base, outPath)
+    val (f0, _, stats0) = bm25Pieces(s, base)
     // checkpoint the delta postings ONCE (r14): fD otherwise re-derives
     // the delta tokenize + aggregation for each of the collision check,
     // the postings write, and the df write (dftD derives from fD)
@@ -278,16 +240,22 @@ object Retrieval {
       // refresh). Readers union the segments; [[bm25SearchFrom]] sums
       // the per-segment df rows after its query-term prune. Only the
       // 1-row stats piece merges at write time (exact, via the stored
-      // additive (n, sum_dl)). Base segments are referenced by path:
-      // a generation must outlive every generation refreshed from it.
-      fD.repartition(col("t")).write.mode("overwrite").parquet(s"$outPath/postings")
-      dftD.repartition(col("t")).write.mode("overwrite").parquet(s"$outPath/df")
-      stats0.select(col("n"), col("sum_dl"))
+      // additive (n, sum_dl)). Base segments are referenced by relative
+      // root: a generation must outlive every generation refreshed from it.
+      val stats = stats0.select(col("n"), col("sum_dl"))
         .unionByName(statsD.select(col("n"), col("sum_dl")))
         .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
         .withColumn("avgdl_milli", expr("(sum_dl * 1000) DIV n"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outPath/stats")
-      writeSegmentManifest(s, outPath, segs :+ outPath)
+      StoredIndex.retire(s, outPath)
+      fD.repartition(col("t")).write.mode("overwrite").parquet(s"$outPath/postings")
+      dftD.repartition(col("t")).write.mode("overwrite").parquet(s"$outPath/df")
+      stats.coalesce(1).write.mode("overwrite").parquet(s"$outPath/stats")
+      val out = StoredIndex.qualify(s, outPath)
+      StoredIndex.commit(s, outPath, "bm25", Seq("stats" -> StoredIndex.schemaOf(stats)),
+        Seq("postings", "df").map { n =>
+          val p = base.described(s, n)
+          p.copy(roots = p.roots :+ out)
+        })
     } finally graft.ops.Components.releaseBlocks(fD)
   }
 

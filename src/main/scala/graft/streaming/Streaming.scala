@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types.DecimalType
 import graft.{Q, Tables}
+import graft.ops.StoredIndex
 
 /** Structured Streaming surface (SURVEY §2.11 — an extension beyond the
   * reference, which has no streaming; the driver's `events` table is the
@@ -632,24 +633,34 @@ object Streaming {
     * bucketed tables). Raw TEXT is never stored — shingle hashes and
     * band keys are the dedup-sufficient statistic. The corpus is
     * shingled ONCE: bands/ derives from docs/ as persisted (one
-    * posexplode of stored arrays), so the pieces can never disagree. */
+    * posexplode of stored arrays), so the pieces can never disagree.
+    * The generation's manifest ([[StoredIndex]]) is written last. */
   def writeBandIndex(standing: DataFrame, path: String): Unit = {
     // no repartition(doc_id) before the docs/ write (r15, guide §2.4):
     // hashedShinglesOf ends in a groupBy(doc_id) aggregation, so the
     // frame is ALREADY hash-partitioned by doc_id — the explicit
     // repartition re-shuffled the heaviest payload in the index (the
     // per-doc shingle arrays) a second time for an identical layout.
-    docBands(graft.ops.Dedup.hashedShinglesOf(standing))
-      .write.mode("overwrite").parquet(s"$path/docs")
-    standing.sparkSession.read.parquet(s"$path/docs")
+    val s = standing.sparkSession
+    val docs = docBands(graft.ops.Dedup.hashedShinglesOf(standing))
+    val docsSchema = StoredIndex.schemaOf(docs)
+    StoredIndex.retire(s, path)
+    docs.write.mode("overwrite").parquet(s"$path/docs")
+    val bands = s.read.schema(docsSchema).parquet(s"$path/docs")
       .select(col("doc_id"), posexplode(col("bkeys")).as(Seq("b", "bkey")))
       .repartition(col("b"), col("bkey"))
-      .write.mode("overwrite").parquet(s"$path/bands")
+    bands.write.mode("overwrite").parquet(s"$path/bands")
+    StoredIndex.commit(s, path, "band",
+      Seq("docs" -> docsSchema, "bands" -> StoredIndex.schemaOf(bands)))
   }
 
-  /** Re-open a [[writeBandIndex]] artifact: (bands, docs). */
+  /** Re-open a [[writeBandIndex]] artifact: (bands, docs), located and
+    * typed by the generation's manifest ([[StoredIndex]]). */
   def readBandIndex(s: SparkSession, path: String): (DataFrame, DataFrame) =
-    (s.read.parquet(s"$path/bands"), s.read.parquet(s"$path/docs"))
+    bandPieces(s, StoredIndex.load(s, path, "band"))
+
+  private def bandPieces(s: SparkSession, g: StoredIndex.Generation): (DataFrame, DataFrame) =
+    (g.frame(s, "bands"), g.frame(s, "docs"))
 
   /** [[nearDupStream]] served from a STORED [[writeBandIndex]] artifact
     * — identical alerts to the inline gate (StreamingSpec proves the
@@ -690,26 +701,30 @@ object Streaming {
     * ([[refreshBandIndex]]'s contract: (doc_id, status, text)) — work ∝
     * |delta|: removed/changed ids anti-join out of both pieces, only
     * the added/changed TEXT is shingled, and the fresh rows append.
-    * Writes a NEW artifact generation at `outPath` (never in-place).
+    * Writes a NEW, self-contained artifact generation at `outPath`
+    * (never in-place: `outPath` may not be `path`).
     * StreamingSpec proves refreshed == rebuilt piece-for-piece. */
   def refreshStoredBandIndex(s: SparkSession, path: String,
                              delta: DataFrame, outPath: String): Unit = {
-    require(outPath != path,
-      "refreshStoredBandIndex writes a new generation: outPath must differ from path")
-    val (bands, docs) = readBandIndex(s, path)
+    val base = StoredIndex.load(s, path, "band")
+    StoredIndex.requireNewGeneration("refreshStoredBandIndex", s, base, outPath)
+    val (bands, docs) = bandPieces(s, base)
     val drop = delta.filter(col("status").isin("removed", "changed"))
       .select(col("doc_id"))
     val freshDocs = docBands(graft.ops.Dedup.hashedShinglesOf(
       delta.filter(col("status").isin("added", "changed"))
         .select(col("doc_id"), col("text"))))
-    docs.join(drop, Seq("doc_id"), "left_anti").unionByName(freshDocs)
+    val docsOut = docs.join(drop, Seq("doc_id"), "left_anti").unionByName(freshDocs)
       .repartition(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$outPath/docs")
-    bands.join(drop, Seq("doc_id"), "left_anti")
+    val bandsOut = bands.join(drop, Seq("doc_id"), "left_anti")
       .unionByName(freshDocs
         .select(col("doc_id"), posexplode(col("bkeys")).as(Seq("b", "bkey"))))
       .repartition(col("b"), col("bkey"))
-      .write.mode("overwrite").parquet(s"$outPath/bands")
+    StoredIndex.retire(s, outPath)
+    docsOut.write.mode("overwrite").parquet(s"$outPath/docs")
+    bandsOut.write.mode("overwrite").parquet(s"$outPath/bands")
+    StoredIndex.commit(s, outPath, "band", Seq("docs" -> StoredIndex.schemaOf(docsOut),
+      "bands" -> StoredIndex.schemaOf(bandsOut)))
   }
 
   /** q207: [[refreshBandIndex]] oracle-gated — the ENGINE builds the

@@ -1024,6 +1024,15 @@ class GraftApiSpec extends AnyFunSuite {
       org.apache.spark.sql.functions.col("v"), replicates = 2))
   }
 
+  test("bootstrapCi on an empty frame returns no row") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Double)].toDF("id", "v")
+    val r = Graft.bootstrapCi(empty, org.apache.spark.sql.functions.col("id"),
+      org.apache.spark.sql.functions.col("v"))
+    assert(r.columns.toSeq == Seq("n", "mean", "ci_lo", "ci_hi"))
+    assert(r.collect().isEmpty)
+  }
+
   test("chi2Independence matches the hand-computed 2x2 statistic") {
     import spark.implicits._
     // 30/10 vs 10/30 over balanced margins: E = 20 per cell,

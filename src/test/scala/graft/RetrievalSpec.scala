@@ -164,10 +164,14 @@ class RetrievalSpec extends AnyFunSuite {
   test("an empty segment manifest fails with a clear message, not a bare reduce error") {
     val d = "target/fixtures/bm25_empty_manifest"
     Graft.writeBm25Index(df(Seq(1L -> "alpha beta", 2L -> "beta gamma")), d)
-    // truncate the manifest through the Hadoop FS API, which keeps its
-    // checksum sidecar consistent
+    // a generation written before index manifests existed lists its
+    // segments in segments.txt: drop the manifest and leave an empty
+    // segments.txt, through the Hadoop FS API, which keeps checksum
+    // sidecars consistent
+    val fs = new org.apache.hadoop.fs.Path(d).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$d/${ops.StoredIndex.ManifestFile}"), false)
     val manifest = new org.apache.hadoop.fs.Path(s"$d/segments.txt")
-    manifest.getFileSystem(spark.sparkContext.hadoopConfiguration).create(manifest, true).close()
+    fs.create(manifest, true).close()
     val ex = intercept[IllegalArgumentException](Graft.readBm25Index(spark, d))
     assert(ex.getMessage.contains("empty segments.txt"))
   }
@@ -185,6 +189,40 @@ class RetrievalSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("every segment of its chain"))
     assert(Graft.readBm25Index(spark, d2)._1.count() == before)
+  }
+
+  test("ANN, band and Bloom refreshes refuse an outPath in the base generation's chain") {
+    def refused(body: => Unit): Unit = {
+      val ex = intercept[IllegalArgumentException](body)
+      assert(ex.getMessage.contains("every segment of its chain"), ex.getMessage)
+    }
+    val docs = Tables.documents(spark, Sf0001).select(col("doc_id"), col("text"))
+    // ANN: gen 2 references gen 1's frozen quantizers, so gen 1's root
+    // is in gen 2's chain as well as gen 2's own
+    val emb = Tables.embeddings(spark, Sf0001).filter(col("vec_id") < 300)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("label"))
+    val delta = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id"), lit("changed").as("status"), col("v"))
+    val a1 = "target/fixtures/ann_chain_gen1"
+    val a2 = "target/fixtures/ann_chain_gen2"
+    Graft.writeAnnIndex(emb, a1)
+    Graft.refreshStoredAnnIndex(spark, a1, delta, a2)
+    val codes = Graft.readAnnIndex(spark, a2)._3.count()
+    refused(Graft.refreshStoredAnnIndex(spark, a2, delta, a1))
+    refused(Graft.refreshStoredAnnIndex(spark, a2, delta, a2))
+    refused(Graft.refreshStoredAnnIndex(spark, a1, delta, a1))
+    assert(Graft.readAnnIndex(spark, a2)._1.count() > 0 &&
+      Graft.readAnnIndex(spark, a2)._3.count() == codes)
+    // band and Bloom generations are self-contained: only the base root
+    val b1 = "target/fixtures/band_chain_gen1"
+    Graft.writeBandIndex(docs.filter(col("doc_id") < 50), b1)
+    refused(Graft.refreshStoredBandIndex(spark, b1,
+      docs.filter(col("doc_id") === 60L).withColumn("status", lit("added")), b1))
+    val f1 = "target/fixtures/bloom_chain_gen1"
+    Graft.writeBloomIndex(docs.filter(col("doc_id") < 50), f1)
+    refused(Graft.refreshStoredBloomIndex(spark, f1, docs.filter(col("doc_id") === 60L), f1))
+    assert(Graft.readBandIndex(spark, b1)._2.count() == 50L)
+    assert(Graft.readBloomIndex(spark, f1)._2.count() > 0L)
   }
 
   test("q236 gate query returns full ranked top-10 blocks at sf0.01") {

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -8,7 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * the AnnIndexSpec / RetrievalSpec discipline (write → read → serve ==
   * inline; layout law: no raw text, no single-file funnels on unbounded
   * pieces; refresh ∝ delta == rebuild) applied to the near-dup band
-  * index and the Bloom decontamination index. */
+  * index and the Bloom decontamination index — plus the manifest every
+  * family's generations share ([[ops.StoredIndex]]): opening starts no
+  * job, a manifest-less generation reads the same, a copied tree of
+  * generations serves the same, and an ANN refresh references its
+  * base's quantizers instead of copying them. */
 class StoredIndexSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -140,5 +146,129 @@ class StoredIndexSpec extends AnyFunSuite {
     val r1 = sortedRows(Graft.bloomDecontaminateStored(corpus, refreshed))
     val r2 = sortedRows(Graft.bloomDecontaminateStored(corpus, rebuilt))
     assert(r1.nonEmpty && r1 == r2)
+  }
+
+  // ------------------------------------------------------------ manifest
+
+  private def emb = Tables.embeddings(spark, Sf0001)
+    .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("label"))
+
+  private val Families = Seq("ann", "bloom", "band", "bm25")
+
+  /** Generation 0 of each family and one refreshed from it (gen1),
+    * under `root`/<family>/. Read-only once built: tests that mutate
+    * a tree work on a copy. */
+  private lazy val tree: String = {
+    val root = Files.createTempDirectory("idxtree").toString
+    val d = docs.select(col("doc_id"), col("text"))
+    def gen(f: String, g: Int) = s"$root/$f/gen$g"
+    Graft.writeAnnIndex(emb, gen("ann", 0))
+    Graft.refreshStoredAnnIndex(spark, gen("ann", 0), emb.filter(col("vec_id") % 7 === 0)
+      .select(col("vec_id"), lit("changed").as("status"), transform(col("v"), x => -x).as("v")),
+      gen("ann", 1))
+    Graft.writeBloomIndex(d.filter(col("doc_id") % 40 === 0), gen("bloom", 0))
+    Graft.refreshStoredBloomIndex(spark, gen("bloom", 0), d.filter(col("doc_id") % 40 === 20),
+      gen("bloom", 1))
+    Graft.writeBandIndex(standing.filter(col("doc_id") % 7 =!= 0), gen("band", 0))
+    Graft.refreshStoredBandIndex(spark, gen("band", 0),
+      standing.filter(col("doc_id") % 7 === 0).withColumn("status", lit("added")), gen("band", 1))
+    Graft.writeBm25Index(d.filter(col("doc_id") % 3 =!= 0), gen("bm25", 0))
+    Graft.refreshStoredBm25Index(spark, gen("bm25", 0), d.filter(col("doc_id") % 3 === 0),
+      gen("bm25", 1))
+    root
+  }
+
+  /** Every piece of the generation at `gen`, as read*Index opens it. */
+  private def opened(f: String, gen: String): Seq[DataFrame] = f match {
+    case "ann" => val (c, cb, codes) = Graft.readAnnIndex(spark, gen); Seq(c, cb, codes)
+    case "bloom" => val (bitmap, sh) = Graft.readBloomIndex(spark, gen); Seq(bitmap, sh)
+    case "band" => val (bands, d) = Graft.readBandIndex(spark, gen); Seq(bands, d)
+    case "bm25" => val (po, df, st) = Graft.readBm25Index(spark, gen); Seq(po, df, st)
+  }
+
+  /** The family's serve path over the generation at `gen`. */
+  private def served(f: String, gen: String): Seq[String] = sortedRows(f match {
+    case "ann" => Graft.annSearchStored(Graft.readAnnIndex(spark, gen),
+      emb.filter(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("v").as("qv")), 2, 5)
+    case "bloom" => Graft.bloomDecontaminateStored(corpus, Graft.readBloomIndex(spark, gen))
+    case "band" => Graft.nearDupServeStored(incoming, Graft.readBandIndex(spark, gen), 0.8)
+    case "bm25" =>
+      import spark.implicits._
+      Graft.bm25SearchStored(Graft.readBm25Index(spark, gen),
+        ops.Retrieval.gateQueries.toDF("query_id", "terms"), 10)
+  })
+
+  private def copyTree(from: String, to: String): Unit = {
+    val (src, dst) = (Paths.get(from), Paths.get(to))
+    val walk = Files.walk(src)
+    try walk.forEach { (p: Path) =>
+      val q = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+    } finally walk.close()
+  }
+
+  test("opening a generation of each of the four families starts no Spark job") {
+    val sc = spark.sparkContext
+    val group = "graft-stored-index-open"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val root = tree
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try Families.foreach { f =>
+      Seq(0, 1).foreach { g =>
+        sc.setJobGroup(group, group)
+        val schemas = try opened(f, s"$root/$f/gen$g").map(_.schema) finally sc.clearJobGroup()
+        org.apache.spark.TestListenerBus.drain(sc)
+        assert(schemas.forall(_.nonEmpty))
+        assert(jobs.get == 0, s"opening $f gen$g started ${jobs.get} jobs")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a generation whose manifest was deleted reads the same schema and rows") {
+    val copy = Files.createTempDirectory("idxlegacy").resolve("t").toString
+    copyTree(tree, copy)
+    val fs = new org.apache.hadoop.fs.Path(copy).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // every base generation, and the self-contained refreshed ones
+    // (ANN and BM25 refreshes reference their base, so need the manifest)
+    val gens = Families.map(f => f -> 0) ++ Seq("bloom" -> 1, "band" -> 1)
+    gens.foreach { case (f, g) =>
+      val gen = s"$copy/$f/gen$g"
+      def read() = opened(f, gen).map(df => (df.schema, sortedRows(df)))
+      val withManifest = read()
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$gen/${ops.StoredIndex.ManifestFile}"), false))
+      val inferred = read()
+      assert(inferred.map(_._1) == withManifest.map(_._1), s"$f gen$g: schema drifted")
+      assert(inferred == withManifest, s"$f gen$g: rows drifted")
+      assert(withManifest.forall(_._2.nonEmpty))
+    }
+  }
+
+  test("a gen0 + refreshed-generation tree copied to a new root serves identically") {
+    val copy = Files.createTempDirectory("idxcopy").resolve("t").toString
+    copyTree(tree, copy)
+    val before = Families.map(f => served(f, s"$tree/$f/gen1"))
+    assert(before.forall(_.nonEmpty))
+    // move the original away: the copy must not read any of its files
+    val parked = Paths.get(tree + ".parked")
+    Files.move(Paths.get(tree), parked)
+    try assert(Families.map(f => served(f, s"$copy/$f/gen1")) == before)
+    finally Files.move(parked, Paths.get(tree))
+  }
+
+  test("an ANN refresh writes only codes/: its manifest references the base's quantizers") {
+    val (g0, g1) = (s"$tree/ann/gen0", s"$tree/ann/gen1")
+    assert(!Files.exists(Paths.get(s"$g1/centroids")) && !Files.exists(Paths.get(s"$g1/codebook")))
+    assert(Files.isDirectory(Paths.get(s"$g1/codes")))
+    val (c0, cb0, _) = Graft.readAnnIndex(spark, g0)
+    val (c1, cb1, _) = Graft.readAnnIndex(spark, g1)
+    assert(sortedRows(c1) == sortedRows(c0) && sortedRows(cb1) == sortedRows(cb0))
+    assert((c1.inputFiles ++ cb1.inputFiles).forall(f => new java.net.URI(f).getPath.startsWith(g0 + "/")),
+      "refreshed quantizers must be read from the base generation")
   }
 }
