@@ -43,12 +43,13 @@ object Bench {
     // q160 at 11.3s vs 1.1s in a fresh session — checkpoint-heavy
     // queries degrading as 207 queries × 4 runs accumulated pinned
     // localCheckpoint blocks. The loops now release superseded rounds
-    // themselves (Components.releaseBlocks); each query's FINAL
-    // checkpointed frame is released here, between bursts, where no
-    // plan can still reference it. Diagnosability fields ride along so
-    // the next cross-session dispute is resolvable from the artifact
-    // alone: per-burst GC time, the storage high-water mark across the
-    // run, and the JVM sizing flags build.sbt pinned.
+    // themselves; each query's FINAL checkpointed frame is released
+    // here, between bursts, where no plan can still reference it (the
+    // block-lifetime contract: graft.ops.Barrier). Diagnosability
+    // fields ride along so the next cross-session dispute is
+    // resolvable from the artifact alone: per-burst GC time, the
+    // storage high-water mark across the run, and the JVM sizing flags
+    // build.sbt pinned.
     import scala.jdk.CollectionConverters._
     // blocking=true (round 12): the async sweep left block removal racing
     // the NEXT burst's first run — one of the three suspects the r11

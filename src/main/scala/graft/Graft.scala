@@ -177,11 +177,12 @@ object Graft {
     * one — or any, with the threshold at `-1` — runs the distributed
     * min-label propagation loop, where high-diameter graphs converge in
     * O(log n) rounds via path doubling. Both paths return the same rows
-    * and schema. Set `reliable = true` (with
+    * and schema. Checkpoints are executor-local unless the session
+    * sets `spark.graft.reliableCheckpoint=true` (with
     * `SparkContext.setCheckpointDir`) for cluster runs where the
-    * checkpointed lineage must survive executor loss. */
-  def connectedComponents(edges: DataFrame, reliable: Boolean = false): DataFrame =
-    ops.Components.connectedComponents(edges, reliable = reliable)
+    * checkpointed lineage must survive executor loss ([[ops.Barrier]]). */
+  def connectedComponents(edges: DataFrame): DataFrame =
+    ops.Components.connectedComponents(edges)
 
   /** Incrementally maintain a [[connectedComponents]] labeling when a
     * batch of docs arrives: `comps` is the standing (doc_id, component)

@@ -54,10 +54,7 @@ object Knobs {
       "Bloom pre-filter bitmap bits: broadcast state = m/8 bytes regardless of eval cardinality, fp ≈ (1−e^(−k·n/m))^k"),
     Knob("bloomHashes", "bloomDecontaminate",
       ops.Decontam.DefaultBloomHashes.toString,
-      "Bloom hash count k: pre-filter probe joins per shingle"),
-    Knob("reliable", "connectedComponents (+ spark.graft.reliableCheckpoint)",
-      "false",
-      "iterative-loop checkpoint durability: reliable HDFS-grade vs executor-local"))
+      "Bloom hash count k: pre-filter probe joins per shingle"))
 
   /** The README "Scale knobs" table body, generated so docs can't drift. */
   def markdown: String =

@@ -46,9 +46,10 @@ object Sessions {
       "existing SparkSession was built without GraftExtensions (graft_md5long64 " +
         "unresolved); build sessions via Sessions.local first")
     spark.sparkContext.setLogLevel("WARN")
-    // Components.releaseBlocks unpersists superseded localCheckpoint
-    // frames by design (they are provably never re-read); every release
-    // logs a per-RDD "cannot be recomputed after unpersisting" WARN from
+    // graft.ops.Barrier releases superseded localCheckpoint frames by
+    // design (its block-lifetime contract: they are provably never
+    // re-read); every release logs a per-RDD "cannot be recomputed
+    // after unpersisting" WARN from
     // the concrete RDD class's logger — hundreds of lines per bench run
     // that would drown the driver-parsed stdout tail. Silence the rdd
     // package's warnings; a release that actually breaks the guarantee

@@ -974,11 +974,9 @@ object Analytics {
     // materialization each consumer re-scanned the input and re-ran
     // the collect_set aggregation (3 scans / 3 basket exchanges
     // statically at r15 baseline).
-    val rel = Components.sessionReliable(df)
-    if (rel) Components.requireCheckpointDir(df)
-    val baskets = Components.materialize(
+    val baskets = Barrier.pin(
       df.groupBy(basket.as("__graft_basket"))
-        .agg(sort_array(collect_set(item)).as("items")), rel)
+        .agg(sort_array(collect_set(item)).as("items")))
     val pc = baskets
       .select(explode(col("items")).as("__graft_item"))
       .groupBy(col("__graft_item")).agg(count(lit(1)).as("n"))

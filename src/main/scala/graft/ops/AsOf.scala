@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.{Q, Tables}
 
 /** Temporal joins Spark has no native operator for: backward AS-OF join

@@ -17,8 +17,7 @@ import graft.{Q, Tables}
   * via one explode + map-side-combined aggregation, ONE argmax row
   * collected to the driver (scalars-only driver state, the CC-loop
   * discipline), and a row-local fold applying the merge left-to-right
-  * non-overlapping — then a lineage-truncating checkpoint
-  * ([[Components.ReliableConfKey]] upgrades to reliable on a cluster).
+  * non-overlapping — then a lineage-truncating [[Barrier]].
   *
   * Determinism: the argmax tie-breaks on (count DESC, left, right) — a
   * total order — so the learned merge table is a pure function of the
@@ -87,50 +86,50 @@ object Bpe {
   private[graft] def trainMerges(docs: DataFrame, nMerges: Int): DataFrame = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     val spark = docs.sparkSession
-    val rel = Components.sessionReliable(docs)
-    if (rel) Components.requireCheckpointDir(docs)
-    var state = Components.materialize(wordTable(docs), rel)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= nMerges && !exhausted) {
-      // one aggregated pair table per round; the argmax is ONE driver row
-      val top = pairCounts(state)
-        .filter(col("cnt") >= 2) // a pair seen once compresses nothing
-        .orderBy(col("cnt").desc, col("left"), col("right"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((step, l, r, c))
-        val lq = l.replace("\\", "\\\\").replace("'", "\\'")
-        val rq = r.replace("\\", "\\\\").replace("'", "\\'")
-        // left-to-right non-overlapping fold: (out, pend) state walks the
-        // symbol array once; pend holds the candidate left element
-        val mergedSyms = expr(
-          s"""CASE WHEN x.pend = '' THEN x.out
-             |     ELSE concat(x.out, array(x.pend)) END""".stripMargin)
-        val folded = expr(
-          s"""aggregate(syms,
-             |  named_struct('out', CAST(array() AS ARRAY<STRING>), 'pend', ''),
-             |  (st, s) -> CASE
-             |    WHEN st.pend = '$lq' AND s = '$rq'
-             |      THEN named_struct('out', concat(st.out, array('$lq$rq')), 'pend', '')
-             |    WHEN st.pend = '' THEN named_struct('out', st.out, 'pend', s)
-             |    ELSE named_struct('out', concat(st.out, array(st.pend)), 'pend', s)
-             |  END)""".stripMargin)
-        val next = Components.materialize(
-          state.withColumn("x", folded)
-            .select(col("word"), col("n"), mergedSyms.as("syms")), rel)
-        // next is materialized: the superseded round's blocks are dead
-        Components.releaseBlocks(state)
-        state = next
-        step += 1
+    // every round's state is a barrier of this scope: a round frees its
+    // predecessor once it has materialized, and the scope frees the last
+    // one (the merge table lives in driver memory), a failed round included
+    Barrier.scoped { scope =>
+      var state = scope.pin(wordTable(docs))
+      var step = 1
+      var exhausted = false
+      while (step <= nMerges && !exhausted) {
+        // one aggregated pair table per round; the argmax is ONE driver row
+        val top = pairCounts(state)
+          .filter(col("cnt") >= 2) // a pair seen once compresses nothing
+          .orderBy(col("cnt").desc, col("left"), col("right"))
+          .limit(1).collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          merges += ((step, l, r, c))
+          val lq = l.replace("\\", "\\\\").replace("'", "\\'")
+          val rq = r.replace("\\", "\\\\").replace("'", "\\'")
+          // left-to-right non-overlapping fold: (out, pend) state walks the
+          // symbol array once; pend holds the candidate left element
+          val mergedSyms = expr(
+            s"""CASE WHEN x.pend = '' THEN x.out
+               |     ELSE concat(x.out, array(x.pend)) END""".stripMargin)
+          val folded = expr(
+            s"""aggregate(syms,
+               |  named_struct('out', CAST(array() AS ARRAY<STRING>), 'pend', ''),
+               |  (st, s) -> CASE
+               |    WHEN st.pend = '$lq' AND s = '$rq'
+               |      THEN named_struct('out', concat(st.out, array('$lq$rq')), 'pend', '')
+               |    WHEN st.pend = '' THEN named_struct('out', st.out, 'pend', s)
+               |    ELSE named_struct('out', concat(st.out, array(st.pend)), 'pend', s)
+               |  END)""".stripMargin)
+          val next = scope.pin(
+            state.withColumn("x", folded)
+              .select(col("word"), col("n"), mergedSyms.as("syms")))
+          // next is materialized: the superseded round's blocks are dead
+          Barrier.release(state)
+          state = next
+          step += 1
+        }
       }
     }
-    // the merge table lives in driver memory — the final state frame is
-    // never read again; leaving it pinned leaks blocks per training call
-    Components.releaseBlocks(state)
     spark.createDataFrame(merges.toSeq)
       .toDF("step", "left", "right", "pair_count")
       .orderBy(col("step"))
@@ -166,41 +165,42 @@ object Bpe {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     require(maxBatch >= 1, s"maxBatch must be >= 1, got $maxBatch")
     val spark = docs.sparkSession
-    val rel = Components.sessionReliable(docs)
-    if (rel) Components.requireCheckpointDir(docs)
-    var state = Components.materialize(wordTable(docs), rel)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= nMerges && !exhausted) {
-      val want = math.min(maxBatch, nMerges - step + 1)
-      val ranked = pairCounts(state)
-        .filter(col("cnt") >= 2)
-        .orderBy(col("cnt").desc, col("left"), col("right"))
-        .limit(want).collect()
-      if (ranked.isEmpty) exhausted = true
-      else {
-        val used = scala.collection.mutable.Set.empty[String]
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var stop = false
-        for (row <- ranked if !stop) {
-          val (l, r, c) = (row.getString(0), row.getString(1), row.getLong(2))
-          if (accepted.isEmpty || (!used(l) && !used(r) && !used(l + r))) {
-            accepted += ((l, r, c)); used ++= Seq(l, r, l + r)
-          } else stop = true
+    // every round's state is a barrier of this scope: a round frees its
+    // predecessor once it has materialized, and the scope frees the last
+    // one (the merge table lives in driver memory), a failed round included
+    Barrier.scoped { scope =>
+      var state = scope.pin(wordTable(docs))
+      var step = 1
+      var exhausted = false
+      while (step <= nMerges && !exhausted) {
+        val want = math.min(maxBatch, nMerges - step + 1)
+        val ranked = pairCounts(state)
+          .filter(col("cnt") >= 2)
+          .orderBy(col("cnt").desc, col("left"), col("right"))
+          .limit(want).collect()
+        if (ranked.isEmpty) exhausted = true
+        else {
+          val used = scala.collection.mutable.Set.empty[String]
+          val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+          var stop = false
+          for (row <- ranked if !stop) {
+            val (l, r, c) = (row.getString(0), row.getString(1), row.getLong(2))
+            if (accepted.isEmpty || (!used(l) && !used(r) && !used(l + r))) {
+              accepted += ((l, r, c)); used ++= Seq(l, r, l + r)
+            } else stop = true
+          }
+          accepted.foreach { case (l, r, c) => merges += ((step, l, r, c)); step += 1 }
+          val folded = accepted.foldLeft("syms") {
+            case (acc, (l, r, _)) => foldOnceExpr(acc, l, r)
+          }
+          val next = scope.pin(
+            state.select(col("word"), col("n"), expr(folded).as("syms")))
+          Barrier.release(state)
+          state = next
         }
-        accepted.foreach { case (l, r, c) => merges += ((step, l, r, c)); step += 1 }
-        val folded = accepted.foldLeft("syms") {
-          case (acc, (l, r, _)) => foldOnceExpr(acc, l, r)
-        }
-        val next = Components.materialize(
-          state.select(col("word"), col("n"), expr(folded).as("syms")), rel)
-        Components.releaseBlocks(state)
-        state = next
       }
     }
-    // same as [[trainMerges]]: the final state frame is never read again
-    Components.releaseBlocks(state)
     spark.createDataFrame(merges.toSeq)
       .toDF("step", "left", "right", "pair_count")
       .orderBy(col("step"))
@@ -519,9 +519,7 @@ object Bpe {
     * sf0.1 vs 0.12 s for the encode itself). Tokenize once, persist,
     * analyze — the production lifecycle, reflected in the plan. */
   private def encodedOnce(s: SparkSession, dir: String): DataFrame =
-    Components.materialize(
-      bpeEncodeOf(Tables.documents(s, dir), ShippedMerges),
-      Components.sessionReliable(Tables.documents(s, dir)))
+    Barrier.pin(bpeEncodeOf(Tables.documents(s, dir), ShippedMerges))
 
   /** Tokens per output shard for [[q200ShardManifest]]: small enough to
     * make ~7 shards at sf0.01 (so the oracle exercises real boundaries)

@@ -37,7 +37,7 @@ import graft.Q
   *    (diameter 2-3 in practice), so the loop terminates in a handful of
   *    rounds. Per round: one shuffle for the (edges ⋈ labels)
   *    min-aggregation, one broadcast-or-shuffle join to merge, one
-  *    `localCheckpoint` to truncate lineage (without it the plan doubles
+  *    [[Barrier]] to truncate lineage (without it the plan doubles
   *    per round and Catalyst analysis goes quadratic), and one `count`
   *    action for the convergence check — driver-side scalars only, never
   *    row data. Past [[PlainRounds]] a path-doubling shortcut joins each
@@ -56,47 +56,6 @@ import graft.Q
   */
 object Components {
 
-  /** Session conf key: when set to `true`, every lineage-truncating
-    * checkpoint in this module (the CC loop AND [[triangles]]' oriented
-    * frame) uses reliable `checkpoint()` instead of `localCheckpoint()`,
-    * so callers that cannot pass a flag (the q145/q158/q160 registry
-    * entries, the facade) still get executor-loss-safe materialization
-    * on a real cluster. Requires `SparkContext.setCheckpointDir`. */
-  val ReliableConfKey = "spark.graft.reliableCheckpoint"
-
-  private[graft] def sessionReliable(df: DataFrame): Boolean =
-    df.sparkSession.conf.getOption(ReliableConfKey).exists(_.trim.equalsIgnoreCase("true"))
-
-  private[graft] def requireCheckpointDir(df: DataFrame): Unit = require(
-    df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-    "reliable=true needs SparkContext.setCheckpointDir (reliable checkpoints write to it)")
-
-  /** Materialize + truncate lineage: reliable (HDFS-grade, survives
-    * executor loss) when `reliable`, else executor-local blocks. */
-  private[graft] def materialize(df: DataFrame, reliable: Boolean): DataFrame =
-    if (reliable) df.checkpoint() else df.localCheckpoint()
-
-  /** Release the storage blocks a [[materialize]] call pinned, once the
-    * frame is provably never read again (its successor has already
-    * materialized eagerly). Without this every loop round leaks its
-    * superseded round's blocks for the life of the session — measured as
-    * the r10 driver-bench blowup (q160 11.3s vs 1.1s in a fresh session:
-    * 207 queries × 4 runs of checkpoint-heavy loops pinned storage until
-    * eviction pressure poisoned every later query).
-    *
-    * Only frames returned DIRECTLY by [[materialize]] qualify: their
-    * analyzed plan is the bare `LogicalRDD` holding the persisted RDD.
-    * Derived frames (`.drop`/`.select` over one) are deliberately not
-    * matched — releasing through a derived plan could hit a leaf the
-    * caller still shares. Reliable checkpoints keep their data in files,
-    * not blocks, so `unpersist` is a harmless no-op there. */
-  private[graft] def releaseBlocks(ckpted: DataFrame): Unit =
-    ckpted.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Rounds of plain min-propagation before path-doubling kicks in:
     * near-dup graphs (diameter 2-3) converge inside the plain window at
     * one shuffle-join per round; anything still unconverged after it is
@@ -112,34 +71,21 @@ object Components {
     * The pair pipeline is checkpointed once (`e`). When `e` holds at
     * most [[driverCap]] edges it closes on the driver
     * ([[closeOnDriver]]) and `e` is released; otherwise the propagation
-    * loop ([[closeByPropagation]]) runs over `e`.
-    *
-    * @param reliable when true, materialize with reliable
-    *   `checkpoint()` (requires `SparkContext.setCheckpointDir`) so the
-    *   truncated lineage survives executor loss on a real cluster; the
-    *   default `localCheckpoint()` stores blocks executor-local — fine
-    *   single-process, lossy under node failure. The
-    *   [[ReliableConfKey]] session conf turns the flag on globally. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 30,
-                          reliable: Boolean = false): DataFrame = {
-    val rel = reliable || sessionReliable(edges)
-    if (rel) requireCheckpointDir(edges)
-    def ckpt(df: DataFrame): DataFrame = materialize(df, rel)
-    // Checkpoint the DIRECTED pairs first (r14): ckpt-ing the union of
-    // the raw pipeline evaluated the caller's pair pipeline once per
-    // union branch — ReuseExchange dedups the exchanges below, but
-    // everything between the last exchange and the union top (the
-    // Jaccard-verification join with its array_intersect over shingle
-    // arrays) ran TWICE per CC call. The pipeline evaluates exactly
-    // once, here; both closing paths read e's blocks.
-    val e = ckpt(edges.select(col("i"), col("j")))
-    closeOnDriver(e) match {
-      case Some(labels) =>
-        releaseBlocks(e)
-        labels
-      case None => closeByPropagation(e, maxIter, ckpt)
+    * loop ([[closeByPropagation]]) runs over `e`. Every checkpoint is a
+    * [[Barrier]]: its session's conf picks executor-local or reliable. */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame =
+    Barrier.scoped { scope =>
+      // Checkpoint the DIRECTED pairs first (r14): ckpt-ing the union of
+      // the raw pipeline evaluated the caller's pair pipeline once per
+      // union branch — ReuseExchange dedups the exchanges below, but
+      // everything between the last exchange and the union top (the
+      // Jaccard-verification join with its array_intersect over shingle
+      // arrays) ran TWICE per CC call. The pipeline evaluates exactly
+      // once, here; both closing paths read e's blocks. The scope
+      // releases e when either returns (the loop frees it earlier).
+      val e = scope.pin(edges.select(col("i"), col("j")))
+      closeOnDriver(e).getOrElse(closeByPropagation(e, maxIter))
     }
-  }
 
   /** Most edges the driver finish closes: the session's broadcast
     * threshold in bytes over the edge schema's row size, sized the way
@@ -221,8 +167,7 @@ object Components {
     * instead of O(diameter) — `maxIter` = 30 then covers diameters past
     * 2²⁰ rather than aborting at 31. (See the inline note below on why
     * multi-round batching was tried and reverted.) */
-  private def closeByPropagation(e: DataFrame, maxIter: Int,
-                                 ckpt: DataFrame => DataFrame): DataFrame = {
+  private def closeByPropagation(e: DataFrame, maxIter: Int): DataFrame = {
     // No `.distinct()` on the symmetrized edges: the min-aggregation is
     // duplicate-tolerant, and near-dup pair generators emit distinct
     // (i<j) pairs already — the dedup shuffle bought nothing.
@@ -235,13 +180,13 @@ object Components {
     // sym ckpt is a cheap block-to-block union, and every loop round
     // reads ONE block set; e releases the moment sym materializes.
     // The sym ckpt is REPARTITIONED BY src (§2.4 "share one exchange"):
-    // localCheckpoint preserves output partitioning in the LogicalRDD,
+    // a checkpoint preserves output partitioning in the LogicalRDD,
     // so the seed aggregation and EVERY round's propagation join read
     // the blocks exchange-free instead of re-shuffling the edge set
     // once per round. (The labels side is already id-partitioned by its
     // own round checkpoint for the same reason.)
-    val sym = ckpt(symmetrized(e).repartition(col("src")))
-    releaseBlocks(e)
+    val sym = Barrier.pin(symmetrized(e).repartition(col("src")))
+    Barrier.release(e)
     // Seed labels at min(self, direct neighbors): the node-collection
     // aggregation has to shuffle the edge list by src anyway, so folding
     // round 1's min-propagation into it is free — star-shaped near-dup
@@ -250,7 +195,7 @@ object Components {
     // `labelsCkpt` is always the bare checkpointed frame whose blocks
     // back `labels` — held so each round can release its predecessor
     // the moment the successor has materialized (checkpoints are eager)
-    var labelsCkpt = ckpt(sym.groupBy(col("src"))
+    var labelsCkpt = Barrier.pin(sym.groupBy(col("src"))
       .agg(min(col("dst")).as("nbrMin"))
       .select(col("src").as("id"), least(col("src"), col("nbrMin")).as("label")))
     var labels: DataFrame = labelsCkpt
@@ -279,7 +224,7 @@ object Components {
           // propagation shuffle twice. At the propagation fixpoint
           // labels are component-constant, so the shortcut is a no-op
           // there — the zero-change exit test is unaffected.
-          val m = ckpt(merged)
+          val m = Barrier.pin(merged)
           doublingCkpt = m
           m.as("l1")
             .join(m.select(col("id").as("lid"), col("label").as("llabel")),
@@ -288,7 +233,7 @@ object Components {
               least(col("l1.label"), col("llabel")).as("label"),
               col("l1.prev").as("prev"))
         }
-      val staged = ckpt(stepped
+      val staged = Barrier.pin(stepped
         .select(col("id"), col("label"),
           (col("label") < col("prev")).cast("long").as("chg")))
       // coalesce: sum over an EMPTY staged frame is NULL (zero-pair
@@ -296,8 +241,8 @@ object Components {
       val changed = staged.agg(coalesce(sum(col("chg")), lit(0L))).head.getLong(0)
       // `staged` is materialized: the superseded round's blocks (and the
       // doubling round's intermediate) are dead — release, don't leak
-      releaseBlocks(labelsCkpt)
-      if (doublingCkpt != null) releaseBlocks(doublingCkpt)
+      Barrier.release(labelsCkpt)
+      if (doublingCkpt != null) Barrier.release(doublingCkpt)
       labelsCkpt = staged
       labels = staged.drop("chg")
       converged = changed == 0
@@ -309,7 +254,7 @@ object Components {
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     // the returned labels read the final round's blocks only — the
     // symmetrized edge frame is dead once the loop exits
-    releaseBlocks(sym)
+    Barrier.release(sym)
     labels
   }
 
@@ -397,9 +342,7 @@ object Components {
     // branches — three full replays of the two-sided band join
     // otherwise. p is ∝ |batch| rows by the incremental contract, so the
     // blocks are small wherever this is affordable to call at all.
-    val rel = sessionReliable(newPairs)
-    if (rel) requireCheckpointDir(newPairs)
-    val p = materialize(newPairs.select(col("i"), col("j")), rel)
+    val p = Barrier.pin(newPairs.select(col("i"), col("j")))
     val contracted = p
       .join(c.select(col("doc_id").as("i"), col("component").as("__graft_ci")),
         Seq("i"), "left")
@@ -453,10 +396,7 @@ object Components {
     // and defeat ReuseExchange, so every pair-pipeline consumer (~10
     // references across the standing/incoming/cross legs) re-shingled
     // the corpus from parquet otherwise
-    val __raw = graft.Tables.documents(s, dir)
-    val __rel = sessionReliable(__raw)
-    if (__rel) requireCheckpointDir(__raw)
-    val docs = materialize(Dedup.hashedShinglesOf(__raw), __rel)
+    val docs = Barrier.pin(Dedup.hashedShinglesOf(graft.Tables.documents(s, dir)))
     val standing = docs.filter(col("doc_id") % 3 =!= 0)
     val incoming = docs.filter(col("doc_id") % 3 === 0)
     val comps = connectedComponents(
@@ -546,10 +486,7 @@ object Components {
     // and defeat ReuseExchange, so every pair-pipeline consumer (~10
     // references across the standing/incoming/cross legs) re-shingled
     // the corpus from parquet otherwise
-    val __raw = graft.Tables.documents(s, dir)
-    val __rel = sessionReliable(__raw)
-    if (__rel) requireCheckpointDir(__raw)
-    val docs = materialize(Dedup.hashedShinglesOf(__raw), __rel)
+    val docs = Barrier.pin(Dedup.hashedShinglesOf(graft.Tables.documents(s, dir)))
     val comps = connectedComponents(
         Dedup.minhashPairsOf(docs).select(col("i"), col("j")))
       .select(col("id").as("doc_id"), col("label").as("component"))
@@ -628,10 +565,7 @@ object Components {
     // and defeat ReuseExchange, so every pair-pipeline consumer (~10
     // references across the standing/incoming/cross legs) re-shingled
     // the corpus from parquet otherwise
-    val __raw = graft.Tables.documents(s, dir)
-    val __rel = sessionReliable(__raw)
-    if (__rel) requireCheckpointDir(__raw)
-    val docs = materialize(Dedup.hashedShinglesOf(__raw), __rel)
+    val docs = Barrier.pin(Dedup.hashedShinglesOf(graft.Tables.documents(s, dir)))
     val standing = docs.filter(col("doc_id") % 3 =!= 0)
     val incoming = docs.filter(col("doc_id") % 3 === 0)
     val comps = connectedComponents(
@@ -878,24 +812,18 @@ object Components {
     // orientEdges alone references the edge frame three times (degree
     // aggregate + the two tag joins), so an un-materialized minhash
     // pair pipeline would replay end-to-end per reference
-    val rel = sessionReliable(edges)
-    if (rel) requireCheckpointDir(edges)
-    val e = materialize(edges.select(col("i"), col("j")), rel)
-    val out = trianglesOfMaterialized(e, rel)
-    // trianglesOfMaterialized eagerly materialized its oriented frame —
-    // the only ancestor `out` references — so e's blocks are dead here
-    releaseBlocks(e)
-    out
+    // trianglesOfPinned pins its oriented frame — the only ancestor
+    // its result references — so e's blocks are dead when it returns
+    Barrier.scoped(scope => trianglesOfPinned(scope.pin(edges.select(col("i"), col("j")))))
   }
 
-  /** [[triangles]] body over an ALREADY-materialized edge frame —
-    * callers that fan the same edges into other consumers (the
-    * clustering-coefficient degree pass) checkpoint once and share. */
-  private[graft] def trianglesOfMaterialized(edges: DataFrame, rel: Boolean): DataFrame = {
+  /** [[triangles]] body over an ALREADY-pinned edge frame — callers
+    * that fan the same edges into other consumers (the
+    * clustering-coefficient degree pass) pin once and share. */
+  private def trianglesOfPinned(edges: DataFrame): DataFrame = {
     // the oriented frame is referenced three times below (same
-    // discipline as [[connectedComponents]]); the ReliableConfKey
-    // session conf upgrades both checkpoints to reliable
-    val oriented = materialize(orientEdges(edges), rel)
+    // discipline as [[connectedComponents]])
+    val oriented = Barrier.pin(orientEdges(edges))
     // the closing edge of a wedge (u→v, u→w), if present, is oriented
     // v→w by the same (degree, id) order, so a semi-join closes it;
     // sort_array restores id order for the (a, b, c) output contract
@@ -928,56 +856,51 @@ object Components {
     * `dst` grain; rank state is one (node, rank) row per node. Hot
     * sinks (a node with huge in-degree) skew only the dst aggregation,
     * which partial aggregation absorbs. Iterations are a driver loop
-    * with scalar-only driver state; each round checkpoints through
-    * [[materialize]] (lineage stays linear; the [[ReliableConfKey]]
-    * session conf upgrades to executor-loss-safe checkpoints, same as
-    * the CC loop). Dangling nodes (outdeg 0) absorb rank without
-    * redistribution — the standard simplification; document-ranking
-    * use cases only compare relative authority. */
+    * with scalar-only driver state; each round is a [[Barrier]]
+    * (lineage stays linear; the session conf can make it
+    * executor-loss-safe, same as the CC loop). Dangling nodes (outdeg 0)
+    * absorb rank without redistribution — the standard simplification;
+    * document-ranking use cases only compare relative authority. */
   private[graft] def pageRankInt(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, s"pageRankInt needs iters >= 1, got $iters")
-    val rel = sessionReliable(edges)
-    if (rel) requireCheckpointDir(edges)
-    // evaluate the (possibly expensive) upstream edge pipeline ONCE —
-    // it is referenced in every iteration. `outdeg` rides ON the edge
-    // row (r14): it is a loop invariant the old shape re-aggregated and
-    // re-joined EVERY iteration; a window count inside the same single
-    // checkpoint action removes one join + one aggregation per
-    // iteration outright (§2.4), for zero extra actions.
-    val e = materialize(
-      edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-        .distinct()
-        .withColumn("outdeg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src")))),
-      rel)
-    // the node set is a loop invariant too (seed + every round's left
-    // join) — checkpoint it once (r14) instead of re-shuffling the full
-    // edge set into a distinct per iteration; node-grain, the same state
-    // size as the rank table itself
-    val nodes = materialize(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), rel)
-    var ranks = nodes.select(col("node"), lit(1000000L).as("rank"))
-    var ranksCkpt: DataFrame = null
-    for (_ <- 1 to iters) {
-      val contrib = e
-        .join(ranks.select(col("node").as("src"), col("rank")), "src")
-        .select(col("dst").as("node"), expr("rank div outdeg").as("c"))
-      val in = contrib.groupBy(col("node")).agg(sum(col("c")).as("in_rank"))
-      val next = materialize(
-        nodes.join(in, Seq("node"), "left")
-          .select(col("node"),
-            (lit(150000L) + expr("coalesce(in_rank, 0L) * 85 div 100")).as("rank")),
-        rel)
-      // `next` is materialized: the superseded iteration's blocks are dead
-      if (ranksCkpt != null) releaseBlocks(ranksCkpt)
-      ranksCkpt = next
-      ranks = next
+    // the edge frame and the node invariant die with the loop: only the
+    // final ranks (their own barrier) are returned
+    Barrier.scoped { scope =>
+      // evaluate the (possibly expensive) upstream edge pipeline ONCE —
+      // it is referenced in every iteration. `outdeg` rides ON the edge
+      // row (r14): it is a loop invariant the old shape re-aggregated and
+      // re-joined EVERY iteration; a window count inside the same single
+      // checkpoint action removes one join + one aggregation per
+      // iteration outright (§2.4), for zero extra actions.
+      val e = scope.pin(
+        edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+          .distinct()
+          .withColumn("outdeg", count(lit(1)).over(
+            org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
+      // the node set is a loop invariant too (seed + every round's left
+      // join) — checkpoint it once (r14) instead of re-shuffling the full
+      // edge set into a distinct per iteration; node-grain, the same state
+      // size as the rank table itself
+      val nodes = scope.pin(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      var ranks = nodes.select(col("node"), lit(1000000L).as("rank"))
+      for (_ <- 1 to iters) {
+        val contrib = e
+          .join(ranks.select(col("node").as("src"), col("rank")), "src")
+          .select(col("dst").as("node"), expr("rank div outdeg").as("c"))
+        val in = contrib.groupBy(col("node")).agg(sum(col("c")).as("in_rank"))
+        val next = Barrier.pin(
+          nodes.join(in, Seq("node"), "left")
+            .select(col("node"),
+              (lit(150000L) + expr("coalesce(in_rank, 0L) * 85 div 100")).as("rank")))
+        // `next` is materialized: the superseded iteration's blocks are
+        // dead (the seed ranks are a projection of `nodes`, which release
+        // leaves to the scope)
+        Barrier.release(ranks)
+        ranks = next
+      }
+      ranks
     }
-    // the final ranks are checkpointed — the edge frame and the node
-    // invariant are dead
-    releaseBlocks(e)
-    releaseBlocks(nodes)
-    ranks
   }
 
   /** The q175 trade network: nation-level directed edges "a customer in
@@ -1059,13 +982,11 @@ object Components {
     // one checkpoint of the pair pipeline feeds BOTH the degree pass
     // (two references) and the triangle machinery (three more) — five
     // replays of an expensive candidate join otherwise
-    val rel = sessionReliable(edges)
-    if (rel) requireCheckpointDir(edges)
-    val e = materialize(edges.select(col("i"), col("j")), rel)
+    val e = Barrier.pin(edges.select(col("i"), col("j")))
     val deg = e.select(col("i").as("node"))
       .unionAll(e.select(col("j").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val tri = trianglesOfMaterialized(e, rel)
+    val tri = trianglesOfPinned(e)
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("tri"))
     deg.join(tri, Seq("node"), "left")

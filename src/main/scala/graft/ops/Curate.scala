@@ -59,17 +59,15 @@ object Curate {
     // isnotnull(doc_id) pushdown splitting the subtrees, so execution
     // re-shingled the corpus per consumer. Checkpoint it ONCE (r15 —
     // the q143/q197 discipline applied to the plain curation chain).
-    val docs = graft.Tables.documents(s, dir)
-    val rel = Components.sessionReliable(docs)
-    if (rel) Components.requireCheckpointDir(docs)
-    val hashed = Components.materialize(Dedup.hashedShinglesOf(docs), rel)
-    val dropped = Components.connectedComponents(
-        Dedup.minhashPairsOf(hashed).select(col("i"), col("j")))
-      .filter(col("id") =!= col("label"))
-      .select(col("id"))
     // connectedComponents checkpoints its input eagerly, so the shingle
-    // blocks are dead the moment it returns — release, don't leak
-    Components.releaseBlocks(hashed)
+    // blocks are dead the moment it returns
+    val dropped = Barrier.scoped { scope =>
+      val hashed = scope.pin(Dedup.hashedShinglesOf(graft.Tables.documents(s, dir)))
+      Components.connectedComponents(
+          Dedup.minhashPairsOf(hashed).select(col("i"), col("j")))
+        .filter(col("id") =!= col("label"))
+        .select(col("id"))
+    }
     TextAnalysis.textStats(s, dir)
       .filter(col("quality") >= MinQuality && col("n_words") >= MinWords)
       .join(dropped, col("doc_id") === col("id"), "left_anti")
@@ -174,9 +172,7 @@ object Curate {
     // execution re-shingled the corpus per consumer (the r12 bench's
     // 7.09s floor). Checkpoint it ONCE (q197's lshRecallOf discipline)
     // so every consumer reads the materialized (doc_id, hs) blocks.
-    val rel = Components.sessionReliable(docs)
-    if (rel) Components.requireCheckpointDir(docs)
-    val hashed = Components.materialize(Dedup.hashedShinglesOf(docs), rel)
+    val hashed = Barrier.pin(Dedup.hashedShinglesOf(docs))
     val dropped = Components.connectedComponents(
         Dedup.minhashPairsOf(hashed).select(col("i"), col("j")))
       .filter(col("id") =!= col("label"))

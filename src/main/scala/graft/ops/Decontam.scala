@@ -729,9 +729,7 @@ object Decontam {
     // affected into the re-cut semi-join AND the pass-through anti-join
     // — each re-derived its aggregation per consumer otherwise. Both are
     // ∝ |delta| / |affected| by the refresh contract.
-    val rel = Components.sessionReliable(corpus)
-    if (rel) Components.requireCheckpointDir(corpus)
-    val dh = Components.materialize(evalShingleHashes(deltaEval), rel)
+    val dh = Barrier.pin(evalShingleHashes(deltaEval))
     val affected0 = corpus.select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
       .select(col("doc_id"), explode(transform(
@@ -740,7 +738,7 @@ object Decontam {
             get(col("w"), i + 2), get(col("w"), i + 3), get(col("w"), i + 4))))).as("h"))
       .join(broadcast(dh), Seq("h"), "left_semi")
       .select(col("doc_id")).distinct()
-    val affected = Components.materialize(affected0, rel)
+    val affected = Barrier.pin(affected0)
     val recut = decontamSpansHashed(
       corpus.join(affected, Seq("doc_id"), "left_semi"),
       evalH1.unionByName(dh).distinct(), pad, minWords)
@@ -807,9 +805,7 @@ object Decontam {
     val delta = docs.filter(col("doc_id") % 20 === 10)
     // E₁'s hash set feeds the standing span cut AND the refresh's hash
     // union — checkpoint once (r14)
-    val __rel = Components.sessionReliable(docs)
-    if (__rel) Components.requireCheckpointDir(docs)
-    val evalH1 = Components.materialize(evalShingleHashes(eval1), __rel)
+    val evalH1 = Barrier.pin(evalShingleHashes(eval1))
     val pieces1 = decontamSpansHashed(corpus, evalH1)
     refreshDecontamSpans(corpus, pieces1, evalH1, delta)
       .orderBy(col("doc_id"), col("piece_id"))

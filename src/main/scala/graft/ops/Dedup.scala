@@ -530,9 +530,7 @@ object Dedup {
     // index + verification arrays on the truth side, signatures on the
     // candidate side — 6+ references): checkpoint it once, the
     // triangles()/pageRankInt discipline
-    val rel = Components.sessionReliable(docs)
-    if (rel) Components.requireCheckpointDir(docs)
-    val d = Components.materialize(docs, rel)
+    val d = Barrier.pin(docs)
     val truth = neardupJaccardPairs(d, maxDf, minJaccard)
       .select(col("i"), col("j"), lit(1L).as("t"))
     val cand = lshCandidatePairs(d)
@@ -1505,21 +1503,18 @@ object Dedup {
     // two full-corpus tokenize passes dwarf one duplication-bounded
     // materialization (accepted deliberately, OPTIMIZATION_r15.md).
     val docs = Tables.documents(s, dir)
-    val rel = graft.ops.Components.sessionReliable(docs)
-    if (rel) graft.ops.Components.requireCheckpointDir(docs)
     // (the pair pipeline itself evaluates exactly once inside this
     // materialization, so no extra shingle checkpoint is needed here —
     // measured net-negative at sf0.1: the block write/read of the
     // corpus-sized shingle arrays cost more than the ReuseExchange-
     // covered re-reference it saved)
-    val pairs = graft.ops.Components.materialize(
-      minhashPairs(s, dir).select(col("i"), col("j")), rel)
+    val pairs = Barrier.pin(minhashPairs(s, dir).select(col("i"), col("j")))
     val ids = pairs.select(col("i").as("doc_id"))
       .union(pairs.select(col("j").as("doc_id"))).distinct()
-    val wsets = graft.ops.Components.materialize(
+    val wsets = Barrier.pin(
       docs
         .join(ids, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("ws")), rel)
+        .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("ws")))
     val shared = size(array_intersect(col("wi"), col("wj")))
     pairs
       .join(wsets.select(col("doc_id").as("i"), col("ws").as("wi")), "i")

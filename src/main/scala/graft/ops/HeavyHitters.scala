@@ -291,12 +291,10 @@ object HeavyHitters {
     // the sketch matrix (per-group + pairwise HLL aggregations) AND the
     // exact replay (sizes + the intersection self-join) — each consumer
     // re-shingled the corpus from parquet otherwise (16 static scans)
-    val __rel = Components.sessionReliable(docs)
-    if (__rel) Components.requireCheckpointDir(docs)
-    val shingles = Components.materialize(
+    val shingles = Barrier.pin(
       Dedup.hashedShinglesOf(docs)
         .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-        .select(col("source"), explode(col("hs")).as("h")), __rel)
+        .select(col("source"), explode(col("hs")).as("h")))
     val est = sketchOverlap(shingles, col("source"), col("h"))
       .withColumnsRenamed(Map("group_a" -> "source_a", "group_b" -> "source_b"))
     // exact replay: per-doc shingle lists are distinct already, but the

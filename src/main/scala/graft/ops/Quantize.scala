@@ -332,9 +332,7 @@ object Quantize {
     // the 1-row codebook fans into TWO broadcasts (encode + probe
     // tables) — without a checkpoint each broadcast re-runs the full
     // posexplode codebook aggregation over the corpus (r14)
-    val rel = Components.sessionReliable(vectors)
-    if (rel) Components.requireCheckpointDir(vectors)
-    val cbRow = Components.materialize(frozenPqCodebook(vectors), rel)
+    val cbRow = Barrier.pin(frozenPqCodebook(vectors))
     val encoded = pqEncodeFrozen(vectors, cbRow)
       .select(col("vec_id"), col("codes"))
     val dt = transform(col("cb"), (cbS, i) =>
@@ -548,13 +546,9 @@ object Quantize {
     // codebook by the encode and probe-table broadcasts. cents and cbRow
     // are index-constant grain; res is one row per vector — exactly the
     // pieces a production build would persist anyway (writeAnnIndex).
-    val rel = Components.sessionReliable(emb)
-    if (rel) Components.requireCheckpointDir(emb)
-    val cents = Components.materialize(coarseListsOf(emb), rel)
-    val res = Components.materialize(
-      ivfResiduals(emb.select(col("vec_id"), col("v")), cents), rel)
-    val cbRow = Components.materialize(
-      frozenPqCodebook(res.select(col("vec_id"), col("v"))), rel)
+    val cents = Barrier.pin(coarseListsOf(emb))
+    val res = Barrier.pin(ivfResiduals(emb.select(col("vec_id"), col("v")), cents))
+    val cbRow = Barrier.pin(frozenPqCodebook(res.select(col("vec_id"), col("v"))))
     val encoded = ivfPqEncode(res, cbRow)
     val qs = emb.filter(col("vec_id") < probeMax)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
@@ -631,17 +625,12 @@ object Quantize {
     // checkpoint the build invariants once (r14, the ivfPqSearch
     // discipline): the three write ACTIONS otherwise each re-derive
     // their upstream pieces (cents ×3, res ×2, cbRow ×2 full-corpus
-    // passes). All actions finish inside this call, so the blocks are
-    // released before returning — in a finally (r15, ADVICE r14): a
-    // failed write must not pin the blocks for the rest of the session.
-    val rel = Components.sessionReliable(emb)
-    if (rel) Components.requireCheckpointDir(emb)
-    val cents = Components.materialize(coarseListsOf(emb), rel)
-    val res = Components.materialize(
-      ivfResiduals(emb.select(col("vec_id"), col("v")), cents), rel)
-    val cbRow = Components.materialize(
-      frozenPqCodebook(res.select(col("vec_id"), col("v"))), rel)
-    try {
+    // passes). All actions finish inside this call, so the scope
+    // releases the blocks before returning, a failed write included.
+    Barrier.scoped { scope =>
+      val cents = scope.pin(coarseListsOf(emb))
+      val res = scope.pin(ivfResiduals(emb.select(col("vec_id"), col("v")), cents))
+      val cbRow = scope.pin(frozenPqCodebook(res.select(col("vec_id"), col("v"))))
       val s = emb.sparkSession
       val codes = ivfPqEncode(res, cbRow)
       StoredIndex.retire(s, path)
@@ -650,10 +639,6 @@ object Quantize {
       writeCodes(codes, codesSlices(emb), path)
       StoredIndex.commit(s, path, "ann", Seq("centroids" -> StoredIndex.schemaOf(cents),
         "codebook" -> StoredIndex.schemaOf(cbRow), "codes" -> StoredIndex.schemaOf(codes, "list_id")))
-    } finally {
-      Components.releaseBlocks(cents)
-      Components.releaseBlocks(res)
-      Components.releaseBlocks(cbRow)
     }
   }
 
@@ -815,13 +800,9 @@ object Quantize {
     // res1 / cbRow each fan into several consumers (codes1 AND the
     // refresh's delta re-listing + re-encode), re-running full corpus
     // passes per reference otherwise
-    val rel = Components.sessionReliable(emb)
-    if (rel) Components.requireCheckpointDir(emb)
-    val cents = Components.materialize(coarseListsOf(g1), rel)
-    val res1 = Components.materialize(
-      ivfResiduals(g1.select(col("vec_id"), col("v")), cents), rel)
-    val cbRow = Components.materialize(
-      frozenPqCodebook(res1.select(col("vec_id"), col("v"))), rel)
+    val cents = Barrier.pin(coarseListsOf(g1))
+    val res1 = Barrier.pin(ivfResiduals(g1.select(col("vec_id"), col("v")), cents))
+    val cbRow = Barrier.pin(frozenPqCodebook(res1.select(col("vec_id"), col("v"))))
     val codes1 = ivfPqEncode(res1, cbRow)
     // the change feed, by the same generation rules the oracle derives
     // g2 from; v carries the NEW (gen-2) embedding for added/changed

@@ -164,13 +164,11 @@ object Retrieval {
     // separate ACTIONS, so the full-vocabulary tokenize + (doc, term)
     // aggregation otherwise ran twice (df derives from f). Derivation of
     // df from the materialized frame is the identical expression
-    // bm25IndexPieces builds; blocks release before returning (try/
-    // finally so a failed write cannot pin them for the session).
+    // bm25IndexPieces builds; the scope releases the blocks before
+    // returning, a failed write included.
     val (f0, _, stats) = bm25IndexPieces(docs, None)
-    val rel = graft.ops.Components.sessionReliable(docs)
-    if (rel) graft.ops.Components.requireCheckpointDir(docs)
-    val f = graft.ops.Components.materialize(f0, rel)
-    try {
+    Barrier.scoped { scope =>
+      val f = scope.pin(f0)
       val dft = f.groupBy(col("t")).agg(count(when(col("tf") >= 1, 1)).as("df"))
       StoredIndex.retire(docs.sparkSession, path)
       f.repartition(col("t")).write.mode("overwrite").parquet(s"$path/postings")
@@ -178,7 +176,7 @@ object Retrieval {
       stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
       StoredIndex.commit(docs.sparkSession, path, "bm25", Seq("postings" -> StoredIndex.schemaOf(f),
         "df" -> StoredIndex.schemaOf(dft), "stats" -> StoredIndex.schemaOf(stats)))
-    } finally graft.ops.Components.releaseBlocks(f)
+    }
   }
 
   /** Re-open a [[writeBm25Index]] artifact: (postings, df, stats).
@@ -204,9 +202,11 @@ object Retrieval {
     * a delta doc_id already present in the index fails loudly (an
     * updated doc needs retire-then-add, the q218 discipline — silently
     * unioning it would double-count its term frequencies). The
-    * collision guard is one semi-join on the postings' distinct doc_ids;
-    * the base's segments are REFERENCED by the new generation's
-    * manifest, never copied or re-derived — work is ∝ |delta|. `outPath`
+    * collision guard semi-joins the postings' doc_ids against the
+    * broadcast delta doc_ids and stops at the first hit — no aggregate
+    * or exchange over the corpus-sized postings; the base's segments
+    * are REFERENCED by the new generation's manifest, never copied or
+    * re-derived — work is ∝ |delta|. `outPath`
     * must be neither `path` nor any segment root its manifest
     * references: writing there would overwrite a segment that every
     * generation listing it still reads. */
@@ -219,13 +219,11 @@ object Retrieval {
     // the delta tokenize + aggregation for each of the collision check,
     // the postings write, and the df write (dftD derives from fD)
     val (fD0, _, statsD) = bm25IndexPieces(deltaDocs, None)
-    val rel = graft.ops.Components.sessionReliable(deltaDocs)
-    if (rel) graft.ops.Components.requireCheckpointDir(deltaDocs)
-    val fD = graft.ops.Components.materialize(fD0, rel)
-    try {
+    Barrier.scoped { scope =>
+      val fD = scope.pin(fD0)
       val dftD = fD.groupBy(col("t")).agg(count(when(col("tf") >= 1, 1)).as("df"))
-      val collisions = f0.select(col("doc_id")).distinct()
-        .join(fD.select(col("doc_id")).distinct(), Seq("doc_id"))
+      val collisions = f0.select(col("doc_id"))
+        .join(broadcast(fD.select(col("doc_id")).distinct()), Seq("doc_id"), "left_semi")
         .limit(1).count()
       require(collisions == 0L,
         "refreshStoredBm25Index: delta contains doc_ids already in the index " +
@@ -256,7 +254,7 @@ object Retrieval {
           val p = base.described(s, n)
           p.copy(roots = p.roots :+ out)
         })
-    } finally graft.ops.Components.releaseBlocks(fD)
+    }
   }
 
   /** Serve BM25 top-k from a STORED index — bit-identical to the inline

@@ -416,19 +416,8 @@ object Similarity {
     * to keep band/sig columns out of the pair shuffle the other 99%
     * of runs. Zero-norm vectors carry no cosine, excluded up front.
     *
-    * BLOCK-LIFETIME CONTRACT (ADVICE r14, shared by every API that
-    * returns a LAZY frame over a localCheckpoint — ivfPqSearch,
-    * refreshComponents, refreshDecontamSpans, connectedComponents on
-    * its loop path (its driver finish returns a local relation and pins
-    * nothing), Analytics.basketLiftOf, TextAnalysis.shingleOverlapOf):
-    * the returned frame reads checkpoint blocks — here the
-    * bucketed-norm frame's — so they cannot be released by the API.
-    * They stay pinned until the caller drops every
-    * derived frame and unpersists (the Bench sweeps
-    * `getPersistentRDDs.values.foreach(_.unpersist())` between
-    * bursts). A long-lived session calling these APIs in a loop must
-    * sweep between calls or blocks accumulate for the session's life —
-    * the r10 leak mode documented at [[Components.releaseBlocks]]. */
+    * The returned frame reads the bucketed-norm frame's pinned blocks:
+    * the caller releases them ([[Barrier]]'s block-lifetime contract). */
   private def guardedBucketJoin(vectors: DataFrame, nPlanes: Int, maxBucketSize: Int)
                                (keep: (Column, Column) => Column): DataFrame = {
     require(nPlanes >= 1 && nPlanes <= 24,
@@ -440,12 +429,10 @@ object Similarity {
     // sides — each re-deriving the scan + projections otherwise (the
     // self-join's exchange dedups, but everything below the first
     // exchange re-ran per reference)
-    val rel = Components.sessionReliable(vectors)
-    if (rel) Components.requireCheckpointDir(vectors)
-    val n = Components.materialize(vectors.select(col("vec_id"), col("v"))
+    val n = Barrier.pin(vectors.select(col("vec_id"), col("v"))
       .withColumn("nrm", norm(col("v")))
       .filter(col("nrm") > 0)
-      .withColumn("bucket", bucket(col("v"), nPlanes)), rel)
+      .withColumn("bucket", bucket(col("v"), nPlanes)))
     val anyOversized = !n.groupBy(col("bucket")).agg(count(lit(1)).as("__graft_bsz"))
       .filter(col("__graft_bsz") > maxBucketSize).isEmpty
     val pairCols = (extra: Column) => Seq(
@@ -486,7 +473,7 @@ object Similarity {
     * non-oracle; AnnSpec measures recall@5 against the exact q27. */
   val q60AnnIvf: Q = Q.heavy("q60_ann_ivf") { (s, dir) =>
     import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+    import org.apache.spark.ml.functions.array_to_vector
     val e = vecs(s, dir).withColumn("mlVec", array_to_vector(col("v")))
     val km = new KMeans().setK(16).setSeed(30)
       .setFeaturesCol("mlVec").setPredictionCol("list_id").fit(e)
@@ -781,12 +768,10 @@ object Similarity {
     // per-label centroid aggregation + argmin assignment over the
     // corpus otherwise (32 static scans). cents rides inside the one
     // materialized evaluation; centers reads it back at k-row grain.
-    val __rel = Components.sessionReliable(emb)
-    if (__rel) Components.requireCheckpointDir(emb)
-    val cents = Components.materialize(cents0, __rel)
-    val indexed = Components.materialize(ivfAssign(corpus, cents)
+    val cents = Barrier.pin(cents0)
+    val indexed = Barrier.pin(ivfAssign(corpus, cents)
       .withColumn("nrm", norm(col("v")))
-      .select(col("vec_id"), col("v"), col("nrm"), col("list_id").as("cluster")), __rel)
+      .select(col("vec_id"), col("v"), col("nrm"), col("list_id").as("cluster")))
     val centers = cents.select(col("list_id").as("cluster"), col("centroid").as("mu"))
     val (members, bucketed, zeroNorm) = semDedupPrepAssigned(indexed, centers, 1 << 20)
     semDedupSweep(members, bucketed, zeroNorm, tau = 0.3)

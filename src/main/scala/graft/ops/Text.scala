@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import graft.{Q, Tables}

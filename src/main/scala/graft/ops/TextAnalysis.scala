@@ -497,16 +497,14 @@ object TextAnalysis {
     // consumer. CHECKPOINT it once (r15, guide §2.4): the self-join and
     // sizes then read the materialized (g, h) blocks — exactly the
     // per-subcorpus vocabulary table a production overlap run persists.
-    val rel = Components.sessionReliable(docs)
-    if (rel) Components.requireCheckpointDir(docs)
-    val wl = Components.materialize(docs
+    val wl = Barrier.pin(docs
       .select(col(groupCol).as("__graft_g"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
       .select(col("__graft_g"), explode(expr(
         """transform(sequence(0, size(w) - 5), i ->
           |  concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4]))""".stripMargin)).as("sh"))
       .select(col("__graft_g"), Hashes.hexLong(col("sh")).as("h"))
-      .distinct(), rel)
+      .distinct())
     val sz = wl.groupBy(col("__graft_g")).agg(count(lit(1)).as("n"))
     wl.as("a")
       .join(wl.as("b"),

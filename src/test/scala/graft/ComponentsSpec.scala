@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.Components
+import graft.ops.{Barrier, Components}
 
 /** Connected-components invariants: exact labels on hand graphs,
   * convergence past one propagation round (long chains), agreement
@@ -76,19 +76,19 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   test("reliable=true uses checkpointDir-backed checkpoints (and requires the dir)") {
-    loopOnly {
+    loopOnly(withConf(Seq(Barrier.ReliableConfKey -> "true")) {
       import spark.implicits._
       val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("i", "j")
-      // before a checkpoint dir exists the flag must fail fast, not
+      // before a checkpoint dir exists the conf must fail fast, not
       // surface as a job-time SparkException from inside the loop
       if (spark.sparkContext.getCheckpointDir.isEmpty) {
         intercept[IllegalArgumentException] {
-          Components.connectedComponents(edges, reliable = true)
+          Components.connectedComponents(edges)
         }
       }
       val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
       spark.sparkContext.setCheckpointDir(dir)
-      val got = Components.connectedComponents(edges, reliable = true)
+      val got = Components.connectedComponents(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
       // reliable checkpoints actually landed on disk (lineage survives
@@ -96,7 +96,7 @@ class ComponentsSpec extends AnyFunSuite {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(p => java.nio.file.Files.isRegularFile(p)).count()
       assert(wrote > 0, s"expected RDD checkpoint files under $dir")
-    }
+    })
   }
 
   test("ReliableConfKey session conf upgrades every checkpoint site (CC + triangles)") {
@@ -104,7 +104,7 @@ class ComponentsSpec extends AnyFunSuite {
       import spark.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-conf").toString
       spark.sparkContext.setCheckpointDir(dir)
-      spark.conf.set(Components.ReliableConfKey, "true")
+      spark.conf.set(Barrier.ReliableConfKey, "true")
       try {
         val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("i", "j")
         // no per-call flag anywhere — the conf alone must flip both the
@@ -118,7 +118,7 @@ class ComponentsSpec extends AnyFunSuite {
         val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
           .filter(p => java.nio.file.Files.isRegularFile(p)).count()
         assert(wrote > 0, s"expected reliable checkpoint files under $dir")
-      } finally spark.conf.unset(Components.ReliableConfKey)
+      } finally spark.conf.unset(Barrier.ReliableConfKey)
     }
   }
 
@@ -210,8 +210,8 @@ class ComponentsSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     try {
-      val (ckptJobs, e) = jobsOf(edges.select($"i", $"j").localCheckpoint())
-      Components.releaseBlocks(e)
+      val (ckptJobs, e) = jobsOf(Barrier.pin(edges.select($"i", $"j")))
+      Barrier.release(e)
       val (driverJobs, got) = jobsOf(Components.connectedComponents(edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(driverJobs - ckptJobs <= 2, s"driver finish ran $driverJobs jobs, checkpoint $ckptJobs")

@@ -69,7 +69,6 @@ class RegistrySpec extends AnyFunSuite {
       Graft.cmsFrequencies(docs, col("v"), docs, col("v"), width = 64)
       Graft.bpeMergesBatched(docs, 2, maxBatch = 2)
       Graft.bloomDecontaminate(docs, docs, bloomBits = 1024L, bloomHashes = 2)
-      Graft.connectedComponents(docs, reliable = false)
       ()
     }
     assert(compileTimeKnobCheck _ != null) // defined ⇒ compiled ⇒ knobs exist
