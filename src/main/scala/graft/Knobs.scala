@@ -5,15 +5,17 @@ package graft
   * exposes it. Each knob is a defaulted, `require`-guarded parameter on
   * its facade method(s); nothing here needs a fork to change.
   *
-  * RegistrySpec machine-checks the table two ways: the README "Scale
-  * knobs" section must byte-match [[markdown]], and a compile-time
-  * block passes every knob BY NAME to its facade method — a knob that
-  * loses its parameter breaks the build, not just the docs.
+  * RegistrySpec machine-checks the table two ways: the table rows of
+  * the README "Scale knobs" section must equal [[markdown]]'s lines,
+  * and a compile-time block passes every knob BY NAME to its facade
+  * method — a knob that loses its parameter breaks the build, not just
+  * the docs.
   *
   * Deliberately FIXED constants (formats, not knobs — changing them
   * invalidates stored state or the DuckDB oracle parity):
-  *  - MinHash signature/banding: 16 hashes × 4 bands (band-index and
-  *    alert format shared by q26/q83/`nearDupBandIndex`).
+  *  - MinHash signature/banding: 16 hashes × 4 bands, owned by
+  *    [[ops.Dedup]] alone (its band derivation and Jaccard verify serve
+  *    q26/q83, the band index and the streaming gate).
   *  - HLL register count: 4096 (stored sketches from [[Graft.distinctSketch]]
   *    must merge byte-compatibly across runs).
   *  - LSH sub-bucket bands/bits: 4 × 16 (internal to the oversized

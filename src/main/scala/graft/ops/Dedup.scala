@@ -232,11 +232,8 @@ object Dedup {
     jaccardCandidates(docs, maxDf)
       .join(docs.select(col("doc_id").as("i"), col("hs").as("hi")), "i")
       .join(docs.select(col("doc_id").as("j"), col("hs").as("hj")), "j")
-      .withColumn("inter", size(array_intersect(col("hi"), col("hj"))))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (size(col("hi")) + size(col("hj")) - col("inter")))
+      .select(col("i"), col("j"), jaccardOf(col("hi"), col("hj")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-      .select(col("i"), col("j"), col("jaccard"))
 
   private[graft] def neardupJaccard(docs: DataFrame, maxDf: Long, minJaccard: Double): DataFrame =
     neardupJaccardPairs(docs, maxDf, minJaccard)
@@ -418,15 +415,8 @@ object Dedup {
       .orderBy(col("i"), col("j"))
   }
 
-  /** MinHash + LSH banding near-dup — the 100 TB path (see object doc).
-    * 16 universal-hash min-hashes per doc, banded 4×4; docs sharing a
-    * band bucket become candidates; candidates verified with exact
-    * Jaccard ≥ 0.8. */
-  /** Oracle body for the full MinHash-LSH pair pipeline, WITHOUT the
-    * trailing ORDER BY — shared by q26 and (as a nested-WITH subquery) by
-    * the connected-components oracle in [[Components]]. */
   /** Shared sigs → bands → candidate-pairs CTE text (reused by the q26
-    * body and the q197 recall funnel). */
+    * body, the q83 incremental match and the q197 recall funnel). */
   private[graft] val oracleSigsBandsPairs: String = {
     val aList = MinhashAB.map(_._1).mkString("[", ", ", "]")
     val bList = MinhashAB.map(_._2).mkString("[", ", ", "]")
@@ -444,6 +434,9 @@ object Dedup {
        |  FROM bands a JOIN bands c ON a.b = c.b AND a.bkey = c.bkey AND a.doc_id < c.doc_id)""".stripMargin
   }
 
+  /** Oracle body for the full MinHash-LSH pair pipeline, WITHOUT the
+    * trailing ORDER BY — shared by q26 and (as a nested-WITH subquery) by
+    * the connected-components oracle in [[Components]]. */
   private[graft] val oracleMinhashPairsBody: String =
     oracleMinhashPairsBodyOver("documents")
 
@@ -468,45 +461,100 @@ object Dedup {
   private[graft] def minhashPairs(s: SparkSession, dir: String): DataFrame =
     minhashPairsOf(docHashedShingles(s, dir))
 
-  /** Distinct LSH candidate pairs (i < j) of a (doc_id, hs) set — the
-    * pre-verification band-bucket join shared by [[minhashPairsOf]] and
-    * the recall funnel [[q197LshRecall]]. */
-  private[graft] def lshCandidatePairs(docs: DataFrame): DataFrame = {
+  // ---- the band format ------------------------------------------------
+  // 16 min-hashes, 4 bands of 4: every MinHash path (batch self-join,
+  // two-sided incremental join, stored band index, streaming gate,
+  // skew probe) derives its keys and verifies its candidates HERE. The
+  // key strings are stored state (band index docs/ and bands/) and
+  // mirror the oracle's `bands` CTE, so they must never change.
+
+  /** (doc_id, hs) → (doc_id, hs, sig): one native pass per document
+    * ([[graft.expressions.MinHashSig]]) computes all 16 mins in a
+    * single loop over hs — MinHashSigSpec asserts it equals the
+    * composed-HOF form. */
+  private def signed(docs: DataFrame): DataFrame = {
     val aLit = array(MinhashAB.map(ab => lit(ab._1)): _*)
     val bLit = array(MinhashAB.map(ab => lit(ab._2)): _*)
-    // One native pass per document ([[graft.expressions.MinHashSig]]):
-    // all 16 mins in a single loop over hs, vs 16 interpreted
-    // transform+array_min rounds — the composed-HOF equivalence is
-    // asserted by MinHashSigSpec.
-    val sigs = docs.select(
-      col("doc_id"),
+    docs.select(col("doc_id"), col("hs"),
       call_function("graft_minhash", col("hs"), aLit, bLit, lit(P)).as("sig"))
-    val bands = sigs.select(
-      col("doc_id"),
-      explode(transform(sequence(lit(0), lit(3)), b => struct(
-        b.as("b"),
-        concat_ws(",", slice(col("sig"), b * 4 + 1, lit(4)).cast("array<string>")).as("bkey")
-      ))).as("band"))
-      .select(col("doc_id"), col("band.b").as("b"), col("band.bkey").as("bkey"))
-    bands.as("a")
-      .join(bands.as("c"),
-        col("a.b") === col("c.b") && col("a.bkey") === col("c.bkey") &&
-          col("a.doc_id") < col("c.doc_id"))
+  }
+
+  /** The 4 band keys of a signature: slots 4b+1..4b+4 joined by ','.
+    * Written out per band, not as a lambda over the slots: Catalyst
+    * inlines a once-referenced producer into a lambda body, which would
+    * re-run the signature per band. */
+  private def bandKeys(sig: Column): Column =
+    array((0 until 4).map(b =>
+      concat_ws(",", slice(sig, b * 4 + 1, 4).cast("array<string>"))): _*)
+
+  /** (doc_id, hs) → (doc_id, hs, bkeys): the doc-grain band format, the
+    * stored band index's docs/ piece. */
+  private[graft] def bandKeysOf(docs: DataFrame): DataFrame =
+    signed(docs).select(col("doc_id"), col("hs"), bandKeys(col("sig")).as("bkeys"))
+
+  /** [[bandKeysOf]] exploded to one row per band: (doc_id, hs, bkeys, b,
+    * bkey). The generator reads the key expression, not the `bkeys`
+    * column: over a column, Catalyst infers a size(bkeys) > 0 filter and
+    * pushes it, signature and shingling included, below the
+    * projections. Callers that keep only (doc_id, b, bkey) prune the
+    * rest before any exchange. */
+  private[graft] def bandRowsOf(docs: DataFrame): DataFrame =
+    signed(docs).select(col("doc_id"), col("hs"), bandKeys(col("sig")).as("bkeys"),
+      posexplode(bandKeys(col("sig"))).as(Seq("b", "bkey")))
+
+  /** Exact Jaccard of two distinct-hash arrays — the verify of every
+    * near-dup candidate (band and inverted-index paths alike). Integer
+    * operands, one IEEE division: bit-equal to the oracle's. */
+  private[graft] def jaccardOf(x: Column, y: Column): Column = {
+    val inter = size(array_intersect(x, y))
+    inter.cast("double") / (size(x) + size(y) - inter)
+  }
+
+  /** Batch band join: distinct (i, j) over `a` × `c` (both (doc_id, hs))
+    * sharing a band bucket and passing `keep` (over `a.doc_id` /
+    * `c.doc_id`). The exchange carries doc_id, b, bkey only. */
+  private def bandCollisions(a: DataFrame, c: DataFrame, keep: Column): DataFrame = {
+    def keys(d: DataFrame) = bandRowsOf(d).select(col("doc_id"), col("b"), col("bkey"))
+    keys(a).as("a").join(keys(c).as("c"),
+        col("a.b") === col("c.b") && col("a.bkey") === col("c.bkey") && keep)
       .select(col("a.doc_id").as("i"), col("c.doc_id").as("j"))
       .distinct()
   }
 
-  /** Generic form over any (doc_id, hs) hashed-shingle set. */
-  private[graft] def minhashPairsOf(docs: DataFrame): DataFrame = {
-    val pairs = lshCandidatePairs(docs)
-    val inter = size(array_intersect(col("da.hs"), col("dc.hs")))
-    val jac = inter.cast("double") / (size(col("da.hs")) + size(col("dc.hs")) - inter)
-    pairs
-      .join(docs.as("da"), col("i") === col("da.doc_id"))
-      .join(docs.as("dc"), col("j") === col("dc.doc_id"))
-      .select(col("i"), col("j"), jac.as("jaccard"))
+  /** Batch verify: (i, j) candidates with i from `left`, j from `right`
+    * → (i, j, jaccard) with jaccard ≥ 0.8. */
+  private def verified(cand: DataFrame, left: DataFrame, right: DataFrame): DataFrame =
+    cand
+      .join(left.as("l"), col("i") === col("l.doc_id"))
+      .join(right.as("r"), col("j") === col("r.doc_id"))
+      .select(col("i"), col("j"), jaccardOf(col("l.hs"), col("r.hs")).as("jaccard"))
       .filter(col("jaccard") >= 0.8)
+
+  /** Stream-static verify over (incoming_id, existing_id, b, nhs,
+    * nbkeys, ehs, ebkeys) band-join rows → (incoming_id, existing_id,
+    * jaccard ≥ `minJaccard`). An append-mode stream cannot `distinct()`
+    * without state, so a pair colliding in k bands is kept once by
+    * keeping only the row whose band is the FIRST slot where the two key
+    * arrays agree (array_position is 1-based, b 0-based). */
+  private[graft] def firstBandVerified(cand: DataFrame, minJaccard: Double): DataFrame = {
+    val firstMatch = array_position(
+      zip_with(col("nbkeys"), col("ebkeys"), (x, y) => x === y), true)
+    cand
+      .filter(col("b") + 1 === firstMatch)
+      .select(col("incoming_id"), col("existing_id"),
+        jaccardOf(col("nhs"), col("ehs")).as("jaccard"))
+      .filter(col("jaccard") >= minJaccard)
   }
+
+  /** Distinct LSH candidate pairs (i < j) of a (doc_id, hs) set — the
+    * pre-verification band-bucket join shared by [[minhashPairsOf]] and
+    * the recall funnel [[q197LshRecall]]. */
+  private[graft] def lshCandidatePairs(docs: DataFrame): DataFrame =
+    bandCollisions(docs, docs, col("a.doc_id") < col("c.doc_id"))
+
+  /** Generic form over any (doc_id, hs) hashed-shingle set. */
+  private[graft] def minhashPairsOf(docs: DataFrame): DataFrame =
+    verified(lshCandidatePairs(docs), docs, docs)
 
   /** MinHash + LSH banding near-dup — the 100 TB path (see object doc).
     * 16 universal-hash min-hashes per doc, banded 4×4; docs sharing a
@@ -587,21 +635,6 @@ object Dedup {
     lshRecallOf(docHashedShingles(s, dir), MaxShingleDf, 0.8)
   }
 
-  /** (doc_id, b, bkey) LSH band rows for a hashed-shingle doc set. */
-  private def bandsOf(docs: DataFrame): DataFrame = {
-    val aLit = array(MinhashAB.map(ab => lit(ab._1)): _*)
-    val bLit = array(MinhashAB.map(ab => lit(ab._2)): _*)
-    docs
-      .select(col("doc_id"),
-        call_function("graft_minhash", col("hs"), aLit, bLit, lit(P)).as("sig"))
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), lit(3)), b => struct(
-          b.as("b"),
-          concat_ws(",", slice(col("sig"), b * 4 + 1, lit(4)).cast("array<string>")).as("bkey")
-        ))).as("band"))
-      .select(col("doc_id"), col("band.b").as("b"), col("band.bkey").as("bkey"))
-  }
-
   /** Incremental near-dup: match an INCOMING batch against an EXISTING
     * corpus — the daily-increment workflow (a production pipeline never
     * re-dedups the whole corpus; it checks the new 1 TB against the
@@ -613,47 +646,35 @@ object Dedup {
     * here by splitting `documents` on doc_id parity (even = existing,
     * odd = incoming); output = incoming docs that near-dup something
     * standing, with their best match. */
-  val q83IncrementalNeardup: Q = {
-    val aList = MinhashAB.map(_._1).mkString("[", ", ", "]")
-    val bList = MinhashAB.map(_._2).mkString("[", ", ", "]")
-    Q.sql(
-      "q83_incremental_neardup",
-      s"""WITH $oracleDocs,
-         |$oracleHashed,
-         |sigs AS (
-         |  SELECT doc_id,
-         |    list_transform(range(0, 16), j ->
-         |      list_min(list_transform(hs, h ->
-         |        ($aList[j+1] * (h % $P) + $bList[j+1]) % $P))) AS sig
-         |  FROM hashed),
-         |bands AS (
-         |  SELECT doc_id, b, array_to_string(sig[b*4+1 : b*4+4], ',') AS bkey
-         |  FROM sigs, (SELECT unnest(range(0, 4)) AS b)),
-         |cand AS (
-         |  SELECT DISTINCT e.doc_id AS i, n.doc_id AS j
-         |  FROM bands e JOIN bands n ON e.b = n.b AND e.bkey = n.bkey
-         |  WHERE e.doc_id % 2 = 0 AND n.doc_id % 2 = 1),
-         |scored AS (
-         |  SELECT c.j AS incoming_id, c.i AS existing_id,
-         |    CAST(len(list_intersect(de.hs, dn.hs)) AS DOUBLE)
-         |      / (len(de.hs) + len(dn.hs) - len(list_intersect(de.hs, dn.hs))) AS jaccard
-         |  FROM cand c JOIN hashed de ON de.doc_id = c.i JOIN hashed dn ON dn.doc_id = c.j
-         |  WHERE CAST(len(list_intersect(de.hs, dn.hs)) AS DOUBLE)
-         |      / (len(de.hs) + len(dn.hs) - len(list_intersect(de.hs, dn.hs))) >= 0.8)
-         |SELECT incoming_id, existing_id AS best_match, jaccard AS best_jaccard
-         |FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY incoming_id
-         |    ORDER BY jaccard DESC, existing_id) AS rn
-         |  FROM scored)
-         |WHERE rn = 1
-         |ORDER BY incoming_id""".stripMargin
-    ) { (s, dir) =>
-      val docs = docHashedShingles(s, dir)
-      incrementalPairsOf(
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 === 1))
-        .orderBy(col("incoming_id"))
-    }
+  val q83IncrementalNeardup: Q = Q.sql(
+    "q83_incremental_neardup",
+    s"""WITH $oracleDocs,
+       |$oracleHashed,
+       |$oracleSigsBandsPairs,
+       |cand AS (
+       |  SELECT DISTINCT e.doc_id AS i, n.doc_id AS j
+       |  FROM bands e JOIN bands n ON e.b = n.b AND e.bkey = n.bkey
+       |  WHERE e.doc_id % 2 = 0 AND n.doc_id % 2 = 1),
+       |scored AS (
+       |  SELECT c.j AS incoming_id, c.i AS existing_id,
+       |    CAST(len(list_intersect(de.hs, dn.hs)) AS DOUBLE)
+       |      / (len(de.hs) + len(dn.hs) - len(list_intersect(de.hs, dn.hs))) AS jaccard
+       |  FROM cand c JOIN hashed de ON de.doc_id = c.i JOIN hashed dn ON dn.doc_id = c.j
+       |  WHERE CAST(len(list_intersect(de.hs, dn.hs)) AS DOUBLE)
+       |      / (len(de.hs) + len(dn.hs) - len(list_intersect(de.hs, dn.hs))) >= 0.8)
+       |SELECT incoming_id, existing_id AS best_match, jaccard AS best_jaccard
+       |FROM (
+       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY incoming_id
+       |    ORDER BY jaccard DESC, existing_id) AS rn
+       |  FROM scored)
+       |WHERE rn = 1
+       |ORDER BY incoming_id""".stripMargin
+  ) { (s, dir) =>
+    val docs = docHashedShingles(s, dir)
+    incrementalPairsOf(
+      docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 === 1))
+      .orderBy(col("incoming_id"))
   }
 
   /** ALL verified cross pairs (i = existing doc, j = incoming doc,
@@ -662,20 +683,8 @@ object Dedup {
     * [[Components.refreshComponents]] consumes the FULL pair set:
     * every cross edge matters for the transitive closure, not just
     * each incoming doc's best one. */
-  private[graft] def crossVerifiedPairs(existing: DataFrame, incoming: DataFrame): DataFrame = {
-    val cand = bandsOf(existing).as("e")
-      .join(bandsOf(incoming).as("n"),
-        col("e.b") === col("n.b") && col("e.bkey") === col("n.bkey"))
-      .select(col("e.doc_id").as("i"), col("n.doc_id").as("j"))
-      .distinct()
-    val inter = size(array_intersect(col("de.hs"), col("dn.hs")))
-    val jac = inter.cast("double") / (size(col("de.hs")) + size(col("dn.hs")) - inter)
-    cand
-      .join(existing.as("de"), col("i") === col("de.doc_id"))
-      .join(incoming.as("dn"), col("j") === col("dn.doc_id"))
-      .select(col("i"), col("j"), jac.as("jaccard"))
-      .filter(col("jaccard") >= 0.8)
-  }
+  private[graft] def crossVerifiedPairs(existing: DataFrame, incoming: DataFrame): DataFrame =
+    verified(bandCollisions(existing, incoming, lit(true)), existing, incoming)
 
   /** Generic two-sided near-dup match over hashed-shingle sets: each
     * incoming doc's best verified match (jaccard ≥ 0.8) among the

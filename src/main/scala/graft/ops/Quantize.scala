@@ -590,23 +590,6 @@ object Quantize {
       .filter(col("rk") <= topK)
   }
 
-  /** Conf key: sub-splits per posting list for the `codes/` write.
-    * `repartition(list_id)` alone funnels each list into ONE task and
-    * ONE file — at 100 TB a hot list is tens of GB, both a write
-    * straggler and a file-size violation (guide §6: 128 MB–1 GB
-    * files). `codesSlices` > 1 salts the repartition with a
-    * deterministic vec_id hash so a list spreads over that many
-    * tasks/files; the local default 1 keeps the one-file-per-list
-    * shape the sf-scale bench and specs see. Production sets it to
-    * ceil(corpus_codes_bytes / (k lists × target_file_size)). */
-  private[graft] val CodesSlicesKey = "spark.graft.ann.codesSlices"
-
-  private def codesSlices(df: DataFrame): Int = {
-    val n = df.sparkSession.conf.getOption(CodesSlicesKey).map(_.trim.toInt).getOrElse(1)
-    require(n >= 1, s"$CodesSlicesKey must be >= 1, got $n")
-    n
-  }
-
   /** Persist the frozen IVF-PQ index as its three production tables
     * under `path`: `centroids/` (list_id, centroid — k rows),
     * `codebook/` (cb — ONE row, the m × k × subDim nested array) and
@@ -614,9 +597,7 @@ object Quantize {
     * vector, the ONLY corpus-sized piece), codes partitioned by
     * list_id so a served query's scan prunes to its probed posting
     * lists (nProbe of k directories — at 100 TB the other k − nProbe
-    * never leave disk). `repartition(list_id)` aligns task outputs
-    * with directory partitions (writeTokenShards' small-files
-    * discipline). Raw vectors are NOT stored — the index is the
+    * never leave disk). Raw vectors are NOT stored — the index is the
     * quantizers plus codes, exactly what [[ivfPqSearchFrom]] serves
     * from; [[refreshIvfPqCodes]] maintains `codes/` under a delta feed
     * with the quantizers frozen. The generation's manifest
@@ -636,16 +617,21 @@ object Quantize {
       StoredIndex.retire(s, path)
       cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
       cbRow.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-      writeCodes(codes, codesSlices(emb), path)
+      writeCodes(codes, path)
       StoredIndex.commit(s, path, "ann", Seq("centroids" -> StoredIndex.schemaOf(cents),
         "codebook" -> StoredIndex.schemaOf(cbRow), "codes" -> StoredIndex.schemaOf(codes, "list_id")))
     }
   }
 
-  /** `codes/` under `path`, partitioned by list_id and salted into
-    * `slices` files per list ([[CodesSlicesKey]]). */
-  private def writeCodes(codes: DataFrame, slices: Int, path: String): Unit =
-    codes.repartition(col("list_id"), pmod(xxhash64(col("vec_id")), lit(slices.toLong)))
+  /** `codes/` under `path`, partitioned by list_id. The REBALANCE hint
+    * shuffles on list_id, so a task's output covers few directories
+    * (the writeTokenShards small-files discipline), and lets AQE split
+    * a list whose map output exceeds
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` over several
+    * tasks and files: at 100 TB a hot list is tens of GB, which one
+    * task and one file would carry alone. Small lists keep one file. */
+  private def writeCodes(codes: DataFrame, path: String): Unit =
+    codes.hint("rebalance", col("list_id"))
       .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/codes")
 
   /** Re-open a [[writeAnnIndex]] artifact: (centroids, codebook row,
@@ -689,7 +675,7 @@ object Quantize {
     val (cents, cbRow, codes) = annPieces(s, base)
     val fresh = refreshIvfPqCodes(codes, delta, cents, cbRow)
     StoredIndex.retire(s, outPath)
-    writeCodes(fresh, codesSlices(delta), outPath)
+    writeCodes(fresh, outPath)
     StoredIndex.commit(s, outPath, "ann", Seq("codes" -> StoredIndex.schemaOf(fresh, "list_id")),
       Seq(base.described(s, "centroids"), base.described(s, "codebook")))
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types.DecimalType
 import graft.{Q, Tables}
-import graft.ops.StoredIndex
+import graft.ops.{Dedup, StoredIndex}
 
 /** Structured Streaming surface (SURVEY §2.11 — an extension beyond the
   * reference, which has no streaming; the driver's `events` table is the
@@ -598,7 +598,7 @@ object Streaming {
     * reuse across every micro-batch instead of re-shingling 100 TB of
     * standing text per trigger. */
   def standingBandIndex(standing: DataFrame): DataFrame =
-    bandRows(graft.ops.Dedup.hashedShinglesOf(standing))
+    Dedup.bandRowsOf(Dedup.hashedShinglesOf(standing))
 
   /** INCREMENTAL band-index maintenance — the q205 pairing the
     * [[nearDupStream]] scaladoc promises: instead of re-deriving the
@@ -642,7 +642,7 @@ object Streaming {
     // repartition re-shuffled the heaviest payload in the index (the
     // per-doc shingle arrays) a second time for an identical layout.
     val s = standing.sparkSession
-    val docs = docBands(graft.ops.Dedup.hashedShinglesOf(standing))
+    val docs = Dedup.bandKeysOf(Dedup.hashedShinglesOf(standing))
     val docsSchema = StoredIndex.schemaOf(docs)
     StoredIndex.retire(s, path)
     docs.write.mode("overwrite").parquet(s"$path/docs")
@@ -674,27 +674,13 @@ object Streaming {
   def nearDupServeStored(incoming: DataFrame, index: (DataFrame, DataFrame),
                          minJaccard: Double = 0.8): DataFrame = {
     val (bands, docs) = index
-    val n = bandRows(graft.ops.Dedup.hashedShinglesRowLocal(incoming))
-      .select(col("doc_id").as("incoming_id"), col("hs").as("nhs"),
-        col("bkeys").as("nbkeys"), col("b"), col("bkey"))
-    val cand = n.join(bands
-        .select(col("doc_id").as("existing_id"), col("b"), col("bkey")),
+    val cand = probeRows(incoming)
+      .join(bands.select(col("doc_id").as("existing_id"), col("b"), col("bkey")),
         Seq("b", "bkey"))
       .filter(col("incoming_id") =!= col("existing_id"))
-    val withState = cand.join(docs
-        .select(col("doc_id").as("existing_id"), col("hs").as("ehs"),
-          col("bkeys").as("ebkeys")), Seq("existing_id"))
-    // same exactly-once-per-pair rule as the inline gate: keep only the
-    // row whose band is the FIRST slot where the two key arrays agree
-    val firstMatch = array_position(
-      zip_with(col("nbkeys"), col("ebkeys"), (x, y) => x === y), true)
-    val inter = size(array_intersect(col("nhs"), col("ehs")))
-    val jac = inter.cast("double") /
-      (size(col("nhs")) + size(col("ehs")) - inter)
-    withState
-      .filter(col("b") + 1 === firstMatch)
-      .select(col("incoming_id"), col("existing_id"), jac.as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+      .join(docs.select(col("doc_id").as("existing_id"), col("hs").as("ehs"),
+        col("bkeys").as("ebkeys")), Seq("existing_id"))
+    Dedup.firstBandVerified(cand, minJaccard)
   }
 
   /** Refresh a STORED [[writeBandIndex]] artifact from a snapshot delta
@@ -711,14 +697,13 @@ object Streaming {
     val (bands, docs) = bandPieces(s, base)
     val drop = delta.filter(col("status").isin("removed", "changed"))
       .select(col("doc_id"))
-    val freshDocs = docBands(graft.ops.Dedup.hashedShinglesOf(
-      delta.filter(col("status").isin("added", "changed"))
-        .select(col("doc_id"), col("text"))))
-    val docsOut = docs.join(drop, Seq("doc_id"), "left_anti").unionByName(freshDocs)
+    val fresh = Dedup.hashedShinglesOf(delta.filter(col("status").isin("added", "changed"))
+      .select(col("doc_id"), col("text")))
+    val docsOut = docs.join(drop, Seq("doc_id"), "left_anti")
+      .unionByName(Dedup.bandKeysOf(fresh))
       .repartition(col("doc_id"))
     val bandsOut = bands.join(drop, Seq("doc_id"), "left_anti")
-      .unionByName(freshDocs
-        .select(col("doc_id"), posexplode(col("bkeys")).as(Seq("b", "bkey"))))
+      .unionByName(Dedup.bandRowsOf(fresh).select(col("doc_id"), col("b"), col("bkey")))
       .repartition(col("b"), col("bkey"))
     StoredIndex.retire(s, outPath)
     docsOut.write.mode("overwrite").parquet(s"$outPath/docs")
@@ -826,23 +811,20 @@ object Streaming {
     * the join key, re-read but never re-derived per micro-batch. */
   def nearDupStreamIndexed(incoming: DataFrame, standingIndex: DataFrame,
                            minJaccard: Double = 0.8): DataFrame = {
-    val e = standingIndex
-    val n = bandRows(graft.ops.Dedup.hashedShinglesRowLocal(incoming))
-    val joined = n.as("n").join(e.as("e"),
-      col("n.b") === col("e.b") && col("n.bkey") === col("e.bkey") &&
-        col("n.doc_id") =!= col("e.doc_id"))
-    // 1-based slot of the first agreeing band vs the join row's 0-based b
-    val firstMatch = array_position(
-      zip_with(col("n.bkeys"), col("e.bkeys"), (x, y) => x === y), true)
-    val inter = size(array_intersect(col("n.hs"), col("e.hs")))
-    val jac = inter.cast("double") /
-      (size(col("n.hs")) + size(col("e.hs")) - inter)
-    joined
-      .filter(col("n.b") + 1 === firstMatch)
-      .select(col("n.doc_id").as("incoming_id"),
-        col("e.doc_id").as("existing_id"), jac.as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    val cand = probeRows(incoming)
+      .join(standingIndex.select(col("doc_id").as("existing_id"), col("hs").as("ehs"),
+        col("bkeys").as("ebkeys"), col("b"), col("bkey")), Seq("b", "bkey"))
+      .filter(col("incoming_id") =!= col("existing_id"))
+    Dedup.firstBandVerified(cand, minJaccard)
   }
+
+  /** An incoming (doc_id, text) batch as row-local band rows (no
+    * aggregation barrier: streaming-legal), named for the verify tail:
+    * (incoming_id, nhs, nbkeys, b, bkey). */
+  private def probeRows(incoming: DataFrame): DataFrame =
+    Dedup.bandRowsOf(Dedup.hashedShinglesRowLocal(incoming))
+      .select(col("doc_id").as("incoming_id"), col("hs").as("nhs"),
+        col("bkeys").as("nbkeys"), col("b"), col("bkey"))
 
   /** Streaming ingest DECONTAMINATION gate — q213's Bloom-pre-filtered
     * membership probe as a stream-static flow: each arriving (doc_id,
@@ -890,31 +872,6 @@ object Streaming {
       graft.ops.Dedup.hashedShinglesOf(evalSet)
         .select(explode(col("hs")).as("h")).distinct(),
       bloomBits, bloomHashes)
-
-  /** (doc_id, hs) → one row per LSH band: (doc_id, hs, bkeys, b, bkey),
-    * the full 4-slot key array carried for the first-match filter.
-    * Same signatures/banding as the batch q26/q83 path. */
-  /** Doc-grain signature frame: (doc_id, hs, bkeys) — one row per doc,
-    * the 4 LSH band keys as an array. The band-EXPLODED probe rows are
-    * [[bandRows]]; the stored index keeps THIS grain for the verify
-    * side (hs arrays once per doc, not once per band). */
-  private def docBands(hs: DataFrame): DataFrame = {
-    import graft.ops.Dedup.{MinhashAB, P}
-    val aLit = array(MinhashAB.map(ab => lit(ab._1)): _*)
-    val bLit = array(MinhashAB.map(ab => lit(ab._2)): _*)
-    hs
-      .select(col("doc_id"), col("hs"),
-        call_function("graft_minhash", col("hs"), aLit, bLit, lit(P)).as("sig"))
-      .select(col("doc_id"), col("hs"),
-        transform(sequence(lit(0), lit(3)), b =>
-          concat_ws(",", slice(col("sig"), b * 4 + 1, lit(4))
-            .cast("array<string>"))).as("bkeys"))
-  }
-
-  private def bandRows(hs: DataFrame): DataFrame =
-    docBands(hs)
-      .select(col("doc_id"), col("hs"), col("bkeys"),
-        posexplode(col("bkeys")).as(Seq("b", "bkey")))
 
   val all: Seq[Q] = Seq(q57SessionWindow, q92SlidingWindow, q93FollowWithin,
     q146FunnelDropouts, q188StreamDistinct, q198StreamTopk,

@@ -107,4 +107,30 @@ class AnnIndexSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSeq
     assert(servedRef == servedExp && servedRef.nonEmpty)
   }
+
+  test("a posting list over the advisory size splits into several codes/ files; codes and top-k read back equal") {
+    // four map tasks, so AQE can split a list's reduce partition along them
+    val src = emb.repartition(4)
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val path = java.nio.file.Files.createTempDirectory("annsplit").toString
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "256")
+    try Graft.writeAnnIndex(src, path) finally spark.conf.set(key, prev)
+    val filesPerList = new java.io.File(s"$path/codes").listFiles().filter(_.isDirectory)
+      .map(_.listFiles().count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")))
+    assert(filesPerList.max > 1, s"no posting list was split: ${filesPerList.toSeq}")
+    // the stored codes are exactly the corpus encoded under the stored quantizers
+    val (cents, cb, codes) = Graft.readAnnIndex(spark, path)
+    val expected = ops.Quantize.ivfPqEncode(
+        ops.Quantize.ivfResiduals(src.select(col("vec_id"), col("v")), cents), cb)
+      .select(col("vec_id"), col("list_id").cast("int").as("list_id"), col("codes"))
+    def codeRows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[Long](2))).sortBy(_._1).toSeq
+    assert(codeRows(codes) == codeRows(expected))
+    val queries = src.filter(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("v").as("qv"))
+    def served(c: org.apache.spark.sql.DataFrame) =
+      Graft.annSearchStored((cents, cb, c), queries, 2, 5).collect().map(_.toSeq).toSeq
+    val stored = served(codes)
+    assert(stored == served(expected) && stored.nonEmpty)
+  }
 }

@@ -79,6 +79,30 @@ class DedupSpec extends AnyFunSuite {
     assert(ab == graft.ops.Dedup.MinhashAB) // stable across calls
   }
 
+  test("band keys of a fixed 3-doc frame keep their stored-format strings") {
+    import spark.implicits._
+    // literal keys: stored band indexes (docs/ bkeys, bands/ bkey) hold
+    // these strings, so any change to shingling, hashing, the signature
+    // or the key layout must fail here, not only against the oracle
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "the quick brown fox jumps over the lazy dog once more today"),
+      (3L, "a completely different sentence about spark joins and shuffles here"))
+      .toDF("doc_id", "text")
+    val golden = Map(
+      1L -> Seq("130901902,575597873,208150722,88092651", "210083206,310102275,271120604,278796152",
+        "20679397,271996209,594343951,164564967", "20742927,20204932,389029391,44348004"),
+      2L -> Seq("130901902,575597873,591495777,88092651", "211465045,98543294,69572916,278796152",
+        "20679397,232548930,303758988,164564967", "20742927,20204932,283708487,44348004"),
+      3L -> Seq("211612662,623151646,165162522,552879624", "436531471,263891082,76525135,409439429",
+        "12244524,215642043,11599267,257713242", "66877093,81804699,648930108,28781505"))
+    val rows = Graft.nearDupBandIndex(docs).collect()
+    val bands = rows.map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("b"), r.getAs[String]("bkey")))
+    val expected = golden.toSeq.flatMap { case (d, ks) => ks.indices.map(b => (d, b, ks(b))) }
+    assert(bands.sorted.toSeq == expected.sorted)
+    assert(rows.forall(r => r.getAs[Seq[String]]("bkeys") == golden(r.getAs[Long]("doc_id"))))
+  }
+
   test("hot-shingle df cap kills quadratic candidate blowup, keeps near-dup recall") {
     import spark.implicits._
     // 60 docs: every one carries the same HOT shingle hash (999L) plus 9

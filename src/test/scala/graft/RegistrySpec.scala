@@ -46,8 +46,13 @@ class RegistrySpec extends AnyFunSuite {
   test("README scale-knob table matches Knobs; every knob is a real named facade parameter") {
     val readme = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("README.md")), java.nio.charset.StandardCharsets.UTF_8)
-    assert(readme.contains(Knobs.markdown),
-      "README '### Scale knobs' table drifted from graft.Knobs.markdown — regenerate it")
+    // every table row of the section, so a stale row or one after the
+    // generated table fails too
+    val section = readme.split("\n## ").find(_.startsWith("Scale knobs\n"))
+      .getOrElse(fail("README has no '## Scale knobs' section"))
+    val rows = section.linesIterator.filter(_.startsWith("|")).toSeq
+    assert(rows == Knobs.markdown.linesIterator.toSeq,
+      "README '## Scale knobs' table drifted from graft.Knobs.markdown — regenerate it")
     // COMPILE-TIME exposure proof: each knob passed by NAME. The defs
     // are never invoked (several trigger eager ML fits / loops); losing
     // a knob parameter fails compilation, which is the point.

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical scaling-slope probe (VERDICT r13 item 5): the 100 TB
@@ -35,30 +36,7 @@ object ScalingProbe {
     val big = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_10x")
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "graft-scaling-probe")
 
-    // ---- synthesize the 10× dir (idempotent: skip if already built) --
-    val marker = Paths.get(s"$big/.built_x$copies")
-    if (!Files.exists(marker)) {
-      Files.createDirectories(Paths.get(big))
-      // non-scaled tables symlink through so every registered query runs
-      for (t <- Seq("region", "nation", "customer", "supplier", "part",
-                    "orders", "lineitem", "events")) {
-        val link = Paths.get(s"$big/$t.parquet")
-        if (!Files.exists(link))
-          Files.createSymbolicLink(link, Paths.get(s"$base/$t.parquet"))
-      }
-      def scaleUp(table: String, idCol: String): Unit = {
-        val src = spark.read.parquet(s"$base/$table.parquet")
-        val off = src.agg(max(col(idCol))).head.getLong(0) + 1L
-        val gens = (0 until copies).map(g =>
-          src.withColumn(idCol, col(idCol) + lit(g.toLong * off)))
-        gens.reduce(_ unionByName _)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$big/$table.parquet")
-      }
-      scaleUp("documents", "doc_id")
-      scaleUp("embeddings", "vec_id")
-      Files.writeString(marker, s"copies=$copies\n")
-    }
+    buildScaledCorpus(spark, base, big, copies)
 
     // ---- time the families at each scale ----------------------------
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
@@ -98,5 +76,33 @@ object ScalingProbe {
     println(lines.mkString(",\n"))
     println("]}")
     spark.stop()
+  }
+
+  /** Synthesize the dup-heavy corpus under `big`: every `base` doc and
+    * vector × `copies` re-keyed twins, the other tables symlinked
+    * through so every registered query runs. Idempotent per `copies`. */
+  def buildScaledCorpus(spark: SparkSession, base: String, big: String, copies: Int): Unit = {
+    val marker = Paths.get(s"$big/.built_x$copies")
+    if (!Files.exists(marker)) {
+      Files.createDirectories(Paths.get(big))
+      for (t <- Seq("region", "nation", "customer", "supplier", "part",
+                    "orders", "lineitem", "events")) {
+        val link = Paths.get(s"$big/$t.parquet")
+        if (!Files.exists(link))
+          Files.createSymbolicLink(link, Paths.get(s"$base/$t.parquet"))
+      }
+      def scaleUp(table: String, idCol: String): Unit = {
+        val src = spark.read.parquet(s"$base/$table.parquet")
+        val off = src.agg(max(col(idCol))).head.getLong(0) + 1L
+        val gens = (0 until copies).map(g =>
+          src.withColumn(idCol, col(idCol) + lit(g.toLong * off)))
+        gens.reduce(_ unionByName _)
+          .repartition(32)
+          .write.mode("overwrite").parquet(s"$big/$table.parquet")
+      }
+      scaleUp("documents", "doc_id")
+      scaleUp("embeddings", "vec_id")
+      Files.writeString(marker, s"copies=$copies\n")
+    }
   }
 }

@@ -45,19 +45,9 @@ object SkewProbe {
       s""""guard":$guard,"total_pairs":${r.getAs[Any](5)},"hottest_key_pairs":$hotPairs}""")
   }
 
-  private def bandRows(docs: DataFrame): DataFrame = {
-    import ops.Dedup.{MinhashAB, P}
-    val aLit = array(MinhashAB.map(ab => lit(ab._1)): _*)
-    val bLit = array(MinhashAB.map(ab => lit(ab._2)): _*)
-    ops.Dedup.hashedShinglesOf(docs)
-      .select(col("doc_id"),
-        call_function("graft_minhash", col("hs"), aLit, bLit, lit(P)).as("sig"))
-      .select(col("doc_id"), explode(transform(sequence(lit(0), lit(3)), b => struct(
-        b.as("b"),
-        concat_ws(",", slice(col("sig"), b * 4 + 1, lit(4)).cast("array<string>")).as("bkey")
-      ))).as("band"))
-      .select(col("doc_id"), concat_ws("|", col("band.b"), col("band.bkey")).as("k"))
-  }
+  private def bandRows(docs: DataFrame): DataFrame =
+    ops.Dedup.bandRowsOf(ops.Dedup.hashedShinglesOf(docs))
+      .select(col("doc_id"), concat_ws("|", col("b"), col("bkey")).as("k"))
 
   private def hotClusterDocs(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
@@ -80,31 +70,15 @@ object SkewProbe {
     val s = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "graft-skew-probe")
     val sf01 = "/root/testdata/sf0.1"
     val big = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_10x")
-    // build the dup-heavy 10× corpus if absent (the ScalingProbe build:
-    // every doc/vector × 10 re-keyed twins; only the two scaled tables
-    // are needed here)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$big/documents.parquet"))) {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(big))
-      def scaleUp(table: String, idCol: String): Unit = {
-        val src = s.read.parquet(s"$sf01/$table.parquet")
-        val off = src.agg(max(col(idCol))).head.getLong(0) + 1L
-        (0 until 10).map(g => src.withColumn(idCol, col(idCol) + lit(g.toLong * off)))
-          .reduce(_ unionByName _)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$big/$table.parquet")
-      }
-      scaleUp("documents", "doc_id")
-      scaleUp("embeddings", "vec_id")
-    }
-    val bigBuilt = true
+    // the dup-heavy 10× corpus (only its two scaled tables are read here)
+    ScalingProbe.buildScaledCorpus(s, sf01, big, 10)
 
     // ---- band join (text near-dup family) ---------------------------
     // no per-key guard exists on this join; 'guard' below is the
     // REPORTING threshold only (what a single reduce task would own)
     stats(bandRows(Tables.documents(s, sf01).select(col("doc_id"), col("text"))),
       64, "band_sf01")
-    if (bigBuilt)
-      stats(bandRows(s.read.parquet(s"$big/documents.parquet")
+    stats(bandRows(s.read.parquet(s"$big/documents.parquet")
         .select(col("doc_id"), col("text"))), 64, "band_10x_duphevy")
     stats(bandRows(hotClusterDocs(s, sf01)), 64, s"band_hot_${HotCopies}x")
 
@@ -115,8 +89,7 @@ object SkewProbe {
         col("embedding").cast("array<double>").as("v"))
     stats(bucketized(vecs(sf01)).select(col("vec_id"), col("bucket").as("k")),
       DefaultMaxBucketSize, "bucket_sf01")
-    if (bigBuilt)
-      stats(bucketized(s.read.parquet(s"$big/embeddings.parquet")
+    stats(bucketized(s.read.parquet(s"$big/embeddings.parquet")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
         .select(col("vec_id"), col("bucket").as("k")),
         DefaultMaxBucketSize, "bucket_10x_duphevy")
