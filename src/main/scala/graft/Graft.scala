@@ -393,29 +393,30 @@ object Graft {
                          bloomHashes: Int = ops.Decontam.DefaultBloomHashes): DataFrame =
     ops.Decontam.bloomDecontaminate(corpus, evalSet, minFrac, bloomBits, bloomHashes)
 
-  /** [[bloomDecontaminate]]'s bitmap as STORED state: (word, bits,
-    * m_bits, k_hashes) rows to persist once per eval-suite release.
+  /** The decontamination index of an eval suite: (bitmap, shingles) —
+    * the format-stamped (word, bits, m_bits, k_hashes) Bloom words and
+    * the (h) table of distinct shingle hashes they derive from; the
+    * pieces [[writeBloomIndex]] persists and [[readBloomIndex]] opens.
     * `bloomBits`/`bloomHashes` are the index FORMAT — stamped into the
-    * index itself, and verified at refresh/probe time (a mismatch
+    * bitmap itself, and verified at refresh/probe time (a mismatch
     * raises instead of silently corrupting the index). */
   def bloomEvalIndex(evalSet: DataFrame,
                      bloomBits: Long = ops.Decontam.DefaultBloomBits,
-                     bloomHashes: Int = ops.Decontam.DefaultBloomHashes): DataFrame =
+                     bloomHashes: Int = ops.Decontam.DefaultBloomHashes): (DataFrame, DataFrame) =
     ops.Decontam.bloomEvalIndex(evalSet, bloomBits, bloomHashes)
 
   /** Incremental [[bloomEvalIndex]] refresh from ADDED eval docs only
-    * (work ∝ delta; byte-identical to a rebuild — bit_or is
-    * idempotent). Add-only: eval-doc removals need a rebuild, though a
-    * stale bit only costs a false positive the exact verify join
-    * removes — never a wrong answer. */
-  def refreshBloomIndex(index: DataFrame, deltaEval: DataFrame,
+    * (work ∝ delta; equal to a rebuild, the bitmap byte-identical —
+    * bit_or is idempotent). Add-only: eval-doc removals need a rebuild,
+    * though a stale bit only costs a false positive the exact verify
+    * join removes — never a wrong answer. */
+  def refreshBloomIndex(index: (DataFrame, DataFrame), deltaEval: DataFrame,
                         bloomBits: Long = ops.Decontam.DefaultBloomBits,
-                        bloomHashes: Int = ops.Decontam.DefaultBloomHashes): DataFrame =
+                        bloomHashes: Int = ops.Decontam.DefaultBloomHashes): (DataFrame, DataFrame) =
     ops.Decontam.refreshBloomIndex(index, deltaEval, bloomBits, bloomHashes)
 
-  /** Persist the decontamination index at `path`: shingles/ (the eval
-    * suite's distinct shingle hashes, hash-partitioned) + bitmap/ (the
-    * format-stamped Bloom words). No raw eval text in the artifact;
+  /** Persist the [[bloomEvalIndex]] pair at `path`: shingles/
+    * (hash-partitioned) + bitmap/. No raw eval text in the artifact;
     * the eval suite is shingled once. The [[writeAnnIndex]] discipline
     * for the contamination family. */
   def writeBloomIndex(evalSet: DataFrame, path: String,
@@ -429,19 +430,19 @@ object Graft {
   def readBloomIndex(s: org.apache.spark.sql.SparkSession, path: String): (DataFrame, DataFrame) =
     ops.Decontam.readBloomIndex(s, path)
 
-  /** Serve the contamination report from a stored [[writeBloomIndex]]
-    * artifact — bit-identical to the inline [[bloomDecontaminate]];
-    * new corpora never re-shingle the eval suite. */
+  /** Serve the contamination report from a [[bloomEvalIndex]] pair,
+    * stored or built — bit-identical to the inline
+    * [[bloomDecontaminate]]; new corpora never re-shingle the eval
+    * suite. */
   def bloomDecontaminateStored(corpus: DataFrame, index: (DataFrame, DataFrame),
                                minFrac: Double = 0.1,
                                bloomBits: Long = ops.Decontam.DefaultBloomBits,
                                bloomHashes: Int = ops.Decontam.DefaultBloomHashes): DataFrame =
     ops.Decontam.bloomDecontaminateStored(corpus, index, minFrac, bloomBits, bloomHashes)
 
-  /** Refresh a stored [[writeBloomIndex]] artifact with ADDED eval docs
-    * into a NEW, self-contained generation at `outPath` (never `path`)
-    * — work ∝ |delta|, the delta shingled once; the bitmap refresh is
-    * byte-identical to a rebuild (bit_or idempotence). */
+  /** [[refreshBloomIndex]] applied to a stored [[writeBloomIndex]]
+    * artifact, into a NEW, self-contained generation at `outPath`
+    * (never `path`). */
   def refreshStoredBloomIndex(s: org.apache.spark.sql.SparkSession, path: String,
                               deltaEval: DataFrame, outPath: String,
                               bloomBits: Long = ops.Decontam.DefaultBloomBits,
@@ -1202,40 +1203,33 @@ object Graft {
     * streaming state (a first-matching-band filter replaces the batch
     * path's distinct()). Same signatures/banding as [[nearDupPairs]] /
     * [[incrementalNearDups]]; works identically on a batch frame.
-    * This form re-bands the standing corpus every micro-batch — at
-    * scale, materialize [[nearDupBandIndex]] once and gate through
-    * [[nearDupStreamIndexed]] instead. */
+    * This form builds the [[nearDupBandIndex]] pair from the standing
+    * corpus every micro-batch and serves it like
+    * [[nearDupServeStored]] — at scale, persist the pair once with
+    * [[writeBandIndex]] and serve from [[readBandIndex]] instead. */
   def nearDupStream(incoming: DataFrame, standing: DataFrame,
                     minJaccard: Double = 0.8): DataFrame =
     streaming.Streaming.nearDupStream(incoming, standing, minJaccard)
 
-  /** Materialized standing-corpus band index for the streaming gate:
-    * (doc_id, hs, bkeys, b, bkey), one row per (doc, band). Persist it
-    * bucketed on (b, bkey) and refresh it incrementally (q83's
-    * manifest / [[snapshotDelta]]'s change feed), so the 100 TB
-    * standing side is a stored scan, never re-shingled per trigger. */
-  def nearDupBandIndex(standing: DataFrame): DataFrame =
+  /** The standing-corpus near-dup index: (bands, docs) — bands
+    * ((doc_id, b, bkey), one probe row per (doc, band)) and docs
+    * ((doc_id, hs, bkeys), the shingle state once per doc); the pieces
+    * [[writeBandIndex]] persists and [[readBandIndex]] opens. */
+  def nearDupBandIndex(standing: DataFrame): (DataFrame, DataFrame) =
     streaming.Streaming.standingBandIndex(standing)
 
-  /** [[nearDupStream]] over a prebuilt [[nearDupBandIndex]] frame —
-    * identical alerts, standing text never touched. */
-  def nearDupStreamIndexed(incoming: DataFrame, standingIndex: DataFrame,
-                           minJaccard: Double = 0.8): DataFrame =
-    streaming.Streaming.nearDupStreamIndexed(incoming, standingIndex, minJaccard)
-
-  /** Incrementally refresh a stored [[nearDupBandIndex]] from a
+  /** Incrementally refresh a [[nearDupBandIndex]] pair from a
     * [[snapshotDelta]] change feed ((doc_id, status, text) rows):
-    * removed/changed band rows anti-joined out, added/changed docs
-    * re-shingled from their new text, unchanged rows untouched — work
-    * ∝ |delta|, never a full-corpus rebuild. */
-  def refreshBandIndex(index: DataFrame, delta: DataFrame): DataFrame =
+    * removed/changed docs anti-joined out of both pieces, added/changed
+    * docs re-shingled from their new text, unchanged rows untouched —
+    * work ∝ |delta|, never a full-corpus rebuild. */
+  def refreshBandIndex(index: (DataFrame, DataFrame), delta: DataFrame): (DataFrame, DataFrame) =
     streaming.Streaming.refreshBandIndex(index, delta)
 
-  /** Persist the near-dup band index at `path`, NORMALIZED: docs/
-    * ((doc_id, hs, bkeys) — shingle state once per doc) + bands/
-    * ((doc_id, b, bkey) — the probe rows, partitioned by band key). No
-    * raw text in the artifact; the corpus is shingled once. The
-    * [[writeAnnIndex]] discipline for the LSH family. */
+  /** Persist the [[nearDupBandIndex]] pair at `path`: docs/ +
+    * bands/ (partitioned by band key). No raw text in the artifact;
+    * the corpus is shingled once. The [[writeAnnIndex]] discipline for
+    * the LSH family. */
   def writeBandIndex(standing: DataFrame, path: String): Unit =
     streaming.Streaming.writeBandIndex(standing, path)
 
@@ -1245,17 +1239,16 @@ object Graft {
   def readBandIndex(s: org.apache.spark.sql.SparkSession, path: String): (DataFrame, DataFrame) =
     streaming.Streaming.readBandIndex(s, path)
 
-  /** [[nearDupStream]] served from a stored [[writeBandIndex]] artifact
-    * — identical alerts, with only LSH-colliding candidates ever
-    * fetching their shingle state from docs/. */
+  /** [[nearDupStream]] served from a [[nearDupBandIndex]] pair, stored
+    * or built — only LSH-colliding candidates ever fetch their shingle
+    * state from docs. */
   def nearDupServeStored(incoming: DataFrame, index: (DataFrame, DataFrame),
                          minJaccard: Double = 0.8): DataFrame =
     streaming.Streaming.nearDupServeStored(incoming, index, minJaccard)
 
-  /** Refresh a stored [[writeBandIndex]] artifact from a
-    * [[snapshotDelta]] change feed into a NEW, self-contained
-    * generation at `outPath` (never `path`) — work ∝ |delta|,
-    * refreshed == rebuilt piece-for-piece. */
+  /** [[refreshBandIndex]] applied to a stored [[writeBandIndex]]
+    * artifact, into a NEW, self-contained generation at `outPath`
+    * (never `path`). */
   def refreshStoredBandIndex(s: org.apache.spark.sql.SparkSession, path: String,
                              delta: DataFrame, outPath: String): Unit =
     streaming.Streaming.refreshStoredBandIndex(s, path, delta, outPath)
@@ -1264,24 +1257,23 @@ object Graft {
     * stream-static verify, emitting one (doc_id, n_shingles, h) alert
     * per verified contaminated shingle — stateless, append-mode-safe
     * (per-doc rollup left to the consumer; the alert multiset equals
-    * the batch report's n_hit exactly). Convenience form deriving the
-    * index frames from `evalSet`; at scale use
-    * [[decontamStreamIndexed]] over persisted state. */
+    * the batch report's n_hit exactly). Convenience form building the
+    * [[bloomEvalIndex]] pair from `evalSet` every micro-batch; at scale
+    * persist the pair with [[writeBloomIndex]] and gate through
+    * [[decontamStreamIndexed]]. */
   def decontamStream(incoming: DataFrame, evalSet: DataFrame,
                      bloomBits: Long = ops.Decontam.DefaultBloomBits,
                      bloomHashes: Int = ops.Decontam.DefaultBloomHashes): DataFrame =
     streaming.Streaming.decontamStream(incoming, evalSet, bloomBits, bloomHashes)
 
-  /** [[decontamStream]] over the persisted index pair —
-    * [[bloomEvalIndex]]'s bitmap + the distinct eval shingle table —
-    * so the standing eval suite is never re-shingled per micro-batch;
-    * `bloomBits`/`bloomHashes` must match the index build. */
-  def decontamStreamIndexed(incoming: DataFrame, bloomIndex: DataFrame,
-                            evalShingles: DataFrame,
+  /** [[decontamStream]] over a [[bloomEvalIndex]] pair, stored
+    * ([[readBloomIndex]]) or built, so the standing eval suite is never
+    * re-shingled per micro-batch; `bloomBits`/`bloomHashes` must match
+    * the index build. */
+  def decontamStreamIndexed(incoming: DataFrame, index: (DataFrame, DataFrame),
                             bloomBits: Long = ops.Decontam.DefaultBloomBits,
                             bloomHashes: Int = ops.Decontam.DefaultBloomHashes): DataFrame =
-    streaming.Streaming.decontamStreamIndexed(
-      incoming, bloomIndex, evalShingles, bloomBits, bloomHashes)
+    streaming.Streaming.decontamStreamIndexed(incoming, index, bloomBits, bloomHashes)
 
   /** Windowed heavy hitters over a (ts, user_id) event frame: per
     * tumbling hour, the users with frequency strictly above

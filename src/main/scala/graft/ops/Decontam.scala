@@ -45,9 +45,7 @@ object Decontam {
     * callers can do with their own frames. */
   private[graft] def decontaminateHashed(corpusHashed: DataFrame, evalHashed: DataFrame,
                                          minFrac: Double = 0.1): DataFrame = {
-    val evalShingles = evalHashed
-      .select(explode(col("hs")).as("h")).distinct()
-      .withColumn("hit", lit(1L))
+    val evalShingles = distinctShingles(evalHashed).withColumn("hit", lit(1L))
     corpusHashed
       .select(col("doc_id"), size(col("hs")).cast("long").as("n_shingles"),
         explode(col("hs")).as("h"))
@@ -110,7 +108,7 @@ object Decontam {
 
   private[graft] def containmentHashed(evalHashed: DataFrame, corpusHashed: DataFrame,
                                        dirtyFrac: Double): DataFrame = {
-    val evalShingles = evalHashed.select(explode(col("hs")).as("h")).distinct()
+    val evalShingles = distinctShingles(evalHashed)
     val hits = corpusHashed.select(explode(col("hs")).as("h"))
       .join(broadcast(evalShingles), Seq("h"), "left_semi")
       .distinct().withColumn("hit", lit(1L))
@@ -175,8 +173,7 @@ object Decontam {
     * first(), no ordering anywhere). */
   private[graft] def bloomBitmap(evalHashed: DataFrame, mBits: Long,
                                  kHashes: Int): DataFrame =
-    bloomBitmapFromShingles(
-      evalHashed.select(explode(col("hs")).as("h")).distinct(), mBits, kHashes)
+    bloomBitmapFromShingles(distinctShingles(evalHashed), mBits, kHashes)
 
   /** [[bloomBitmap]] from an already-DISTINCT shingle-hash table (h) —
     * the grain the stored index keeps, so the write path derives the
@@ -223,34 +220,20 @@ object Decontam {
                                               minFrac: Double,
                                               mBits: Long,
                                               kHashes: Int): DataFrame =
-    bloomDecontaminateWithIndex(corpusHashed, evalHashed,
+    bloomDecontaminateCore(corpusHashed, distinctShingles(evalHashed),
       bloomBitmap(evalHashed, mBits, kHashes), minFrac, mBits, kHashes)
 
-  /** [[bloomDecontaminateHashed]] over a PREBUILT (possibly stored,
-    * possibly stale-superset) bitmap — the index-reuse entry point.
-    * Correctness only needs the bitmap to be a SUPERSET of the eval
-    * set's bits (no false negatives); extra bits — from a stale index
-    * whose eval docs were since removed, or any over-wide build — cost
-    * only false positives the exact verify join removes (BloomSpec
-    * proves the report through a whole-corpus superset bitmap equals
-    * the exact path). `mBits`/`kHashes` must match the index's build
-    * parameters — they are the index format. */
-  private[graft] def bloomDecontaminateWithIndex(corpusHashed: DataFrame,
-                                                 evalHashed: DataFrame,
-                                                 bitmap: DataFrame,
-                                                 minFrac: Double,
-                                                 mBits: Long,
-                                                 kHashes: Int): DataFrame = {
-    bloomDecontaminateCore(corpusHashed,
-      evalHashed.select(explode(col("hs")).as("h")).distinct(),
-      bitmap, minFrac, mBits, kHashes)
-  }
-
   /** The shared decontamination kernel over an already-DISTINCT eval
-    * shingle table — the grain both the inline path (explode+distinct
-    * just above) and the STORED index path (the persisted shingles/
-    * piece) feed, so serve-from-stored is the same plan as inline by
-    * construction. */
+    * shingle table — the grain both the inline path
+    * ([[bloomDecontaminateHashed]]) and the index pair
+    * ([[bloomEvalIndex]], stored or not) feed, so serve-from-stored is
+    * the same plan as inline by construction. Correctness only needs
+    * `bitmap` to be a SUPERSET of the eval shingles' bits (no false
+    * negatives); extra bits — from a stale index whose eval docs were
+    * since removed, or any over-wide build — cost only false positives
+    * the exact verify join removes (BloomSpec proves it through a
+    * whole-corpus superset bitmap). `mBits`/`kHashes` must match the
+    * bitmap's build parameters — they are the index format. */
   private[graft] def bloomDecontaminateCore(corpusHashed: DataFrame,
                                             evalShingles: DataFrame,
                                             bitmap: DataFrame,
@@ -292,14 +275,6 @@ object Decontam {
       Dedup.hashedShinglesOf(corpus), Dedup.hashedShinglesOf(evalSet),
       minFrac, mBits, kHashes)
 
-  /** The shared probe: keep only the rows of `df` (which must carry the
-    * 60-bit shingle hash as `h`) whose k Bloom positions are ALL set in
-    * `bitmap` — k broadcast hash joins against the ≤ mBits/64-row word
-    * table, map-side, inside whole-stage codegen; rows from words the
-    * bitmap never touched miss the left join (bits null → no hit).
-    * Emits `df`'s own columns. Row-local + broadcast-only ⇒ usable
-    * unchanged on a STREAMING frame (the [[graft.streaming.Streaming]]
-    * ingest gate), append-mode-safe — no aggregation, no watermark. */
   /** Gate a STORED index's persisted (m_bits, k_hashes) format columns
     * against the caller's parameters: any row with a mismatch raises at
     * execution time (folded into `bits` itself so column pruning can
@@ -320,6 +295,14 @@ object Decontam {
             "a mismatched probe/refresh would corrupt the no-false-negative invariant"))
         ).cast("long")).as("bits"))
 
+  /** The shared probe: keep only the rows of `df` (which must carry the
+    * 60-bit shingle hash as `h`) whose k Bloom positions are ALL set in
+    * `bitmap` — k broadcast hash joins against the ≤ mBits/64-row word
+    * table, map-side, inside whole-stage codegen; rows from words the
+    * bitmap never touched miss the left join (bits null → no hit).
+    * Emits `df`'s own columns. Row-local + broadcast-only ⇒ usable
+    * unchanged on a STREAMING frame (the [[graft.streaming.Streaming]]
+    * ingest gate), append-mode-safe — no aggregation, no watermark. */
   private[graft] def bloomFilterCandidates(df: DataFrame, rawBitmap: DataFrame,
                                            mBits: Long, kHashes: Int): DataFrame = {
     val bitmap = formatGated(rawBitmap, mBits, kHashes)
@@ -340,18 +323,21 @@ object Decontam {
     probed.filter(candidate).select(cols: _*)
   }
 
-  /** The Bloom bitmap as STORED state: (word, bits) rows a pipeline
-    * persists once per eval-suite release and reuses across every
-    * decontamination run — the q207/q208/q209/q211 stored-artifact
-    * discipline applied to the pre-filter index. */
+  /** The decontamination index of an eval suite — the one value the
+    * Bloom family builds, refreshes ([[refreshBloomIndex]]), serves
+    * ([[bloomDecontaminateStored]], the streaming gate) and persists
+    * ([[writeBloomIndex]] / [[readBloomIndex]]): (bitmap, shingles),
+    * where shingles is the suite's DISTINCT shingle-hash table (h) and
+    * bitmap its format-stamped (word, bits, m_bits, k_hashes) Bloom
+    * words, derived from that table. The build parameters travel WITH
+    * the bitmap (16 bytes on ≤ mBits/64 rows): refresh and probe verify
+    * them instead of trusting the caller to remember the format. */
   private[graft] def bloomEvalIndex(evalSet: DataFrame,
                                     mBits: Long = DefaultBloomBits,
-                                    kHashes: Int = DefaultBloomHashes): DataFrame = {
+                                    kHashes: Int = DefaultBloomHashes): (DataFrame, DataFrame) = {
     requireBloomParams(mBits, kHashes)
-    // the build parameters persist WITH the index (m_bits, k_hashes
-    // columns — 16 bytes on ≤ mBits/64 rows): refresh and probe verify
-    // them instead of trusting the caller to remember the format
-    stamped(bloomBitmap(Dedup.hashedShinglesOf(evalSet), mBits, kHashes), mBits, kHashes)
+    val shingles = evalShingleHashes(evalSet)
+    (stamped(bloomBitmapFromShingles(shingles, mBits, kHashes), mBits, kHashes), shingles)
   }
 
   private def requireBloomParams(mBits: Long, kHashes: Int): Unit = {
@@ -364,58 +350,57 @@ object Decontam {
   private def stamped(bits: DataFrame, mBits: Long, kHashes: Int): DataFrame =
     bits.select(col("word"), col("bits"), lit(mBits).as("m_bits"), lit(kHashes).as("k_hashes"))
 
-  /** Incremental [[bloomEvalIndex]] maintenance: band only the ADDED
-    * eval docs (work ∝ |delta|), OR the delta words into the standing
-    * bitmap at word grain (≤ mBits/64 rows). bit_or is associative /
-    * commutative / idempotent, so the refreshed index is BYTE-IDENTICAL
-    * to a rebuild over base ∪ delta — re-observed shingles move nothing
-    * (BloomSpec asserts bytes). Bits only turn ON: REMOVING an eval doc
-    * needs a rebuild from the surviving suite (the HLL-register
-    * contract, stated not hidden) — though a STALE bit is only a false
-    * positive the exact verify join removes anyway, so a too-big index
-    * degrades cost, never correctness. The standing index carries its
-    * build parameters as (m_bits, k_hashes) columns ([[bloomEvalIndex]]
-    * stamps them); a refresh whose `mBits`/`kHashes` disagree raises at
+  /** Incremental [[bloomEvalIndex]] maintenance with ADDED eval docs —
+    * work ∝ |delta|: the delta is shingled alone into one distinct hash
+    * frame, whose novel hashes one anti-join probe of the standing
+    * shingle table appends (bucket-pruned when shingles/ is a bucketed
+    * table at scale) and whose words the bitmap ORs in at word grain
+    * (≤ mBits/64 rows). bit_or is associative / commutative /
+    * idempotent, so the refreshed pair equals a rebuild over
+    * base ∪ delta, the bitmap BYTE-IDENTICAL — re-observed shingles
+    * move nothing (BloomSpec, StoredIndexSpec). Bits only turn ON:
+    * REMOVING an eval doc needs a rebuild from the surviving suite (the
+    * HLL-register contract, stated not hidden) — though a STALE bit is
+    * only a false positive the exact verify join removes anyway, so a
+    * too-big index degrades cost, never correctness. A standing bitmap
+    * whose (m_bits, k_hashes) disagree with `mBits`/`kHashes` raises at
     * execution — a mismatched kHashes would OR wrong bit positions into
     * a bitmap whose no-false-negative invariant downstream relies on. */
-  private[graft] def refreshBloomIndex(index: DataFrame, deltaEval: DataFrame,
+  private[graft] def refreshBloomIndex(index: (DataFrame, DataFrame), deltaEval: DataFrame,
                                        mBits: Long = DefaultBloomBits,
-                                       kHashes: Int = DefaultBloomHashes): DataFrame =
-    orDeltaBits(index, bloomBitmap(Dedup.hashedShinglesOf(deltaEval), mBits, kHashes),
-      mBits, kHashes)
-
-  /** OR a delta's (word, bits) rows into the format-gated standing
-    * bitmap `index`, stamped with the build parameters. */
-  private def orDeltaBits(index: DataFrame, deltaBits: DataFrame,
-                          mBits: Long, kHashes: Int): DataFrame = {
-    require(index.columns.contains("m_bits") && index.columns.contains("k_hashes"),
+                                       kHashes: Int = DefaultBloomHashes): (DataFrame, DataFrame) = {
+    val (bitmap, shingles) = index
+    require(bitmap.columns.contains("m_bits") && bitmap.columns.contains("k_hashes"),
       "stored bloom index lacks its (m_bits, k_hashes) format columns — " +
-        "persist indexes via bloomEvalIndex, or rebuild")
+        "build indexes via bloomEvalIndex, or rebuild")
     requireBloomParams(mBits, kHashes)
-    stamped(formatGated(index, mBits, kHashes).unionByName(deltaBits)
-      .groupBy(col("word"))
-      .agg(expr("bit_or(bits)").as("bits")), mBits, kHashes)
+    // the delta is shingled once: its distinct hashes feed both the
+    // novel-shingle append and the bitmap's delta words
+    val deltaH = evalShingleHashes(deltaEval)
+    (stamped(formatGated(bitmap, mBits, kHashes)
+        .unionByName(bloomBitmapFromShingles(deltaH, mBits, kHashes))
+        .groupBy(col("word"))
+        .agg(expr("bit_or(bits)").as("bits")), mBits, kHashes),
+      shingles.unionByName(deltaH.join(shingles, Seq("h"), "left_anti")))
   }
 
-  /** Persist the decontamination index — the [[graft.Graft.writeAnnIndex]]
-    * / writeBm25Index discipline for the contamination family: shingles/
-    * (h — the eval suite's DISTINCT 60-bit shingle hashes, hash-
-    * partitioned: the exact-verify side, which at "eval set = a whole
-    * held-out dump" scale is itself big, so no single-file funnel) and
-    * bitmap/ ((word, bits, m_bits, k_hashes) — ≤ mBits/64 rows by
-    * construction, written at its groupBy's own parallelism). Raw eval
-    * TEXT is never stored: the index is the decontamination-sufficient
-    * statistic, and shingle hashes don't invert. The eval suite is
-    * shingled ONCE — the bitmap derives from the shingle table as
-    * persisted, so the two pieces can never disagree. The generation's
-    * manifest ([[StoredIndex]]) is written last. */
+  /** Persist the [[bloomEvalIndex]] pair — the
+    * [[graft.Graft.writeAnnIndex]] / writeBm25Index discipline for the
+    * contamination family: shingles/ (h — hash-partitioned: the
+    * exact-verify side, which at "eval set = a whole held-out dump"
+    * scale is itself big, so no single-file funnel) and bitmap/ (≤
+    * mBits/64 rows by construction, written at its groupBy's own
+    * parallelism). Raw eval TEXT is never stored: the index is the
+    * decontamination-sufficient statistic, and shingle hashes don't
+    * invert. The eval suite is shingled ONCE — the bitmap derives from
+    * the shingle table as persisted, so the two pieces can never
+    * disagree. The generation's manifest ([[StoredIndex]]) is written
+    * last. */
   def writeBloomIndex(evalSet: DataFrame, path: String,
                       mBits: Long = DefaultBloomBits,
                       kHashes: Int = DefaultBloomHashes): Unit = {
     val s = evalSet.sparkSession
-    val shingles = Dedup.hashedShinglesOf(evalSet)
-      .select(explode(col("hs")).as("h")).distinct()
-      .repartition(col("h"))
+    val shingles = bloomEvalIndex(evalSet, mBits, kHashes)._2.repartition(col("h"))
     val shinglesSchema = StoredIndex.schemaOf(shingles)
     StoredIndex.retire(s, path)
     shingles.write.mode("overwrite").parquet(s"$path/shingles")
@@ -434,11 +419,12 @@ object Decontam {
   private def bloomPieces(s: SparkSession, g: StoredIndex.Generation): (DataFrame, DataFrame) =
     (g.frame(s, "bitmap"), g.frame(s, "shingles"))
 
-  /** Serve the q213 contamination report from a STORED index —
-    * bit-identical to the inline [[bloomDecontaminate]] over the same
-    * eval suite (BloomSpec proves it): the bitmap pre-filter and the
-    * exact verify join read the persisted pieces, the corpus is
-    * shingled fresh, and a new corpus never re-shingles the eval suite.
+  /** Serve the q213 contamination report from a [[bloomEvalIndex]]
+    * pair, stored or built — bit-identical to the inline
+    * [[bloomDecontaminate]] over the same eval suite (StoredIndexSpec
+    * proves it): the bitmap pre-filter and the exact verify join read
+    * the index pieces, the corpus is shingled fresh, and a new corpus
+    * never re-shingles the eval suite.
     * `mBits`/`kHashes` must match the index build — the stored format
     * columns raise on mismatch. */
   def bloomDecontaminateStored(corpus: DataFrame,
@@ -449,33 +435,19 @@ object Decontam {
     bloomDecontaminateCore(Dedup.hashedShinglesOf(corpus),
       index._2, index._1, minFrac, mBits, kHashes)
 
-  /** Refresh a STORED [[writeBloomIndex]] artifact with ADDED eval docs
-    * — work ∝ |delta|: the delta is shingled alone into one distinct
-    * hash frame, whose novel hashes one anti-join probe of the stored
-    * shingle table finds (bucket-pruned when shingles/ is a bucketed
-    * table at scale) and whose words the bitmap ORs in at word grain
-    * (the [[refreshBloomIndex]] merge — the refreshed bitmap is
-    * byte-identical to a rebuild because bit_or is idempotent). Writes
-    * a NEW, self-contained generation at `outPath` (artifacts are
-    * immutable generations — reading and overwriting the same parquet
-    * path in one job is unsafe), which may not be `path`. Removals need
-    * a rebuild from the surviving suite, same contract as
-    * [[refreshBloomIndex]]. */
+  /** [[refreshBloomIndex]] applied to a STORED [[writeBloomIndex]]
+    * artifact with ADDED eval docs. Writes a NEW, self-contained
+    * generation at `outPath` (artifacts are immutable generations —
+    * reading and overwriting the same parquet path in one job is
+    * unsafe), which may not be `path`. */
   def refreshStoredBloomIndex(s: SparkSession, path: String,
                               deltaEval: DataFrame, outPath: String,
                               mBits: Long = DefaultBloomBits,
                               kHashes: Int = DefaultBloomHashes): Unit = {
     val base = StoredIndex.load(s, path, "bloom")
     StoredIndex.requireNewGeneration("refreshStoredBloomIndex", s, base, outPath)
-    val (bitmap, shingles) = bloomPieces(s, base)
-    // the delta is shingled once: its distinct hashes feed both the
-    // novel-shingle append and the bitmap's delta words
-    val deltaH = Dedup.hashedShinglesOf(deltaEval)
-      .select(explode(col("hs")).as("h")).distinct()
-    val shinglesOut = shingles.unionByName(deltaH.join(shingles, Seq("h"), "left_anti"))
-      .repartition(col("h"))
-    val bitmapOut = orDeltaBits(bitmap, bloomBitmapFromShingles(deltaH, mBits, kHashes),
-      mBits, kHashes)
+    val (bitmapOut, shingles) = refreshBloomIndex(bloomPieces(s, base), deltaEval, mBits, kHashes)
+    val shinglesOut = shingles.repartition(col("h"))
     StoredIndex.retire(s, outPath)
     shinglesOut.write.mode("overwrite").parquet(s"$outPath/shingles")
     bitmapOut.write.mode("overwrite").parquet(s"$outPath/bitmap")
@@ -586,8 +558,12 @@ object Decontam {
     * decontam index grain ([[refreshDecontamSpans]] keeps it alongside
     * the pieces table so a delta refresh never re-reads old eval text). */
   private[graft] def evalShingleHashes(evalSet: DataFrame): DataFrame =
-    Dedup.hashedShinglesOf(evalSet)
-      .select(explode(col("hs")).as("h")).distinct()
+    distinctShingles(Dedup.hashedShinglesOf(evalSet))
+
+  /** The DISTINCT shingle hashes (h) of a hashed (doc_id, hs) frame —
+    * the eval-side grain of every decontamination path. */
+  private[graft] def distinctShingles(hashed: DataFrame): DataFrame =
+    hashed.select(explode(col("hs")).as("h")).distinct()
 
   /** [[decontamSpans]] over a pre-hashed DISTINCT eval 5-gram set. */
   private[graft] def decontamSpansHashed(corpus: DataFrame, evalH: DataFrame,

@@ -123,11 +123,22 @@ object Retrieval {
     val f = termFilter.fold(toks)(ts => toks.join(broadcast(ts), Seq("t")))
       .groupBy(col("doc_id"), col("dl"), col("t"))
       .agg(count(lit(1)).as("tf"))
-    // (doc_id, t) unique in f ⇒ count(*) ≡ countDistinct(doc_id); the
-    // tf >= 1 reference keeps this branch's partial agg shape shared
-    // with the join branch so the f exchange is reused (q129's trick)
-    val dft = f.groupBy(col("t")).agg(count(when(col("tf") >= 1, 1)).as("df"))
-    (f, dft, stats)
+    (f, dfOf(f), stats)
+  }
+
+  /** Per-term document frequencies (t, df) of postings `f`. (doc_id, t)
+    * is unique in f ⇒ count(*) ≡ countDistinct(doc_id); the tf >= 1
+    * reference keeps this branch's partial agg shape shared with the
+    * join branch so the f exchange is reused (q129's trick). */
+  private def dfOf(f: DataFrame): DataFrame =
+    f.groupBy(col("t")).agg(count(when(col("tf") >= 1, 1)).as("df"))
+
+  /** Write one index segment under `path`: postings/ and df/
+    * term-partitioned, the 1-row stats/ as one file. */
+  private def writeSegment(path: String, f: DataFrame, dft: DataFrame, stats: DataFrame): Unit = {
+    f.repartition(col("t")).write.mode("overwrite").parquet(s"$path/postings")
+    dft.repartition(col("t")).write.mode("overwrite").parquet(s"$path/df")
+    stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
   }
 
   /** BM25 top-k per query: `docs` (doc_id, text) × `queries` (query_id,
@@ -162,18 +173,14 @@ object Retrieval {
   def writeBm25Index(docs: DataFrame, path: String): Unit = {
     // checkpoint the postings ONCE (r14): the postings and df writes are
     // separate ACTIONS, so the full-vocabulary tokenize + (doc, term)
-    // aggregation otherwise ran twice (df derives from f). Derivation of
-    // df from the materialized frame is the identical expression
-    // bm25IndexPieces builds; the scope releases the blocks before
-    // returning, a failed write included.
+    // aggregation otherwise ran twice (df derives from f). The scope
+    // releases the blocks before returning, a failed write included.
     val (f0, _, stats) = bm25IndexPieces(docs, None)
     Barrier.scoped { scope =>
       val f = scope.pin(f0)
-      val dft = f.groupBy(col("t")).agg(count(when(col("tf") >= 1, 1)).as("df"))
+      val dft = dfOf(f)
       StoredIndex.retire(docs.sparkSession, path)
-      f.repartition(col("t")).write.mode("overwrite").parquet(s"$path/postings")
-      dft.repartition(col("t")).write.mode("overwrite").parquet(s"$path/df")
-      stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+      writeSegment(path, f, dft, stats)
       StoredIndex.commit(docs.sparkSession, path, "bm25", Seq("postings" -> StoredIndex.schemaOf(f),
         "df" -> StoredIndex.schemaOf(dft), "stats" -> StoredIndex.schemaOf(stats)))
     }
@@ -221,7 +228,7 @@ object Retrieval {
     val (fD0, _, statsD) = bm25IndexPieces(deltaDocs, None)
     Barrier.scoped { scope =>
       val fD = scope.pin(fD0)
-      val dftD = fD.groupBy(col("t")).agg(count(when(col("tf") >= 1, 1)).as("df"))
+      val dftD = dfOf(fD)
       val collisions = f0.select(col("doc_id"))
         .join(broadcast(fD.select(col("doc_id")).distinct()), Seq("doc_id"), "left_semi")
         .limit(1).count()
@@ -245,9 +252,7 @@ object Retrieval {
         .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
         .withColumn("avgdl_milli", expr("(sum_dl * 1000) DIV n"))
       StoredIndex.retire(s, outPath)
-      fD.repartition(col("t")).write.mode("overwrite").parquet(s"$outPath/postings")
-      dftD.repartition(col("t")).write.mode("overwrite").parquet(s"$outPath/df")
-      stats.coalesce(1).write.mode("overwrite").parquet(s"$outPath/stats")
+      writeSegment(outPath, fD, dftD, stats)
       val out = StoredIndex.qualify(s, outPath)
       StoredIndex.commit(s, outPath, "bm25", Seq("stats" -> StoredIndex.schemaOf(stats)),
         Seq("postings", "df").map { n =>

@@ -496,16 +496,15 @@ object Streaming {
     * memory, no late-data semantics to reason about.
     *
     * Scale: the standing side is re-evaluated per micro-batch (Spark
-    * stream-static semantics) — this convenience form re-shingles and
-    * re-bands the raw corpus every batch, which is fine for a small or
-    * slowly-read static side but wrong at 100 TB. There, materialize
-    * the band index ONCE with [[standingBandIndex]] (write it out
-    * bucketed on (b, bkey) so each micro-batch's join probes only
-    * matching buckets — it pairs naturally with q83's incremental
-    * manifest and q205's delta feed for keeping it current) and run
-    * the gate through [[nearDupStreamIndexed]], which accepts the
-    * prebuilt frame and touches no text. Re-deliveries of the same
-    * incoming doc across micro-batches are the source's concern —
+    * stream-static semantics) — this convenience form builds the
+    * [[standingBandIndex]] pair from the raw corpus every batch, which
+    * is fine for a small or slowly-read static side but wrong at
+    * 100 TB. There, persist the pair ONCE with [[writeBandIndex]] (keep
+    * it current with [[refreshStoredBandIndex]] from q205's delta feed)
+    * and serve the gate through [[nearDupServeStored]] — this form IS
+    * that serve over the in-memory pair, so both run one plan and touch
+    * no standing text once the pair is stored. Re-deliveries of the
+    * same incoming doc across micro-batches are the source's concern —
     * compose with [[dedupWithinWatermark]] upstream for at-least-once
     * sources.
     *
@@ -513,7 +512,7 @@ object Streaming {
     * frame; `standing` a static (doc_id, text) corpus. */
   def nearDupStream(incoming: DataFrame, standing: DataFrame,
                     minJaccard: Double = 0.8): DataFrame =
-    nearDupStreamIndexed(incoming, standingBandIndex(standing), minJaccard)
+    nearDupServeStored(incoming, standingBandIndex(standing), minJaccard)
 
   /** Segment-dedup INGEST GATE — the streaming face of the q221 family:
     * flag every `width`-word segment of an incoming doc whose content
@@ -591,50 +590,55 @@ object Streaming {
       .filter(col("adc") <= maxAdc)
   }
 
-  /** The materialized standing-corpus band index for
-    * [[nearDupStreamIndexed]]: one row per (doc, band) — (doc_id, hs,
-    * bkeys, b, bkey), the exact frame the gate's join probes. Compute
-    * once per corpus refresh, persist (bucketed on (b, bkey)), and
-    * reuse across every micro-batch instead of re-shingling 100 TB of
-    * standing text per trigger. */
-  def standingBandIndex(standing: DataFrame): DataFrame =
-    Dedup.bandRowsOf(Dedup.hashedShinglesOf(standing))
+  /** The standing-corpus near-dup index — the one value the band
+    * family builds, refreshes ([[refreshBandIndex]]), serves
+    * ([[nearDupServeStored]]) and persists ([[writeBandIndex]] /
+    * [[readBandIndex]]): (bands, docs), NORMALIZED so the heavy per-doc
+    * shingle arrays appear once, not once per band — bands ((doc_id,
+    * b, bkey), the probe rows, one per (doc, band)) and docs ((doc_id,
+    * hs, bkeys), the verify-side state, one per doc). The corpus is
+    * shingled once for both pieces. */
+  def standingBandIndex(standing: DataFrame): (DataFrame, DataFrame) = {
+    val hashed = Dedup.hashedShinglesOf(standing)
+    (Dedup.bandRowsOf(hashed).select(col("doc_id"), col("b"), col("bkey")),
+      Dedup.bandKeysOf(hashed))
+  }
 
-  /** INCREMENTAL band-index maintenance — the q205 pairing the
-    * [[nearDupStream]] scaladoc promises: instead of re-deriving the
+  /** INCREMENTAL band-index maintenance: instead of re-deriving the
     * full [[standingBandIndex]] on every corpus refresh (re-shingling
     * 100 TB of standing text to pick up a per-mille delta), apply a
     * snapshot delta ([[graft.ops.Merge.snapshotDeltaOf]]'s (key,
-    * status, text, …) output shape) to the stored index: band rows of
-    * `removed`/`changed` docs are anti-joined out, band rows for
-    * `added`/`changed` docs are derived from their NEW text only, and
-    * `unchanged` rows pass through untouched. Work is ∝ |delta|
-    * (shingling the added/changed text + one anti-join whose build
-    * side is the delta's id set — AQE broadcasts it when small), never
-    * ∝ |corpus|. StreamingSpec proves refreshed == rebuilt-from-
-    * scratch row-for-row, and that the gate alerts identically through
-    * either index. `delta` must carry (`doc_id`, `status`, `text`). */
-  def refreshBandIndex(index: DataFrame, delta: DataFrame): DataFrame = {
+    * status, text, …) output shape) to the index pair: rows of
+    * `removed`/`changed` docs are anti-joined out of both pieces, rows
+    * for `added`/`changed` docs are derived from their NEW text only,
+    * and `unchanged` rows pass through untouched. Work is ∝ |delta|
+    * (shingling the added/changed text + one anti-join per piece whose
+    * build side is the delta's id set — AQE broadcasts it when small),
+    * never ∝ |corpus|. StreamingSpec and StoredIndexSpec prove
+    * refreshed == rebuilt-from-scratch piece for piece, and that the
+    * gate alerts identically through either index. `delta` must carry
+    * (`doc_id`, `status`, `text`). */
+  def refreshBandIndex(index: (DataFrame, DataFrame),
+                       delta: DataFrame): (DataFrame, DataFrame) = {
+    val (bands, docs) = index
     val drop = delta.filter(col("status").isin("removed", "changed"))
       .select(col("doc_id"))
-    val fresh = delta.filter(col("status").isin("added", "changed"))
-      .select(col("doc_id"), col("text"))
-    index.join(drop, Seq("doc_id"), "left_anti")
-      .unionByName(standingBandIndex(fresh))
+    val (freshBands, freshDocs) = standingBandIndex(
+      delta.filter(col("status").isin("added", "changed")).select(col("doc_id"), col("text")))
+    (bands.join(drop, Seq("doc_id"), "left_anti").unionByName(freshBands),
+      docs.join(drop, Seq("doc_id"), "left_anti").unionByName(freshDocs))
   }
 
-  /** Persist the standing-corpus near-dup index — the writeAnnIndex /
-    * writeBm25Index discipline for the LSH family, NORMALIZED so the
-    * heavy per-doc shingle arrays are stored once, not once per band:
-    * docs/ ((doc_id, hs, bkeys) — the verify-side state, partitioned by
-    * doc_id so candidate fetches hash-prune) and bands/ ((doc_id, b,
-    * bkey) — the probe rows, partitioned by band key so a micro-batch's
-    * probe join reads matching buckets only; at real scale both become
-    * bucketed tables). Raw TEXT is never stored — shingle hashes and
-    * band keys are the dedup-sufficient statistic. The corpus is
-    * shingled ONCE: bands/ derives from docs/ as persisted (one
-    * posexplode of stored arrays), so the pieces can never disagree.
-    * The generation's manifest ([[StoredIndex]]) is written last. */
+  /** Persist the [[standingBandIndex]] pair — the writeAnnIndex /
+    * writeBm25Index discipline for the LSH family: docs/ partitioned by
+    * doc_id so candidate fetches hash-prune, bands/ partitioned by band
+    * key so a micro-batch's probe join reads matching buckets only (at
+    * real scale both become bucketed tables). Raw TEXT is never stored
+    * — shingle hashes and band keys are the dedup-sufficient statistic.
+    * The corpus is shingled ONCE: bands/ derives from docs/ as
+    * persisted (one posexplode of stored arrays), so the pieces can
+    * never disagree. The generation's manifest ([[StoredIndex]]) is
+    * written last. */
   def writeBandIndex(standing: DataFrame, path: String): Unit = {
     // no repartition(doc_id) before the docs/ write (r15, guide §2.4):
     // hashedShinglesOf ends in a groupBy(doc_id) aggregation, so the
@@ -642,7 +646,7 @@ object Streaming {
     // repartition re-shuffled the heaviest payload in the index (the
     // per-doc shingle arrays) a second time for an identical layout.
     val s = standing.sparkSession
-    val docs = Dedup.bandKeysOf(Dedup.hashedShinglesOf(standing))
+    val docs = standingBandIndex(standing)._2
     val docsSchema = StoredIndex.schemaOf(docs)
     StoredIndex.retire(s, path)
     docs.write.mode("overwrite").parquet(s"$path/docs")
@@ -662,15 +666,14 @@ object Streaming {
   private def bandPieces(s: SparkSession, g: StoredIndex.Generation): (DataFrame, DataFrame) =
     (g.frame(s, "bands"), g.frame(s, "docs"))
 
-  /** [[nearDupStream]] served from a STORED [[writeBandIndex]] artifact
-    * — identical alerts to the inline gate (StreamingSpec proves the
-    * row sets equal), with the candidate-bounded join order the
-    * normalized layout buys: the incoming batch's band rows probe
-    * bands/ first (rows ∝ LSH collisions), and only the CANDIDATES
-    * fetch their heavy (hs, bkeys) state from docs/ — at 100 TB the
-    * shingle arrays of non-colliding docs are never read, which the
-    * denormalized in-memory frame cannot promise. Both joins are
-    * stream-static equi-joins, append-mode-safe, no state store. */
+  /** The near-dup ingest gate served from a [[standingBandIndex]] pair,
+    * stored ([[readBandIndex]]) or built — [[nearDupStream]] is this
+    * serve over the in-memory pair. The join order is the one the
+    * normalized layout buys: the incoming batch's band rows probe bands
+    * first (rows ∝ LSH collisions), and only the CANDIDATES fetch their
+    * heavy (hs, bkeys) state from docs — at 100 TB the shingle arrays
+    * of non-colliding docs are never read. Both joins are stream-static
+    * equi-joins, append-mode-safe, no state store. */
   def nearDupServeStored(incoming: DataFrame, index: (DataFrame, DataFrame),
                          minJaccard: Double = 0.8): DataFrame = {
     val (bands, docs) = index
@@ -683,28 +686,16 @@ object Streaming {
     Dedup.firstBandVerified(cand, minJaccard)
   }
 
-  /** Refresh a STORED [[writeBandIndex]] artifact from a snapshot delta
-    * ([[refreshBandIndex]]'s contract: (doc_id, status, text)) — work ∝
-    * |delta|: removed/changed ids anti-join out of both pieces, only
-    * the added/changed TEXT is shingled, and the fresh rows append.
-    * Writes a NEW, self-contained artifact generation at `outPath`
-    * (never in-place: `outPath` may not be `path`).
-    * StreamingSpec proves refreshed == rebuilt piece-for-piece. */
+  /** [[refreshBandIndex]] applied to a STORED [[writeBandIndex]]
+    * artifact. Writes a NEW, self-contained artifact generation at
+    * `outPath` (never in-place: `outPath` may not be `path`). */
   def refreshStoredBandIndex(s: SparkSession, path: String,
                              delta: DataFrame, outPath: String): Unit = {
     val base = StoredIndex.load(s, path, "band")
     StoredIndex.requireNewGeneration("refreshStoredBandIndex", s, base, outPath)
-    val (bands, docs) = bandPieces(s, base)
-    val drop = delta.filter(col("status").isin("removed", "changed"))
-      .select(col("doc_id"))
-    val fresh = Dedup.hashedShinglesOf(delta.filter(col("status").isin("added", "changed"))
-      .select(col("doc_id"), col("text")))
-    val docsOut = docs.join(drop, Seq("doc_id"), "left_anti")
-      .unionByName(Dedup.bandKeysOf(fresh))
-      .repartition(col("doc_id"))
-    val bandsOut = bands.join(drop, Seq("doc_id"), "left_anti")
-      .unionByName(Dedup.bandRowsOf(fresh).select(col("doc_id"), col("b"), col("bkey")))
-      .repartition(col("b"), col("bkey"))
+    val (bands, docs) = refreshBandIndex(bandPieces(s, base), delta)
+    val docsOut = docs.repartition(col("doc_id"))
+    val bandsOut = bands.repartition(col("b"), col("bkey"))
     StoredIndex.retire(s, outPath)
     docsOut.write.mode("overwrite").parquet(s"$outPath/docs")
     bandsOut.write.mode("overwrite").parquet(s"$outPath/bands")
@@ -724,9 +715,9 @@ object Streaming {
     * lacks every 7th doc (→ `added`), gen 2 drops every 6th
     * (→ `removed`) and appends a clause to every 5th's text
     * (→ `changed`); everything else is `unchanged` and must pass
-    * through untouched. One (doc_id, band) row each, with the band key
-    * pinning all four minhash slots and n_shingles pinning the
-    * re-shingle. */
+    * through untouched. One (doc_id, band) row each — the refreshed
+    * bands piece joined to its docs piece — with the band key pinning
+    * all four minhash slots and n_shingles pinning the re-shingle. */
   val q207BandIndexRefresh: Q = Q.sql(
     "q207_band_index_refresh",
     s"""WITH g2 AS (
@@ -751,9 +742,9 @@ object Streaming {
         g1.withColumn("fp", md5(col("text"))),
         g2.withColumn("fp", md5(col("text"))), "doc_id", "fp")
       .select(col("doc_id"), col("status"), col("text"))
-    refreshBandIndex(standingBandIndex(g1), delta)
-      .select(col("doc_id"), col("b"), col("bkey"),
-        size(col("hs")).as("n_shingles"))
+    val (bands2, docs2) = refreshBandIndex(standingBandIndex(g1), delta)
+    bands2.join(docs2.select(col("doc_id"), size(col("hs")).as("n_shingles")), Seq("doc_id"))
+      .select(col("doc_id"), col("b"), col("bkey"), col("n_shingles"))
       .orderBy(col("doc_id"), col("b"))
   }
 
@@ -805,19 +796,6 @@ object Streaming {
       .orderBy(col("incoming_id"), col("existing_id"))
   }
 
-  /** [[nearDupStream]] over a PREBUILT standing band index (the
-    * [[standingBandIndex]] schema: doc_id, hs, bkeys, b, bkey) — the
-    * 100 TB form: the static side is a stored table scan, bucketed on
-    * the join key, re-read but never re-derived per micro-batch. */
-  def nearDupStreamIndexed(incoming: DataFrame, standingIndex: DataFrame,
-                           minJaccard: Double = 0.8): DataFrame = {
-    val cand = probeRows(incoming)
-      .join(standingIndex.select(col("doc_id").as("existing_id"), col("hs").as("ehs"),
-        col("bkeys").as("ebkeys"), col("b"), col("bkey")), Seq("b", "bkey"))
-      .filter(col("incoming_id") =!= col("existing_id"))
-    Dedup.firstBandVerified(cand, minJaccard)
-  }
-
   /** An incoming (doc_id, text) batch as row-local band rows (no
     * aggregation barrier: streaming-legal), named for the verify tail:
     * (incoming_id, nhs, nbkeys, b, bkey). */
@@ -841,36 +819,34 @@ object Streaming {
     * the batch report offline (StreamingSpec proves the alert multiset
     * equals q101's per-doc n_hit counts exactly).
     *
-    * The stored-state pair is [[graft.Graft.bloomEvalIndex]] (the
-    * bitmap) + the distinct eval shingle table — both persisted once
-    * per eval-suite release, refreshed via
-    * [[graft.Graft.refreshBloomIndex]]; a STALE superset bitmap only
-    * costs false-positive probes the verify join removes (BloomSpec).
-    * `bloomBits`/`bloomHashes` must match the index build — the index
-    * carries them as format columns and the probe raises on mismatch. */
-  def decontamStreamIndexed(incoming: DataFrame, bloomIndex: DataFrame,
-                            evalShingles: DataFrame,
+    * The index is the [[graft.Graft.bloomEvalIndex]] pair (bitmap,
+    * shingles) — persisted once per eval-suite release
+    * ([[graft.Graft.writeBloomIndex]]) and refreshed via
+    * [[graft.Graft.refreshStoredBloomIndex]]; a STALE superset bitmap
+    * only costs false-positive probes the verify join removes
+    * (BloomSpec). `bloomBits`/`bloomHashes` must match the index build
+    * — the bitmap carries them as format columns and the probe raises
+    * on mismatch. */
+  def decontamStreamIndexed(incoming: DataFrame, index: (DataFrame, DataFrame),
                             bloomBits: Long = graft.ops.Decontam.DefaultBloomBits,
                             bloomHashes: Int = graft.ops.Decontam.DefaultBloomHashes): DataFrame =
     graft.ops.Decontam.bloomFilterCandidates(
         graft.ops.Dedup.hashedShinglesRowLocal(incoming)
           .select(col("doc_id"), size(col("hs")).cast("long").as("n_shingles"),
             explode(col("hs")).as("h")),
-        bloomIndex, bloomBits, bloomHashes)
-      .join(evalShingles.select(col("h")), Seq("h"), "left_semi")
+        index._1, bloomBits, bloomHashes)
+      .join(index._2.select(col("h")), Seq("h"), "left_semi")
       .select(col("doc_id"), col("n_shingles"), col("h"))
 
-  /** Convenience form of [[decontamStreamIndexed]] deriving both stored
-    * frames from a static (doc_id, text) eval set — fine for tests and
-    * small suites; at scale persist the two index frames and pass them
-    * to the indexed form. */
+  /** [[decontamStreamIndexed]] over the [[graft.Graft.bloomEvalIndex]]
+    * pair built from a static (doc_id, text) eval set — fine for tests
+    * and small suites; at scale persist the pair and pass it to the
+    * indexed form. */
   def decontamStream(incoming: DataFrame, evalSet: DataFrame,
                      bloomBits: Long = graft.ops.Decontam.DefaultBloomBits,
                      bloomHashes: Int = graft.ops.Decontam.DefaultBloomHashes): DataFrame =
     decontamStreamIndexed(incoming,
       graft.ops.Decontam.bloomEvalIndex(evalSet, bloomBits, bloomHashes),
-      graft.ops.Dedup.hashedShinglesOf(evalSet)
-        .select(explode(col("hs")).as("h")).distinct(),
       bloomBits, bloomHashes)
 
   val all: Seq[Q] = Seq(q57SessionWindow, q92SlidingWindow, q93FollowWithin,

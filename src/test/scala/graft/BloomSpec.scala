@@ -68,47 +68,44 @@ class BloomSpec extends AnyFunSuite {
   test("refreshBloomIndex: delta refresh is byte-identical to a rebuild; stale bits stay harmless") {
     val base = evalSet.filter(col("doc_id") % 2 === 0)
     val delta = evalSet.filter(col("doc_id") % 2 =!= 0)
-    def bits(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def bits(index: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame))
+        : Map[Long, Long] =
+      index._1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val refreshed = bits(Graft.refreshBloomIndex(Graft.bloomEvalIndex(base), delta))
     val rebuilt = bits(Graft.bloomEvalIndex(evalSet))
     assert(refreshed == rebuilt, "refreshed bitmap != rebuilt bitmap")
     // idempotence: re-applying the same delta moves nothing
     val again = bits(Graft.refreshBloomIndex(Graft.bloomEvalIndex(evalSet), delta))
     assert(again == rebuilt, "re-observed shingles must not move the bitmap")
-    // a deliberately stale SUPERSET index (whole-corpus bits) still
-    // yields the EXACT report through the index-reuse entry point:
-    // extra bits are false positives the verify join removes
+    // a deliberately stale SUPERSET index (whole-corpus bits beside the
+    // eval suite's shingle table) still yields the EXACT report through
+    // the index serve path: extra bits are false positives the verify
+    // join removes
     val exact = collected(ops.Decontam.decontaminate(corpus, evalSet))
-    val staleBitmap = ops.Decontam.bloomBitmap(
-      ops.Dedup.hashedShinglesOf(docs), // every doc's shingles — superset
-      ops.Decontam.DefaultBloomBits, ops.Decontam.DefaultBloomHashes)
-    val viaStale = collected(ops.Decontam.bloomDecontaminateWithIndex(
-      ops.Dedup.hashedShinglesOf(corpus), ops.Dedup.hashedShinglesOf(evalSet),
-      staleBitmap, 0.1, ops.Decontam.DefaultBloomBits, ops.Decontam.DefaultBloomHashes))
+    val (staleBitmap, _) = Graft.bloomEvalIndex(docs) // every doc's shingles — superset
+    val (_, evalShingles) = Graft.bloomEvalIndex(evalSet)
+    val viaStale = collected(Graft.bloomDecontaminateStored(corpus, (staleBitmap, evalShingles)))
     assert(viaStale == exact)
-    assert(staleBitmap.count() >= Graft.bloomEvalIndex(evalSet).count())
+    assert(staleBitmap.count() >= Graft.bloomEvalIndex(evalSet)._1.count())
   }
 
   test("stored index carries its format; a mismatched refresh or probe fails loudly") {
     val idx = Graft.bloomEvalIndex(evalSet) // default (m_bits, k_hashes) stamped
-    assert(idx.columns.toSeq == Seq("word", "bits", "m_bits", "k_hashes"))
+    assert(idx._1.columns.toSeq == Seq("word", "bits", "m_bits", "k_hashes"))
     // refresh under different params must raise, not OR wrong positions
     // into a bitmap the no-false-negative invariant relies on
     val e1 = intercept[Exception] {
-      Graft.refreshBloomIndex(idx, evalSet, bloomBits = 1L << 20).collect()
+      Graft.refreshBloomIndex(idx, evalSet, bloomBits = 1L << 20)._1.collect()
     }
     assert(e1.getMessage.contains("format mismatch"), e1.getMessage)
-    // probing through the index-reuse entry point with wrong k: same
+    // probing through the index serve path with wrong k: same
     val e2 = intercept[Exception] {
-      ops.Decontam.bloomDecontaminateWithIndex(
-        ops.Dedup.hashedShinglesOf(corpus), ops.Dedup.hashedShinglesOf(evalSet),
-        idx, 0.1, ops.Decontam.DefaultBloomBits, 5).collect()
+      Graft.bloomDecontaminateStored(corpus, idx, bloomHashes = 5).collect()
     }
     assert(e2.getMessage.contains("format mismatch"), e2.getMessage)
     // a raw (word, bits) frame can no longer impersonate stored state
     val e3 = intercept[IllegalArgumentException] {
-      Graft.refreshBloomIndex(idx.select(col("word"), col("bits")), evalSet)
+      Graft.refreshBloomIndex((idx._1.select(col("word"), col("bits")), idx._2), evalSet)
     }
     assert(e3.getMessage.contains("format columns"), e3.getMessage)
   }

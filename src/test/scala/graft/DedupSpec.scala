@@ -96,10 +96,13 @@ class DedupSpec extends AnyFunSuite {
         "20679397,232548930,303758988,164564967", "20742927,20204932,283708487,44348004"),
       3L -> Seq("211612662,623151646,165162522,552879624", "436531471,263891082,76525135,409439429",
         "12244524,215642043,11599267,257713242", "66877093,81804699,648930108,28781505"))
-    val rows = Graft.nearDupBandIndex(docs).collect()
-    val bands = rows.map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("b"), r.getAs[String]("bkey")))
+    val (bandsPiece, docsPiece) = Graft.nearDupBandIndex(docs)
+    val bands = bandsPiece.collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("b"), r.getAs[String]("bkey")))
     val expected = golden.toSeq.flatMap { case (d, ks) => ks.indices.map(b => (d, b, ks(b))) }
     assert(bands.sorted.toSeq == expected.sorted)
+    val rows = docsPiece.collect()
+    assert(rows.length == golden.size)
     assert(rows.forall(r => r.getAs[Seq[String]]("bkeys") == golden(r.getAs[Long]("doc_id"))))
   }
 

@@ -39,6 +39,14 @@ class StoredIndexSpec extends AnyFunSuite {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  /** Two index values agree piece for piece: column names and types
+    * (as a parquet read types them — every field nullable), and rows. */
+  private def assertSamePieces(a: (DataFrame, DataFrame), b: (DataFrame, DataFrame)): Unit =
+    Seq(a._1 -> b._1, a._2 -> b._2).foreach { case (x, y) =>
+      assert(ops.StoredIndex.schemaOf(x) == ops.StoredIndex.schemaOf(y), "piece schema drifted")
+      assert(sortedRows(x) == sortedRows(y), s"piece rows drifted (${x.columns.mkString(",")})")
+    }
+
   // ---------------------------------------------------------------- band
 
   // standing corpus + an incoming batch that re-keys 30 standing docs
@@ -70,19 +78,19 @@ class StoredIndexSpec extends AnyFunSuite {
     assert(bands.count() == 4L * standing.count(), "one probe row per (doc, band)")
   }
 
+  // generations built like q207: gen1 lacks every 7th doc (-> added),
+  // gen2 drops every 6th (-> removed) and rewrites every 5th (-> changed)
+  private def g1 = standing.filter(col("doc_id") % 7 =!= 0)
+  private def g2 = standing.filter(col("doc_id") % 6 =!= 0)
+    .withColumn("text", when(col("doc_id") % 5 === 0,
+      concat(col("text"), lit(" freshly appended refresh clause")))
+      .otherwise(col("text")))
+  private def delta = Graft.snapshotDelta(
+      g1.withColumn("fp", md5(col("text"))),
+      g2.withColumn("fp", md5(col("text"))), "doc_id", "fp")
+    .select(col("doc_id"), col("status"), col("text"))
+
   test("band index: stored refresh == rebuild, piece for piece and alert for alert") {
-    // generations built like q207: gen1 lacks every 7th doc (-> added),
-    // gen2 drops every 6th (-> removed) and rewrites every 5th (-> changed)
-    val base = standing
-    val g1 = base.filter(col("doc_id") % 7 =!= 0)
-    val g2 = base.filter(col("doc_id") % 6 =!= 0)
-      .withColumn("text", when(col("doc_id") % 5 === 0,
-        concat(col("text"), lit(" freshly appended refresh clause")))
-        .otherwise(col("text")))
-    val delta = Graft.snapshotDelta(
-        g1.withColumn("fp", md5(col("text"))),
-        g2.withColumn("fp", md5(col("text"))), "doc_id", "fp")
-      .select(col("doc_id"), col("status"), col("text"))
     val p1 = java.nio.file.Files.createTempDirectory("bandg1").toString
     val p2 = java.nio.file.Files.createTempDirectory("bandg2").toString
     val p3 = java.nio.file.Files.createTempDirectory("bandg2r").toString
@@ -98,10 +106,23 @@ class StoredIndexSpec extends AnyFunSuite {
     assert(a1.nonEmpty && a1 == a2)
   }
 
+  test("band index: the built pair == its stored read-back; in-memory refresh == stored refresh") {
+    val p1 = java.nio.file.Files.createTempDirectory("bandb1").toString
+    val p2 = java.nio.file.Files.createTempDirectory("bandb2").toString
+    Graft.writeBandIndex(g1, p1)
+    assertSamePieces(Graft.nearDupBandIndex(g1), Graft.readBandIndex(spark, p1))
+    Graft.refreshStoredBandIndex(spark, p1, delta, p2)
+    assertSamePieces(Graft.refreshBandIndex(Graft.nearDupBandIndex(g1), delta),
+      Graft.readBandIndex(spark, p2))
+  }
+
   // --------------------------------------------------------------- bloom
 
   private def corpus = docs.filter(col("doc_id") % 20 =!= 0)
   private def evalSet = docs.filter(col("doc_id") % 20 === 0)
+  // evalSet is exactly baseEval ∪ deltaEval
+  private def baseEval = docs.filter(col("doc_id") % 40 === 0)
+  private def deltaEval = docs.filter(col("doc_id") % 40 === 20)
 
   test("bloom index: serve-from-stored == inline path; layout law") {
     val path = java.nio.file.Files.createTempDirectory("bloomidx").toString
@@ -129,8 +150,6 @@ class StoredIndexSpec extends AnyFunSuite {
   }
 
   test("bloom index: stored refresh (added eval docs) == rebuild, bitmap byte-identical") {
-    val baseEval = docs.filter(col("doc_id") % 40 === 0)
-    val deltaEval = docs.filter(col("doc_id") % 40 === 20)
     val p1 = java.nio.file.Files.createTempDirectory("bloomg1").toString
     val p2 = java.nio.file.Files.createTempDirectory("bloomg2").toString
     val p3 = java.nio.file.Files.createTempDirectory("bloomg2r").toString
@@ -146,6 +165,16 @@ class StoredIndexSpec extends AnyFunSuite {
     val r1 = sortedRows(Graft.bloomDecontaminateStored(corpus, refreshed))
     val r2 = sortedRows(Graft.bloomDecontaminateStored(corpus, rebuilt))
     assert(r1.nonEmpty && r1 == r2)
+  }
+
+  test("bloom index: the built pair == its stored read-back; in-memory refresh == stored refresh") {
+    val p1 = java.nio.file.Files.createTempDirectory("bloomb1").toString
+    val p2 = java.nio.file.Files.createTempDirectory("bloomb2").toString
+    Graft.writeBloomIndex(baseEval, p1)
+    assertSamePieces(Graft.bloomEvalIndex(baseEval), Graft.readBloomIndex(spark, p1))
+    Graft.refreshStoredBloomIndex(spark, p1, deltaEval, p2)
+    assertSamePieces(Graft.refreshBloomIndex(Graft.bloomEvalIndex(baseEval), deltaEval),
+      Graft.readBloomIndex(spark, p2))
   }
 
   // ------------------------------------------------------------ manifest

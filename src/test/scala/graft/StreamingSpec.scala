@@ -607,18 +607,19 @@ class StreamingSpec extends AnyFunSuite {
     val other = "completely different words populate this sentence about " +
       "spark engines and distributed shuffles at scale here"
     val standing = Seq((1L, base), (2L, other)).toDF("doc_id", "text")
-    // the 100 TB shape: the index is MATERIALIZED once (here: to a
-    // temp parquet, standing in for the bucketed stored table) and the
-    // gate runs over the stored scan — standing text never re-banded
+    // the 100 TB shape: the index is PERSISTED once (the manifest
+    // format, standing in for the bucketed stored tables) and the gate
+    // runs over the stored scans — standing text never re-banded
     val idxDir = java.nio.file.Files.createTempDirectory("nd_idx").toString
-    Streaming.standingBandIndex(standing).write.mode("overwrite").parquet(idxDir)
-    val storedIdx = spark.read.parquet(idxDir)
-    assert(storedIdx.columns.toSeq == Seq("doc_id", "hs", "bkeys", "b", "bkey"))
+    Graft.writeBandIndex(standing, idxDir)
+    val storedIdx = Graft.readBandIndex(spark, idxDir)
+    assert(storedIdx._1.columns.toSeq == Seq("doc_id", "b", "bkey"))
+    assert(storedIdx._2.columns.toSeq == Seq("doc_id", "hs", "bkeys"))
     val ins = Seq((101L, base), (102L, base + " extra trailing tokens appended"),
       (103L, "unrelated gibberish nothing shared with corpus text at all " +
         "right now in any shingle"))
     val stream = MemoryStream[(Long, String)]
-    val q = Streaming.nearDupStreamIndexed(
+    val q = Streaming.nearDupServeStored(
       stream.toDF().toDF("doc_id", "text"), storedIdx)
       .writeStream.format("memory").queryName("nd_idx_alerts")
       .outputMode("append").start()
@@ -663,19 +664,21 @@ class StreamingSpec extends AnyFunSuite {
     val refreshed = Streaming.refreshBandIndex(
       Streaming.standingBandIndex(gen1), delta)
     val rebuilt = Streaming.standingBandIndex(gen2)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[String](2),
-        r.getInt(3), r.getString(4))).toSet
-    assert(rows(refreshed) == rows(rebuilt),
+    def bandRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
+    def docRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[String](2))).toSet
+    assert(bandRows(refreshed._1) == bandRows(rebuilt._1) &&
+      docRows(refreshed._2) == docRows(rebuilt._2),
       "incrementally refreshed index differs from the full rebuild")
     // and the streaming gate over the refreshed index alerts exactly as
     // over the rebuilt one (an exact dup of the CHANGED doc's new text
     // must hit doc 3's refreshed rows, not its stale ones)
     val ins = Seq((101L, base), (102L, third + " with freshly appended clauses"))
-    val viaRefreshed = Streaming.nearDupStreamIndexed(
+    val viaRefreshed = Streaming.nearDupServeStored(
       ins.toDF("doc_id", "text"), refreshed)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val viaRebuilt = Streaming.nearDupStreamIndexed(
+    val viaRebuilt = Streaming.nearDupServeStored(
       ins.toDF("doc_id", "text"), rebuilt)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(viaRefreshed == viaRebuilt)
@@ -693,18 +696,13 @@ class StreamingSpec extends AnyFunSuite {
     val incoming = docs.filter(col("doc_id") % 20 =!= 0)
       .select(col("doc_id"), col("text"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    // the 100 TB shape: both index frames persisted once, gate reads
+    // the 100 TB shape: the index pair persisted once, gate reads
     // stored scans — the eval suite is never re-shingled per batch
     val idxDir = java.nio.file.Files.createTempDirectory("bloom_idx").toString
-    Graft.bloomEvalIndex(evalSet).write.mode("overwrite").parquet(s"$idxDir/bitmap")
-    ops.Dedup.hashedShinglesOf(evalSet)
-      .select(org.apache.spark.sql.functions.explode(col("hs")).as("h")).distinct()
-      .write.mode("overwrite").parquet(s"$idxDir/shingles")
+    Graft.writeBloomIndex(evalSet, idxDir)
     val stream = MemoryStream[(Long, String)]
     val q = Streaming.decontamStreamIndexed(
-      stream.toDF().toDF("doc_id", "text"),
-      spark.read.parquet(s"$idxDir/bitmap"),
-      spark.read.parquet(s"$idxDir/shingles"))
+      stream.toDF().toDF("doc_id", "text"), Graft.readBloomIndex(spark, idxDir))
       .writeStream.format("memory").queryName("decontam_alerts")
       .outputMode("append").start()
     try {
@@ -723,7 +721,7 @@ class StreamingSpec extends AnyFunSuite {
       .filter(_._3 > 0).toSet
     assert(rolled.toSet == batch,
       "streamed alert rollup diverged from the batch contamination report")
-    // convenience form (derives both frames from the eval set) agrees
+    // convenience form (builds the pair from the eval set) agrees
     val direct = Streaming.decontamStream(
       incoming.toDF("doc_id", "text"), evalSet)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))

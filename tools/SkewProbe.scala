@@ -46,7 +46,7 @@ object SkewProbe {
   }
 
   private def bandRows(docs: DataFrame): DataFrame =
-    ops.Dedup.bandRowsOf(ops.Dedup.hashedShinglesOf(docs))
+    Graft.nearDupBandIndex(docs)._1
       .select(col("doc_id"), concat_ws("|", col("b"), col("bkey")).as("k"))
 
   private def hotClusterDocs(s: SparkSession, dir: String): DataFrame = {
