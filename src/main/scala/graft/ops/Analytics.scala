@@ -592,21 +592,6 @@ object Analytics {
       .orderBy(col("user_id"))
   }
 
-  /** Robust (median/MAD) per-group outliers — the heavy-tail-safe
-    * companion to [[q107Outliers]]'s moment z-score (one extreme value
-    * shifts a mean/stddev arbitrarily; it moves a median/MAD not at
-    * all). robust_z = (x − median) / (1.4826·MAD), flagged at |z| > 3.
-    *
-    * Determinism: both medians are interpolated identically by Spark
-    * `percentile` and DuckDB `quantile_cont` and rounded to 6 dp before
-    * any reuse (q68's contract); everything after is correctly-rounded
-    * IEEE double arithmetic on identical inputs, so the flag set and
-    * scores are bit-identical across engines and partitionings.
-    *
-    * Scale: two grouped exact percentiles (the 100 TB path swaps in
-    * mergeable `approx_percentile` — q69's sketch — with no other plan
-    * change) + a groups-sized broadcast back onto the stream; the scan
-    * itself never shuffles. */
   /** Median/MAD robust outliers of `valueCol` within `groupCol` groups
     * at |robust_z| > `z` — see [[q133MadOutliers]] for the determinism
     * and scale contract. Emits (input cols…, d, robust_z).
@@ -632,6 +617,21 @@ object Analytics {
       .drop("__graft_med", "__graft_mad")
   }
 
+  /** Robust (median/MAD) per-group outliers — the heavy-tail-safe
+    * companion to [[q107Outliers]]'s moment z-score (one extreme value
+    * shifts a mean/stddev arbitrarily; it moves a median/MAD not at
+    * all). robust_z = (x − median) / (1.4826·MAD), flagged at |z| > 3.
+    *
+    * Determinism: both medians are interpolated identically by Spark
+    * `percentile` and DuckDB `quantile_cont` and rounded to 6 dp before
+    * any reuse (q68's contract); everything after is correctly-rounded
+    * IEEE double arithmetic on identical inputs, so the flag set and
+    * scores are bit-identical across engines and partitionings.
+    *
+    * Scale: two grouped exact percentiles (the 100 TB path swaps in
+    * mergeable `approx_percentile` — q69's sketch — with no other plan
+    * change) + a groups-sized broadcast back onto the stream; the scan
+    * itself never shuffles. */
   val q133MadOutliers: Q = Q.sql(
     "q133_mad_outliers",
     """WITH med AS (
@@ -656,25 +656,6 @@ object Analytics {
       .orderBy(col("event_id"))
   }
 
-  /** ABC / Pareto classification: parts ranked by revenue, classed A
-    * while the running revenue share ≤ 80%, B ≤ 95%, else C — the
-    * inventory-analysis standard.
-    *
-    * Determinism: revenue and its running total are exact DECIMAL sums
-    * (the window order is totalized by the partkey tiebreak), the share
-    * divides two exact totals as doubles, and the class thresholds
-    * compare those deterministic doubles — partition-count-independent.
-    *
-    * Scale: the fact scan collapses to a part-grain aggregate (one
-    * equi-shuffle, map-side combined) BEFORE any window; the running
-    * total is then the scalable-global-prefix pattern
-    * ([[Eval.withExclusivePrefix]], q166/q180's recipe): range
-    * repartition on (rev desc, key), per-partition window prefixes,
-    * broadcast ≤|partitions|-row offsets — at TPC-H sf100 |parts| is
-    * 20M, which a one-reducer `Window.orderBy` would sort on a single
-    * task (VERDICT r9 item 5); this shape never funnels. The grand
-    * total is a 1-row aggregate cross-joined back (exact DECIMAL both
-    * legs, so the shares stay partition-order-deterministic). */
   /** ABC/Pareto classes for any (key, measure) — aggregates `measure`
     * (exact DECIMAL) per `key`, then classes by running revenue share —
     * see [[q134AbcClass]] for the determinism and scale contract.
@@ -696,6 +677,25 @@ object Analytics {
         when(share <= aCut, "A").when(share <= bCut, "B").otherwise("C").as("abc"))
   }
 
+  /** ABC / Pareto classification: parts ranked by revenue, classed A
+    * while the running revenue share ≤ 80%, B ≤ 95%, else C — the
+    * inventory-analysis standard.
+    *
+    * Determinism: revenue and its running total are exact DECIMAL sums
+    * (the window order is totalized by the partkey tiebreak), the share
+    * divides two exact totals as doubles, and the class thresholds
+    * compare those deterministic doubles — partition-count-independent.
+    *
+    * Scale: the fact scan collapses to a part-grain aggregate (one
+    * equi-shuffle, map-side combined) BEFORE any window; the running
+    * total is then the scalable-global-prefix pattern
+    * ([[Eval.withExclusivePrefix]], q166/q180's recipe): range
+    * repartition on (rev desc, key), per-partition window prefixes,
+    * broadcast ≤|partitions|-row offsets — at TPC-H sf100 |parts| is
+    * 20M, which a one-reducer `Window.orderBy` would sort on a single
+    * task (VERDICT r9 item 5); this shape never funnels. The grand
+    * total is a 1-row aggregate cross-joined back (exact DECIMAL both
+    * legs, so the shares stay partition-order-deterministic). */
   val q134AbcClass: Q = Q.sql(
     "q134_abc_class",
     """WITH r AS (
@@ -922,18 +922,6 @@ object Analytics {
       .orderBy(col("user_id"))
   }
 
-  /** Market-basket co-occurrence with LIFT: part pairs bought together
-    * in ≥3 orders, scored by lift = P(a,b)/(P(a)·P(b)) — the classic
-    * association-rule mining shape (and the q82 collocation idea lifted
-    * from token streams to transactions).
-    *
-    * Determinism: lift is ONE double expression over exact integer
-    * counts (q82's ratio-only-scoring rule), rounded 6 dp.
-    *
-    * Scale: the pair self-join runs WITHIN order groups only (equi-join
-    * on l_orderkey), so pair volume is Σ C(basket,2) — linear for
-    * bounded baskets, never |parts|². The min-support HAVING prunes
-    * before the part-frequency joins; part counts broadcast. */
   /** Baskets larger than this are excluded from PAIR GENERATION (item
     * frequencies and the basket total stay exact, so surviving lifts are
     * unchanged): a mega-basket of n items fans out C(n,2) pairs from ONE
@@ -1001,6 +989,18 @@ object Analytics {
           / (col("na") * col("nb")), 6).as("lift"))
   }
 
+  /** Market-basket co-occurrence with LIFT: part pairs bought together
+    * in ≥3 orders, scored by lift = P(a,b)/(P(a)·P(b)) — the classic
+    * association-rule mining shape (and the q82 collocation idea lifted
+    * from token streams to transactions).
+    *
+    * Determinism: lift is ONE double expression over exact integer
+    * counts (q82's ratio-only-scoring rule), rounded 6 dp.
+    *
+    * Scale: the pair self-join runs WITHIN order groups only (equi-join
+    * on l_orderkey), so pair volume is Σ C(basket,2) — linear for
+    * bounded baskets, never |parts|². The min-support HAVING prunes
+    * before the part-frequency joins; part counts broadcast. */
   val q144MarketBasket: Q = Q.sql(
     "q144_market_basket",
     """WITH op AS (

@@ -206,9 +206,6 @@ object Bpe {
       .orderBy(col("step"))
   }
 
-  /** Ten BPE merges learned from the documents corpus — the merge table
-    * a subword tokenizer would ship. Iterative data-dependent argmax →
-    * no-oracle; BpeSpec pins the exact sequence on a fixture. */
   /** DuckDB replay of ONE training round `i` for [[q191BpeMerges]]'
     * oracle: adjacent-pair counts at word-TYPE grain (two shifted
     * list_slice unnests zip positionally; HAVING enforces the engine's
@@ -255,7 +252,10 @@ object Bpe {
        |    END AS syms FROM ws$i)""".stripMargin
   }
 
-  /** q191 oracle-paired (r12): the ITERATIVE trainer replayed in pure
+  /** Ten BPE merges learned from the documents corpus — the merge table
+    * a subword tokenizer would ship.
+    *
+    * q191 oracle-paired (r12): the ITERATIVE trainer replayed in pure
     * SQL by UNROLLING the fixed 10 rounds — no recursion needed when
     * the round count is a constant, and every round is exact integer
     * counting + a total-order argmax + the shared fold, so the whole

@@ -496,15 +496,6 @@ object Components {
       .orderBy(col("doc_id"))
   }
 
-  /** The deduplicated corpus: every document except non-survivor
-    * near-dups (component members other than the min doc_id). This is
-    * the pipeline's end product — what a training run actually reads.
-    * Non-survivors are duplication-bounded (near-dup docs only) but
-    * NOT bounded by construction — a 50%-dup corpus makes the set
-    * corpus-scale — so the anti-join is a plain equi-join and AQE
-    * picks broadcast when the set is actually small (a forced
-    * `broadcast()` hint would override Spark's size threshold and
-    * OOM the driver in the heavy-dup case). */
   /** Full-rebuild SURVIVORS oracle over the entire corpus — shared by
     * q73 (from-scratch engine path) and q217 (the INCREMENTAL capstone):
     * both must reproduce this exact survivor set. */
@@ -524,6 +515,15 @@ object Components {
        |FROM documents d ANTI JOIN dropped ON d.doc_id = dropped.id
        |ORDER BY d.doc_id""".stripMargin
 
+  /** The deduplicated corpus: every document except non-survivor
+    * near-dups (component members other than the min doc_id). This is
+    * the pipeline's end product — what a training run actually reads.
+    * Non-survivors are duplication-bounded (near-dup docs only) but
+    * NOT bounded by construction — a 50%-dup corpus makes the set
+    * corpus-scale — so the anti-join is a plain equi-join and AQE
+    * picks broadcast when the set is actually small (a forced
+    * `broadcast()` hint would override Spark's size threshold and
+    * OOM the driver in the heavy-dup case). */
   val q73DedupSurvivors: Q = Q.sql(
     "q73_dedup_survivors",
     oracleFullSurvivors
@@ -758,19 +758,6 @@ object Components {
       .drop("__graft_cc_id", "__graft_cc_label")
   }
 
-  /** Triangle enumeration over the near-dup pair graph — the standard
-    * distributed graph primitive beyond connected components (clustering
-    * coefficients, community seeds, dedup-cluster density audits).
-    *
-    * Edges are oriented low→high by TOTAL DEGREE ORDER (degree, then
-    * id): every triangle then has exactly one node with two out-edges,
-    * so each triangle is one out-wedge closed by one oriented edge — no
-    * orientation dedup pass, and wedge volume is Σ out-deg² ≤ O(m^1.5)
-    * (each out-degree is O(√m)) instead of the Σ deg² of a naive id
-    * orientation, which a single hot node (degree d → d² wedge rows)
-    * blows up on power-law graphs. The degree pass is one aggregate
-    * over the symmetrized endpoints plus two equi-joins to tag the
-    * edge ends — linear, and cheap next to the wedge join it bounds. */
   /** Degree-orient an (i, j) edge frame: (src, dst, ddeg) rows with src
     * before dst in (degree, id) order, ddeg = dst's degree (carried so
     * downstream joins can compare ranks without re-joining degrees). */
@@ -953,6 +940,19 @@ object Components {
     pageRankInt(tradeEdges(s, dir), iters = 3).orderBy(col("node"))
   }
 
+  /** Triangle enumeration over the near-dup pair graph — the standard
+    * distributed graph primitive beyond connected components (clustering
+    * coefficients, community seeds, dedup-cluster density audits).
+    *
+    * Edges are oriented low→high by TOTAL DEGREE ORDER (degree, then
+    * id): every triangle then has exactly one node with two out-edges,
+    * so each triangle is one out-wedge closed by one oriented edge — no
+    * orientation dedup pass, and wedge volume is Σ out-deg² ≤ O(m^1.5)
+    * (each out-degree is O(√m)) instead of the Σ deg² of a naive id
+    * orientation, which a single hot node (degree d → d² wedge rows)
+    * blows up on power-law graphs. The degree pass is one aggregate
+    * over the symmetrized endpoints plus two equi-joins to tag the
+    * edge ends — linear, and cheap next to the wedge join it bounds. */
   val q145Triangles: Q = Q.sql(
     "q145_triangles",
     s"""WITH np AS (

@@ -394,21 +394,14 @@ object Decontam {
     * decontamination-sufficient statistic, and shingle hashes don't
     * invert. The eval suite is shingled ONCE — the bitmap derives from
     * the shingle table as persisted, so the two pieces can never
-    * disagree. The generation's manifest ([[StoredIndex]]) is written
-    * last. */
+    * disagree. */
   def writeBloomIndex(evalSet: DataFrame, path: String,
                       mBits: Long = DefaultBloomBits,
                       kHashes: Int = DefaultBloomHashes): Unit = {
-    val s = evalSet.sparkSession
-    val shingles = bloomEvalIndex(evalSet, mBits, kHashes)._2.repartition(col("h"))
-    val shinglesSchema = StoredIndex.schemaOf(shingles)
-    StoredIndex.retire(s, path)
-    shingles.write.mode("overwrite").parquet(s"$path/shingles")
-    val bitmap = stamped(bloomBitmapFromShingles(
-      s.read.schema(shinglesSchema).parquet(s"$path/shingles"), mBits, kHashes), mBits, kHashes)
-    bitmap.write.mode("overwrite").parquet(s"$path/bitmap")
-    StoredIndex.commit(s, path, "bloom",
-      Seq("shingles" -> shinglesSchema, "bitmap" -> StoredIndex.schemaOf(bitmap)))
+    StoredIndex.write(evalSet.sparkSession, path, "bloom") { w =>
+      w.put("shingles", bloomEvalIndex(evalSet, mBits, kHashes)._2.repartition(col("h")))
+      w.put("bitmap", stamped(bloomBitmapFromShingles(w.stored("shingles"), mBits, kHashes), mBits, kHashes))
+    }
   }
 
   /** Re-open a [[writeBloomIndex]] artifact: (bitmap, shingles), located
@@ -444,24 +437,13 @@ object Decontam {
                               deltaEval: DataFrame, outPath: String,
                               mBits: Long = DefaultBloomBits,
                               kHashes: Int = DefaultBloomHashes): Unit = {
-    val base = StoredIndex.load(s, path, "bloom")
-    StoredIndex.requireNewGeneration("refreshStoredBloomIndex", s, base, outPath)
-    val (bitmapOut, shingles) = refreshBloomIndex(bloomPieces(s, base), deltaEval, mBits, kHashes)
-    val shinglesOut = shingles.repartition(col("h"))
-    StoredIndex.retire(s, outPath)
-    shinglesOut.write.mode("overwrite").parquet(s"$outPath/shingles")
-    bitmapOut.write.mode("overwrite").parquet(s"$outPath/bitmap")
-    StoredIndex.commit(s, outPath, "bloom", Seq("shingles" -> StoredIndex.schemaOf(shinglesOut),
-      "bitmap" -> StoredIndex.schemaOf(bitmapOut)))
+    StoredIndex.refresh("refreshStoredBloomIndex", s, path, "bloom", outPath) { (base, w) =>
+      val (bitmap, shingles) = refreshBloomIndex(bloomPieces(s, base), deltaEval, mBits, kHashes)
+      w.put("shingles", shingles.repartition(col("h")))
+      w.put("bitmap", bitmap)
+    }
   }
 
-  /** q213: the Bloom-pre-filtered decontamination path, hash-gated
-    * against the SAME exact oracle as q101 — DuckDB computes the exact
-    * left-join answer; the engine must reproduce it bit-for-bit through
-    * bitmap build → k-probe pre-filter → exact verify, proving the
-    * Bloom stage admits every true hit and the verify stage removes
-    * every false positive. Same eval split convention as q101
-    * (doc_id % 20 = 0). */
   /** Shared oracle body for q213 AND q238: the exact left-join
     * contamination report over the doc_id % 20 eval split — the engine
     * must reproduce it bit-for-bit whatever machinery (inline Bloom, or
@@ -485,6 +467,13 @@ object Decontam {
        |FROM agg
        |ORDER BY doc_id""".stripMargin
 
+  /** q213: the Bloom-pre-filtered decontamination path, hash-gated
+    * against the SAME exact oracle as q101 — DuckDB computes the exact
+    * left-join answer; the engine must reproduce it bit-for-bit through
+    * bitmap build → k-probe pre-filter → exact verify, proving the
+    * Bloom stage admits every true hit and the verify stage removes
+    * every false positive. Same eval split convention as q101
+    * (doc_id % 20 = 0). */
   val q213BloomDecontam: Q = Q.sql(
     "q213_bloom_decontam", exactDecontamReportSql
   ) { (s, dir) =>

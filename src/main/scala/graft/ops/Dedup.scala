@@ -882,30 +882,6 @@ object Dedup {
       .withColumn("dup_frac", col("n_dup").cast("double") / col("n_seg"))
   }
 
-  /** Corpus-level duplicated-segment REWRITE — the removal step behind
-    * [[q109Boilerplate]]'s report (the line-dedup stage of the public
-    * web-corpus pipelines — CCNet's per-shard line hashing, RefinedWeb /
-    * Dolma's corpus-level duplicate-line removal — at fixed 8-word
-    * segment grain, since this corpus has no line structure): every
-    * `width`-word segment whose content occurs more than once ANYWHERE
-    * in the corpus is dropped from all but its first occurrence (min
-    * (doc_id, position) — C4 keeps one occurrence of a repeated span,
-    * and a deterministic keeper makes the rewrite reproducible), and
-    * each document is re-assembled from its surviving segments plus its
-    * (< width)-word tail.
-    *
-    * Scale (100 TB): the shuffled rows are (doc_id, k, h) triples —
-    * segment TEXT never moves; the occurrence table is one map-side-
-    * combined aggregate at segment-hash grain whose keeper is a packed
-    * `doc_id·10^6 + k` MIN (no window, no struct ordering), and the
-    * rebuild joins each doc's surviving-position LIST (ints) back to
-    * the original row, slicing the text row-locally. A corpus-wide hot
-    * segment skews one GROUP BY key (absorbed by partial aggregation)
-    * and one join key (AQE skew split) — no doc-doc pairing anywhere.
-    * The packed keeper key requires k < 10^6 (docs under ~8M words at
-    * width 8) and doc_id in [0, 9.2e12) (else doc_id·10^6 + k
-    * overflows long / a negative doc_id mis-orders the MIN) — both
-    * enforced, not assumed. */
   /** (doc_id, text) → one row per non-overlapping `width`-word segment:
     * (doc_id, k, h) with k the segment ordinal and h the 60-bit hash of
     * the segment text — fully row-local (streaming-safe), shared by
@@ -937,6 +913,30 @@ object Dedup {
         .cast("long"))
       .otherwise(lit(1000000L) - floor(col(qc) * 1000000.0).cast("long"))
 
+  /** Corpus-level duplicated-segment REWRITE — the removal step behind
+    * [[q109Boilerplate]]'s report (the line-dedup stage of the public
+    * web-corpus pipelines — CCNet's per-shard line hashing, RefinedWeb /
+    * Dolma's corpus-level duplicate-line removal — at fixed 8-word
+    * segment grain, since this corpus has no line structure): every
+    * `width`-word segment whose content occurs more than once ANYWHERE
+    * in the corpus is dropped from all but its first occurrence (min
+    * (doc_id, position) — C4 keeps one occurrence of a repeated span,
+    * and a deterministic keeper makes the rewrite reproducible), and
+    * each document is re-assembled from its surviving segments plus its
+    * (< width)-word tail.
+    *
+    * Scale (100 TB): the shuffled rows are (doc_id, k, h) triples —
+    * segment TEXT never moves; the occurrence table is one map-side-
+    * combined aggregate at segment-hash grain whose keeper is a packed
+    * `doc_id·10^6 + k` MIN (no window, no struct ordering), and the
+    * rebuild joins each doc's surviving-position LIST (ints) back to
+    * the original row, slicing the text row-locally. A corpus-wide hot
+    * segment skews one GROUP BY key (absorbed by partial aggregation)
+    * and one join key (AQE skew split) — no doc-doc pairing anywhere.
+    * The packed keeper key requires k < 10^6 (docs under ~8M words at
+    * width 8) and doc_id in [0, 9.2e12) (else doc_id·10^6 + k
+    * overflows long / a negative doc_id mis-orders the MIN) — both
+    * enforced, not assumed. */
   private[graft] def segmentDedup(docs: DataFrame, width: Int = 8,
                                   qualityCol: Option[String] = None): DataFrame = {
     require(width >= 1, s"width must be >= 1, got $width")

@@ -70,14 +70,6 @@ object Packing {
        |ORDER BY shard, bin""".stripMargin
   ) { (s, dir) => pack(shardedTokens(s, dir), BinBudget) }
 
-  /** Corpus mixture report — the bookkeeping behind data-mixture
-    * weighting: per source, document and token counts, each source's
-    * share of total tokens, and the resampling factor that would hit a
-    * uniform target mix. All shares are divisions of exact int64 totals
-    * (bit-identical both engines); the global totals enter as a
-    * broadcast one-row join so the query stays one lazy plan. At scale
-    * this is two map-side-combined aggregations over the scan — shuffle
-    * ∝ number of sources. */
   /** Generic mixture report over any (source, text) frame. */
   private[graft] def mixtureReportOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val perSrc = docs
@@ -94,6 +86,14 @@ object Packing {
         ((col("t").cast("double") / col("n_src")) / col("n_tokens")).as("uniform_resample_factor"))
   }
 
+  /** Corpus mixture report — the bookkeeping behind data-mixture
+    * weighting: per source, document and token counts, each source's
+    * share of total tokens, and the resampling factor that would hit a
+    * uniform target mix. All shares are divisions of exact int64 totals
+    * (bit-identical both engines); the global totals enter as a
+    * broadcast one-row join so the query stays one lazy plan. At scale
+    * this is two map-side-combined aggregations over the scan — shuffle
+    * ∝ number of sources. */
   val q84MixtureReport: Q = Q.sql(
     "q84_mixture_report",
     """WITH per_doc AS (

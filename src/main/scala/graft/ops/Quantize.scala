@@ -351,30 +351,6 @@ object Quantize {
 
   // ------------------------------------------------ IVF-PQ search (q231)
 
-  /** q231: the COMPOSED production ANN index — IVF coarse quantizer in
-    * front of PQ-over-RESIDUALS (Jégou et al. 2011 §IV "IVFADC", the
-    * FAISS `IVFx,PQy` layout) — with BOTH quantizers frozen so the whole
-    * index is oracle-replayed end to end. Coarse lists are q219's
-    * fixed-point per-label centroids; each vector stores (list_id, m
-    * nibble codes of v − centroid(list)); a query probes its 2 nearest
-    * lists, subtracts each probed centroid, builds the m × k ADC table
-    * from the RESIDUAL query, and ranks only the probed posting lists.
-    * Encoding residuals (not raw vectors) is what makes the composition
-    * better than either part: residual energy is a fraction of vector
-    * energy, so the same 8-byte code spends its 16 cells on a much
-    * smaller cube.
-    *
-    * The oracle replays coarse quantizer → assignment → residuals → PQ
-    * codebook → codes → probe selection → residual distance tables →
-    * 8-term ADC → ranking: ~every float op in the index, in both
-    * engines, from two independent formulations.
-    *
-    * Scale shape — this is the 100 TB ANN serving plan: centroids
-    * (k_coarse rows) and the PQ codebook (8 KB) broadcast; assignment +
-    * residual + encode are ONE map-only corpus pass whose output is 10
-    * bytes/vector; the search joins a bounded probe set to the code
-    * table on list_id (equi-join, cost ∝ probed lists); nothing ever
-    * shuffles the raw vectors. */
   /** Shared oracle body for q231 AND q242: the full frozen-quantizer
     * IVF-PQ replay (per-label fixed-point coarse centroids, residual PQ
     * codebook, assignment, encode, 2-probe ADC search, top-5). Factored
@@ -465,6 +441,30 @@ object Quantize {
        |SELECT query_id, neighbor_id, adc, rk FROM ranked WHERE rk <= 5
        |ORDER BY query_id, rk""".stripMargin
 
+  /** q231: the COMPOSED production ANN index — IVF coarse quantizer in
+    * front of PQ-over-RESIDUALS (Jégou et al. 2011 §IV "IVFADC", the
+    * FAISS `IVFx,PQy` layout) — with BOTH quantizers frozen so the whole
+    * index is oracle-replayed end to end. Coarse lists are q219's
+    * fixed-point per-label centroids; each vector stores (list_id, m
+    * nibble codes of v − centroid(list)); a query probes its 2 nearest
+    * lists, subtracts each probed centroid, builds the m × k ADC table
+    * from the RESIDUAL query, and ranks only the probed posting lists.
+    * Encoding residuals (not raw vectors) is what makes the composition
+    * better than either part: residual energy is a fraction of vector
+    * energy, so the same 8-byte code spends its 16 cells on a much
+    * smaller cube.
+    *
+    * The oracle replays coarse quantizer → assignment → residuals → PQ
+    * codebook → codes → probe selection → residual distance tables →
+    * 8-term ADC → ranking: ~every float op in the index, in both
+    * engines, from two independent formulations.
+    *
+    * Scale shape — this is the 100 TB ANN serving plan: centroids
+    * (k_coarse rows) and the PQ codebook (8 KB) broadcast; assignment +
+    * residual + encode are ONE map-only corpus pass whose output is 10
+    * bytes/vector; the search joins a bounded probe set to the code
+    * table on list_id (equi-join, cost ∝ probed lists); nothing ever
+    * shuffles the raw vectors. */
   val q231IvfPqSearch: Q = Q.sql(
     "q231_ivfpq_search",
     oracleIvfPqTop5
@@ -501,14 +501,6 @@ object Quantize {
       .orderBy(col("query_id"), col("rk"))
   }
 
-  /** Generic IVF-PQ search over a (vec_id, v: array<double>, label)
-    * frame (label = the coarse partition the frozen quantizer derives
-    * its per-list centroids from) — index build and search in ONE lazy
-    * plan. Production splits this at `encoded`: the (vec_id, list_id,
-    * codes) table is the stored artifact; refresh composes from the
-    * existing pieces ([[graft.ops.Similarity.refreshIvfAssignments]]
-    * re-lists the delta under the frozen coarse quantizer, then this
-    * encode — both map-only). */
   /** (vec_id, v, …) → (vec_id, list_id, v = the RESIDUAL v − centroid):
     * coarse assignment (row-local argmin fold over the broadcast
     * centroid table) fused with the residual subtraction — map-only,
@@ -536,6 +528,14 @@ object Quantize {
         x => x.getField("mu")).as("centroid"))
       .select(col("label").cast("int").as("list_id"), col("centroid"))
 
+  /** Generic IVF-PQ search over a (vec_id, v: array<double>, label)
+    * frame (label = the coarse partition the frozen quantizer derives
+    * its per-list centroids from) — index build and search in ONE lazy
+    * plan. Production splits this at `encoded`: the (vec_id, list_id,
+    * codes) table is the stored artifact; refresh composes from the
+    * existing pieces ([[graft.ops.Similarity.refreshIvfAssignments]]
+    * re-lists the delta under the frozen coarse quantizer, then this
+    * encode — both map-only). */
   private[graft] def ivfPqSearch(emb: DataFrame, probeMax: Long,
                                  nProbe: Int, topK: Int): DataFrame = {
     // checkpoint the index-build invariants ONCE each (r14): cents is
@@ -600,8 +600,7 @@ object Quantize {
     * never leave disk). Raw vectors are NOT stored — the index is the
     * quantizers plus codes, exactly what [[ivfPqSearchFrom]] serves
     * from; [[refreshIvfPqCodes]] maintains `codes/` under a delta feed
-    * with the quantizers frozen. The generation's manifest
-    * ([[StoredIndex]]) is written last. */
+    * with the quantizers frozen. */
   private[graft] def writeAnnIndex(emb: DataFrame, path: String): Unit = {
     // checkpoint the build invariants once (r14, the ivfPqSearch
     // discipline): the three write ACTIONS otherwise each re-derive
@@ -612,27 +611,23 @@ object Quantize {
       val cents = scope.pin(coarseListsOf(emb))
       val res = scope.pin(ivfResiduals(emb.select(col("vec_id"), col("v")), cents))
       val cbRow = scope.pin(frozenPqCodebook(res.select(col("vec_id"), col("v"))))
-      val s = emb.sparkSession
-      val codes = ivfPqEncode(res, cbRow)
-      StoredIndex.retire(s, path)
-      cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-      cbRow.coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-      writeCodes(codes, path)
-      StoredIndex.commit(s, path, "ann", Seq("centroids" -> StoredIndex.schemaOf(cents),
-        "codebook" -> StoredIndex.schemaOf(cbRow), "codes" -> StoredIndex.schemaOf(codes, "list_id")))
+      StoredIndex.write(emb.sparkSession, path, "ann") { w =>
+        w.put("centroids", cents.coalesce(1))
+        w.put("codebook", cbRow.coalesce(1))
+        putCodes(w, ivfPqEncode(res, cbRow))
+      }
     }
   }
 
-  /** `codes/` under `path`, partitioned by list_id. The REBALANCE hint
+  /** The `codes/` piece, partitioned by list_id. The REBALANCE hint
     * shuffles on list_id, so a task's output covers few directories
     * (the writeTokenShards small-files discipline), and lets AQE split
     * a list whose map output exceeds
     * `spark.sql.adaptive.advisoryPartitionSizeInBytes` over several
     * tasks and files: at 100 TB a hot list is tens of GB, which one
     * task and one file would carry alone. Small lists keep one file. */
-  private def writeCodes(codes: DataFrame, path: String): Unit =
-    codes.hint("rebalance", col("list_id"))
-      .write.partitionBy("list_id").mode("overwrite").parquet(s"$path/codes")
+  private def putCodes(w: StoredIndex.Writer, codes: DataFrame): Unit =
+    w.put("codes", codes.hint("rebalance", col("list_id")), "list_id")
 
   /** Re-open a [[writeAnnIndex]] artifact: (centroids, codebook row,
     * codes) — the pieces [[ivfPqSearchFrom]] serves from, located and
@@ -670,14 +665,12 @@ object Quantize {
     * included). */
   private[graft] def refreshStoredAnnIndex(s: SparkSession, path: String,
                                            delta: DataFrame, outPath: String): Unit = {
-    val base = StoredIndex.load(s, path, "ann")
-    StoredIndex.requireNewGeneration("refreshStoredAnnIndex", s, base, outPath)
-    val (cents, cbRow, codes) = annPieces(s, base)
-    val fresh = refreshIvfPqCodes(codes, delta, cents, cbRow)
-    StoredIndex.retire(s, outPath)
-    writeCodes(fresh, outPath)
-    StoredIndex.commit(s, outPath, "ann", Seq("codes" -> StoredIndex.schemaOf(fresh, "list_id")),
-      Seq(base.described(s, "centroids"), base.described(s, "codebook")))
+    StoredIndex.refresh("refreshStoredAnnIndex", s, path, "ann", outPath) { (base, w) =>
+      val (cents, cbRow, codes) = annPieces(s, base)
+      putCodes(w, refreshIvfPqCodes(codes, delta, cents, cbRow))
+      w.keep("centroids")
+      w.keep("codebook")
+    }
   }
 
   /** Incremental maintenance of the stored IVF-PQ code table under the

@@ -133,12 +133,12 @@ object Retrieval {
   private def dfOf(f: DataFrame): DataFrame =
     f.groupBy(col("t")).agg(count(when(col("tf") >= 1, 1)).as("df"))
 
-  /** Write one index segment under `path`: postings/ and df/
-    * term-partitioned, the 1-row stats/ as one file. */
-  private def writeSegment(path: String, f: DataFrame, dft: DataFrame, stats: DataFrame): Unit = {
-    f.repartition(col("t")).write.mode("overwrite").parquet(s"$path/postings")
-    dft.repartition(col("t")).write.mode("overwrite").parquet(s"$path/df")
-    stats.coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+  /** Put one index segment: postings/ and df/ term-partitioned, the
+    * 1-row stats/ as one file. */
+  private def putSegment(w: StoredIndex.Writer, f: DataFrame, dft: DataFrame, stats: DataFrame): Unit = {
+    w.put("postings", f.repartition(col("t")))
+    w.put("df", dft.repartition(col("t")))
+    w.put("stats", stats.coalesce(1))
   }
 
   /** BM25 top-k per query: `docs` (doc_id, text) × `queries` (query_id,
@@ -168,8 +168,7 @@ object Retrieval {
     * as the postings, never a single-task funnel), and the 1-row
     * stats/ (the only piece small enough to earn coalesce(1)). Raw
     * text is NOT stored — the index is the retrieval-sufficient
-    * statistic, the writeAnnIndex discipline. The generation's manifest
-    * ([[StoredIndex]]) is written last. */
+    * statistic, the writeAnnIndex discipline. */
   def writeBm25Index(docs: DataFrame, path: String): Unit = {
     // checkpoint the postings ONCE (r14): the postings and df writes are
     // separate ACTIONS, so the full-vocabulary tokenize + (doc, term)
@@ -178,11 +177,7 @@ object Retrieval {
     val (f0, _, stats) = bm25IndexPieces(docs, None)
     Barrier.scoped { scope =>
       val f = scope.pin(f0)
-      val dft = dfOf(f)
-      StoredIndex.retire(docs.sparkSession, path)
-      writeSegment(path, f, dft, stats)
-      StoredIndex.commit(docs.sparkSession, path, "bm25", Seq("postings" -> StoredIndex.schemaOf(f),
-        "df" -> StoredIndex.schemaOf(dft), "stats" -> StoredIndex.schemaOf(stats)))
+      StoredIndex.write(docs.sparkSession, path, "bm25")(putSegment(_, f, dfOf(f), stats))
     }
   }
 
@@ -219,46 +214,34 @@ object Retrieval {
     * generation listing it still reads. */
   def refreshStoredBm25Index(s: SparkSession, path: String, deltaDocs: DataFrame,
                              outPath: String): Unit = {
-    val base = StoredIndex.load(s, path, "bm25")
-    StoredIndex.requireNewGeneration("refreshStoredBm25Index", s, base, outPath)
-    val (f0, _, stats0) = bm25Pieces(s, base)
-    // checkpoint the delta postings ONCE (r14): fD otherwise re-derives
-    // the delta tokenize + aggregation for each of the collision check,
-    // the postings write, and the df write (dftD derives from fD)
-    val (fD0, _, statsD) = bm25IndexPieces(deltaDocs, None)
-    Barrier.scoped { scope =>
-      val fD = scope.pin(fD0)
-      val dftD = dfOf(fD)
-      val collisions = f0.select(col("doc_id"))
-        .join(broadcast(fD.select(col("doc_id")).distinct()), Seq("doc_id"), "left_semi")
-        .limit(1).count()
-      require(collisions == 0L,
-        "refreshStoredBm25Index: delta contains doc_ids already in the index " +
-          "(ADD-only contract; retire-then-add updated docs)")
-      // DELTA-PROPORTIONAL write (r15, guide §6 / §2.4): the new
-      // generation persists ONLY the delta's postings + df as its own
-      // segment and lists the base generation's segments in its
-      // manifest — an added doc touches no existing posting row and df
-      // merges additively, so the base's corpus-sized pieces never
-      // re-shuffle, re-encode, or even re-read (the r14 code rewrote
-      // the MERGED postings and vocabulary: O(corpus) write volume per
-      // refresh). Readers union the segments; [[bm25SearchFrom]] sums
-      // the per-segment df rows after its query-term prune. Only the
-      // 1-row stats piece merges at write time (exact, via the stored
-      // additive (n, sum_dl)). Base segments are referenced by relative
-      // root: a generation must outlive every generation refreshed from it.
-      val stats = stats0.select(col("n"), col("sum_dl"))
-        .unionByName(statsD.select(col("n"), col("sum_dl")))
-        .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
-        .withColumn("avgdl_milli", expr("(sum_dl * 1000) DIV n"))
-      StoredIndex.retire(s, outPath)
-      writeSegment(outPath, fD, dftD, stats)
-      val out = StoredIndex.qualify(s, outPath)
-      StoredIndex.commit(s, outPath, "bm25", Seq("stats" -> StoredIndex.schemaOf(stats)),
-        Seq("postings", "df").map { n =>
-          val p = base.described(s, n)
-          p.copy(roots = p.roots :+ out)
-        })
+    StoredIndex.refresh("refreshStoredBm25Index", s, path, "bm25", outPath) { (base, w) =>
+      val (f0, _, stats0) = bm25Pieces(s, base)
+      // checkpoint the delta postings ONCE (r14): fD otherwise re-derives
+      // the delta tokenize + aggregation for each of the collision check,
+      // the postings write, and the df write (the df derives from fD)
+      val (fD0, _, statsD) = bm25IndexPieces(deltaDocs, None)
+      Barrier.scoped { scope =>
+        val fD = scope.pin(fD0)
+        val collisions = f0.select(col("doc_id"))
+          .join(broadcast(fD.select(col("doc_id")).distinct()), Seq("doc_id"), "left_semi")
+          .limit(1).count()
+        require(collisions == 0L,
+          "refreshStoredBm25Index: delta contains doc_ids already in the index " +
+            "(ADD-only contract; retire-then-add updated docs)")
+        // DELTA-PROPORTIONAL write (r15): the new generation persists
+        // ONLY the delta's postings + df, as a segment chained after the
+        // base's — an added doc touches no existing posting row and df
+        // merges additively, so the base's corpus-sized pieces are never
+        // rewritten or re-read. Readers union the segments;
+        // [[bm25SearchFrom]] sums the per-segment df rows after its
+        // query-term prune. Only the 1-row stats piece merges at write
+        // time (exact, via the stored additive (n, sum_dl)).
+        val stats = stats0.select(col("n"), col("sum_dl"))
+          .unionByName(statsD.select(col("n"), col("sum_dl")))
+          .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
+          .withColumn("avgdl_milli", expr("(sum_dl * 1000) DIV n"))
+        putSegment(w, fD, dfOf(fD), stats)
+      }
     }
   }
 

@@ -63,16 +63,6 @@ object Sampling {
       .orderBy(col("split"))
   }
 
-  /** Deterministic hash-stratified sampling — the scale-correct sibling
-    * of `sampleBy`/`sample(frac)`: membership is `md5(salt+doc_id) mod
-    * 10⁴ < rateₗₐₙₐ·10⁴`, a pure row-local function of the key. Unlike
-    * seeded Bernoulli (whose draws depend on partition layout), the
-    * sample is identical across reruns, cluster topologies, AND engines
-    * — so this family's one oracle-paired member checks exact membership
-    * row by row, not just counts. Rates stratify by language (downsample
-    * over-represented 'en', keep minority langs) — the class-rebalance
-    * idiom of the reference's undersample (MLP.ipynb:63) without the
-    * exact-n range sort. No shuffle: filter + scan only. */
   /** Generic deterministic stratified sample: keep each row iff
     * `md5(salt + keyCol) mod 10⁴` falls under its stratum's rate.
     * `rates` maps stratum values (of `stratumCol`) to [0,1] fractions;
@@ -91,6 +81,16 @@ object Sampling {
     docs.filter(bucket < thresh)
   }
 
+  /** Deterministic hash-stratified sampling — the scale-correct sibling
+    * of `sampleBy`/`sample(frac)`: membership is `md5(salt+doc_id) mod
+    * 10⁴ < rateₗₐₙₐ·10⁴`, a pure row-local function of the key. Unlike
+    * seeded Bernoulli (whose draws depend on partition layout), the
+    * sample is identical across reruns, cluster topologies, AND engines
+    * — so this family's one oracle-paired member checks exact membership
+    * row by row, not just counts. Rates stratify by language (downsample
+    * over-represented 'en', keep minority langs) — the class-rebalance
+    * idiom of the reference's undersample (MLP.ipynb:63) without the
+    * exact-n range sort. No shuffle: filter + scan only. */
   val q71StratifiedSample: Q = Q.sql(
     "q71_stratified_sample",
     """SELECT doc_id, lang FROM documents

@@ -549,6 +549,18 @@ object Similarity {
     }
   }
 
+  /** JL ±1 projection of any (vec_id, embedding: array<float>) frame to
+    * 8 int64 sketch dims — see [[q131JlProjection]] for the contract. */
+  private[graft] def jlProjectOf(vectors: DataFrame): DataFrame =
+    vectors
+      .select(col("vec_id"),
+        transform(col("embedding"), x => floor(x.cast("double") * 1000)).as("q"))
+      .select(col("vec_id") +: (0 until NPlanes).map { j =>
+        aggregate(
+          zip_with(col("q"), typedLit(jlSigns(j).toSeq), (a, b) => a * b),
+          lit(0L), (acc, x) => acc + x).as(s"p$j")
+      }: _*)
+
   /** Johnson–Lindenstrauss random projection: 64-dim float embeddings →
     * 8-dim int64 sketches via a fixed ±1 sign matrix (Achlioptas'
     * database-friendly variant — signs instead of Gaussians, so the
@@ -563,18 +575,6 @@ object Similarity {
     * higher-order built-ins, codegen-friendly); the 8-long sketch is
     * 64 B/row vs 256 B for the float vector, the standard first stage
     * before a Hamming/L1 filter or a cheaper ANN index. */
-  /** JL ±1 projection of any (vec_id, embedding: array<float>) frame to
-    * 8 int64 sketch dims — see [[q131JlProjection]] for the contract. */
-  private[graft] def jlProjectOf(vectors: DataFrame): DataFrame =
-    vectors
-      .select(col("vec_id"),
-        transform(col("embedding"), x => floor(x.cast("double") * 1000)).as("q"))
-      .select(col("vec_id") +: (0 until NPlanes).map { j =>
-        aggregate(
-          zip_with(col("q"), typedLit(jlSigns(j).toSeq), (a, b) => a * b),
-          lit(0L), (acc, x) => acc + x).as(s"p$j")
-      }: _*)
-
   val q131JlProjection: Q = {
     val sqlDims = (0 until NPlanes).map { j =>
       val lst = jlSigns(j).mkString("[", ",", "]")

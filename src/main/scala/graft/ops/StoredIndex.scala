@@ -5,26 +5,33 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import scala.jdk.CollectionConverters._
+import scala.util.chaining._
 
-/** The one manifest every stored-index generation (ANN, Bloom, bands,
-  * BM25) carries at `<root>/manifest.json`: the format version, the
-  * family, and per piece the generation roots holding its parquet
-  * files plus its Spark schema.
+/** The one on-disk format of every stored-index generation (ANN, Bloom,
+  * bands, BM25), and the only code that writes it. A generation is a
+  * root holding one parquet directory per piece, `<root>/<piece>`, and
+  * `<root>/manifest.json`: the format version, the family, and per
+  * piece the generation roots holding its files plus its Spark schema.
   *
-  *  - Written LAST by each write / refresh through the Hadoop FS API —
-  *    metadata, not a Spark job — so a generation with a manifest is a
-  *    complete one (a write first removes any stale manifest at its
-  *    root).
+  *  - A family writes a generation through [[write]] (a build) or
+  *    [[refresh]] (load → guard → its in-memory refresh), whose
+  *    [[Writer]] `put`s one piece at a time. The first `put` removes a
+  *    stale manifest: a body that fails before it leaves the root as it
+  *    was, one that fails after leaves no manifest describing other
+  *    data. The manifest is written when the body returns — through the
+  *    Hadoop FS API, not a Spark job — so a generation with a manifest
+  *    is a complete one.
   *  - Opening a piece passes the stored schema to the parquet reader:
   *    Spark's schema inference runs a job per read even with
   *    `mergeSchema=false`, so an index opens with none.
   *  - Piece roots are stored RELATIVE to the generation root, oldest
   *    first: a tree of generations moved or copied together stays
   *    readable. A refresh REFERENCES the pieces it does not change
-  *    (ANN's frozen quantizers, BM25's older postings/df segments)
-  *    instead of copying them — so a generation must outlive every
-  *    generation refreshed from it, and a refresh may not write into
-  *    any root its base references ([[requireNewGeneration]]).
+  *    (ANN's frozen quantizers through `keep`, BM25's older
+  *    postings/df segments, which a refresh's `put` extends) instead
+  *    of copying them — so a generation must outlive every generation
+  *    refreshed from it, and a refresh may not write into any root its
+  *    base references.
   *  - A generation without a manifest (written before it existed)
   *    opens as before: by schema inference from `<root>/<piece>`, BM25
   *    segments from a legacy `segments.txt` when one is present, else
@@ -58,13 +65,6 @@ private[graft] object StoredIndex {
       p.schema.fold(s.read)(s.read.schema).parquet(p.roots.map(r => new Path(r, name).toString): _*)
     }
 
-    /** The piece with a known schema, for a manifest that references it
-      * (a manifest-less base infers it here, once). */
-    def described(s: SparkSession, name: String): Piece = {
-      val p = piece(name)
-      if (p.schema.isDefined) p else p.copy(schema = Some(frame(s, name).schema))
-    }
-
     /** Every root this generation reads, its own included. */
     def roots: Seq[Path] = (root +: pieces.flatMap(_.roots)).distinct
   }
@@ -74,7 +74,7 @@ private[graft] object StoredIndex {
   private def fsOf(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sessionState.newHadoopConf())
 
-  def qualify(s: SparkSession, path: String): Path = {
+  private def qualify(s: SparkSession, path: String): Path = {
     val p = new Path(path)
     fsOf(s, p).makeQualified(p)
   }
@@ -114,46 +114,86 @@ private[graft] object StoredIndex {
     gen
   }
 
-  /** Refuse an `outPath` that `base` reads from: the refresh would
-    * overwrite a piece that `base` (and every generation sharing it)
-    * still references. */
-  def requireNewGeneration(fn: String, s: SparkSession, base: Generation, outPath: String): Unit =
+  /** Write a new `family` generation at `path`: `body` puts its pieces,
+    * then the manifest is committed. */
+  def write(s: SparkSession, path: String, family: String)(body: Writer => Unit): Unit = {
+    val w = new Writer(s, path, family, None)
+    body(w)
+    w.commit()
+  }
+
+  /** Refresh the `family` generation at `path` into a new one at
+    * `outPath`: `body` gets the opened base and a [[Writer]] for
+    * `outPath`. `outPath` may not be a root the base reads: the refresh
+    * would overwrite a piece that the base (and every generation
+    * sharing it) still references; `fn` names the refusing call. */
+  def refresh(fn: String, s: SparkSession, path: String, family: String, outPath: String)
+             (body: (Generation, Writer) => Unit): Unit = {
+    val base = load(s, path, family)
     require(!base.roots.contains(qualify(s, outPath)),
       s"$fn writes a new generation: outPath must differ from path " +
         s"and from every segment of its chain (${base.roots.mkString(", ")})")
-
-  /** Drop a stale manifest at `path` before its pieces are rewritten,
-    * so a failed write never leaves a manifest describing other data. */
-  def retire(s: SparkSession, path: String): Unit = {
-    val mf = new Path(qualify(s, path), ManifestFile)
-    fsOf(s, mf).delete(mf, false)
+    val w = new Writer(s, outPath, family, Some(base))
+    body(base, w)
+    w.commit()
   }
 
-  /** Write the manifest of the generation at `path`, LAST: `own` pieces
-    * were written under `path` with the given schemas; `shared` pieces
-    * carry their own roots (referenced generations, and for a BM25
-    * segment list `path` itself). */
-  def commit(s: SparkSession, path: String, family: String,
-             own: Seq[(String, StructType)], shared: Seq[Piece] = Nil): Unit = {
-    val root = qualify(s, path)
-    val pieces = own.map { case (n, sch) => Piece(n, Seq(root), Some(sch)) } ++ shared
-    require(pieces.map(_.name).sorted == Layouts(family).sorted,
-      s"$family manifest must describe exactly ${Layouts(family).mkString(", ")}")
-    val doc = Json.createObjectNode()
-    doc.put("format", FormatVersion)
-    doc.put("family", family)
-    val arr = doc.putArray("pieces")
-    pieces.foreach { p =>
-      val o = arr.addObject()
-      o.put("name", p.name)
-      val rs = o.putArray("roots")
-      p.roots.foreach(r => rs.add(relativize(root, r)))
-      o.set[JsonNode]("schema", Json.readTree(p.schema.get.json))
+  /** Lays out one generation at `path`; the manifest lists the pieces
+    * stored under `path` alone first, then those that reference other
+    * roots, each in the order it was put or kept. */
+  final class Writer private[StoredIndex] (s: SparkSession, path: String, family: String,
+                                           base: Option[Generation]) {
+    private val root = qualify(s, path)
+    private val pieces = scala.collection.mutable.ArrayBuffer.empty[Piece]
+    /** Removes a stale manifest, once, at the first `put`. */
+    private lazy val retireStale: Unit = fsOf(s, root).delete(new Path(root, ManifestFile), false)
+
+    /** Write `df` as piece `name` (partitioned by `partitionBy`). In a
+      * refresh, a segmented piece (BM25's postings, df) adds a segment:
+      * the base's roots, then this one, with the base's schema. */
+    def put(name: String, df: DataFrame, partitionBy: String*): Unit = {
+      retireStale
+      val out = df.write.mode("overwrite")
+      (if (partitionBy.isEmpty) out else out.partitionBy(partitionBy: _*)).parquet(s"$path/$name")
+      pieces += (if (base.isDefined && Segmented(name)) kept(name).pipe(p => p.copy(roots = p.roots :+ root))
+        else Piece(name, Seq(root), Some(schemaOf(df, partitionBy: _*))))
     }
-    val mf = new Path(root, ManifestFile)
-    val out = fsOf(s, mf).create(mf, true)
-    try out.write(Json.writeValueAsBytes(doc))
-    finally out.close()
+
+    /** Piece `name` as put: a read typed by its recorded schema. */
+    def stored(name: String): DataFrame =
+      s.read.schema(pieces.find(_.name == name).get.schema.get).parquet(s"$path/$name")
+
+    /** Reference the base's piece `name` unchanged. */
+    def keep(name: String): Unit = pieces += kept(name)
+
+    /** The base's piece with a known schema (a manifest-less base infers
+      * it here, once). */
+    private def kept(name: String): Piece = {
+      val b = base.getOrElse(throw new IllegalStateException(s"a $family build has no base piece $name"))
+      val p = b.piece(name)
+      if (p.schema.isDefined) p else p.copy(schema = Some(b.frame(s, name).schema))
+    }
+
+    /** Write the manifest, LAST. */
+    private[StoredIndex] def commit(): Unit = {
+      require(pieces.map(_.name).sorted == Layouts(family).sorted,
+        s"$family manifest must describe exactly ${Layouts(family).mkString(", ")}")
+      val doc = Json.createObjectNode()
+      doc.put("format", FormatVersion)
+      doc.put("family", family)
+      val arr = doc.putArray("pieces")
+      pieces.sortBy(_.roots != Seq(root)).foreach { p =>
+        val o = arr.addObject()
+        o.put("name", p.name)
+        val rs = o.putArray("roots")
+        p.roots.foreach(r => rs.add(relativize(root, r)))
+        o.set[JsonNode]("schema", Json.readTree(p.schema.get.json))
+      }
+      val mf = new Path(root, ManifestFile)
+      val out = fsOf(s, mf).create(mf, true)
+      try out.write(Json.writeValueAsBytes(doc))
+      finally out.close()
+    }
   }
 
   private def parse(root: Path, mf: Path, text: String): Generation = {

@@ -392,24 +392,6 @@ object TextAnalysis {
       .limit(50)
   }
 
-  /** BM25 ranking (k1 = 1.2, b = 0.75) for the [[SearchTerms]] OR-query —
-    * the full Okapi scorer with term frequency AND length normalization,
-    * completing the search family (q120 boolean containment, q121
-    * quantized-IDF rarity, q129 BM25).
-    *
-    * All arithmetic is FIXED-POINT int64 (milli-units, integer DIV at
-    * every step) so the score is bit-identical across engines and
-    * aggregation orders — no ln/pow (libm results are not portable). The
-    * idf is the rational core of Robertson-Sparck Jones,
-    * `(N - df + ½)/(df + ½)` scaled ×1000, monotone in the classic log
-    * idf, so ranking order is preserved. Bounds: exact while
-    * `N·tf < 4·10¹⁴` (10⁹ docs × 10³ tf) — beyond that, drop one scale
-    * factor.
-    *
-    * Scale: tf aggregates at (doc, term) grain with map-side combine
-    * (only matched terms survive the scan-side IN filter); df is a
-    * |terms|-row broadcast; corpus stats (N, avgdl) ride one 1-row
-    * broadcast cross join; top-50 is TakeOrderedAndProject. */
   /** BM25 (k1 = 1.2, b = 0.75) top-`k` ranking of `docs` (doc_id, text)
     * for the OR-query `terms`, in exact milli-unit fixed point — see
     * [[q129Bm25]] for the arithmetic and scale contract. */
@@ -445,6 +427,24 @@ object TextAnalysis {
       .limit(k)
   }
 
+  /** BM25 ranking (k1 = 1.2, b = 0.75) for the [[SearchTerms]] OR-query —
+    * the full Okapi scorer with term frequency AND length normalization,
+    * completing the search family (q120 boolean containment, q121
+    * quantized-IDF rarity, q129 BM25).
+    *
+    * All arithmetic is FIXED-POINT int64 (milli-units, integer DIV at
+    * every step) so the score is bit-identical across engines and
+    * aggregation orders — no ln/pow (libm results are not portable). The
+    * idf is the rational core of Robertson-Sparck Jones,
+    * `(N - df + ½)/(df + ½)` scaled ×1000, monotone in the classic log
+    * idf, so ranking order is preserved. Bounds: exact while
+    * `N·tf < 4·10¹⁴` (10⁹ docs × 10³ tf) — beyond that, drop one scale
+    * factor.
+    *
+    * Scale: tf aggregates at (doc, term) grain with map-side combine
+    * (only matched terms survive the scan-side IN filter); df is a
+    * |terms|-row broadcast; corpus stats (N, avgdl) ride one 1-row
+    * broadcast cross join; top-50 is TakeOrderedAndProject. */
   val q129Bm25: Q = Q.sql(
     "q129_bm25",
     """WITH d AS (
@@ -473,19 +473,6 @@ object TextAnalysis {
     bm25Of(Tables.documents(s, dir), SearchTerms, 50)
   }
 
-  /** Cross-subcorpus contamination matrix: pairwise Jaccard overlap of
-    * the distinct 5-gram shingle sets of each language — the "how much
-    * do my data sources share" report a corpus-mixing pipeline runs
-    * before weighting (and the symmetric generalization of q101's
-    * one-directional eval-set decontamination).
-    *
-    * Scale (100 TB): everything runs at (lang, shingle-HASH) grain —
-    * distinct-ified per subcorpus before the self-join, so the join
-    * input is each subcorpus's vocabulary, not its token stream, and a
-    * shingle present in L subcorpora yields only C(L,2) ≤ C(|langs|,2)
-    * pairs. Join keys are 60-bit md5 longs (8 B), the q25 shuffle-
-    * compactness rule. Zero-overlap pairs drop out (inner join) —
-    * absent row = no shared shingle. */
   /** Pairwise Jaccard overlap of distinct 5-gram shingle sets between
     * the groups of `groupCol` — see [[q142LangOverlap]]. Emits
     * (group_a, group_b, shared, jaccard); zero-overlap pairs absent. */
@@ -518,6 +505,19 @@ object TextAnalysis {
           / (col("na") + col("nb") - col("shared")), 6).as("jaccard"))
   }
 
+  /** Cross-subcorpus contamination matrix: pairwise Jaccard overlap of
+    * the distinct 5-gram shingle sets of each language — the "how much
+    * do my data sources share" report a corpus-mixing pipeline runs
+    * before weighting (and the symmetric generalization of q101's
+    * one-directional eval-set decontamination).
+    *
+    * Scale (100 TB): everything runs at (lang, shingle-HASH) grain —
+    * distinct-ified per subcorpus before the self-join, so the join
+    * input is each subcorpus's vocabulary, not its token stream, and a
+    * shingle present in L subcorpora yields only C(L,2) ≤ C(|langs|,2)
+    * pairs. Join keys are 60-bit md5 longs (8 B), the q25 shuffle-
+    * compactness rule. Zero-overlap pairs drop out (inner join) —
+    * absent row = no shared shingle. */
   val q142LangOverlap: Q = Q.sql(
     "q142_lang_overlap",
     """WITH wl AS (

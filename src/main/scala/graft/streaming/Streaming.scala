@@ -637,25 +637,19 @@ object Streaming {
     * — shingle hashes and band keys are the dedup-sufficient statistic.
     * The corpus is shingled ONCE: bands/ derives from docs/ as
     * persisted (one posexplode of stored arrays), so the pieces can
-    * never disagree. The generation's manifest ([[StoredIndex]]) is
-    * written last. */
+    * never disagree. */
   def writeBandIndex(standing: DataFrame, path: String): Unit = {
     // no repartition(doc_id) before the docs/ write (r15, guide §2.4):
     // hashedShinglesOf ends in a groupBy(doc_id) aggregation, so the
     // frame is ALREADY hash-partitioned by doc_id — the explicit
     // repartition re-shuffled the heaviest payload in the index (the
     // per-doc shingle arrays) a second time for an identical layout.
-    val s = standing.sparkSession
-    val docs = standingBandIndex(standing)._2
-    val docsSchema = StoredIndex.schemaOf(docs)
-    StoredIndex.retire(s, path)
-    docs.write.mode("overwrite").parquet(s"$path/docs")
-    val bands = s.read.schema(docsSchema).parquet(s"$path/docs")
-      .select(col("doc_id"), posexplode(col("bkeys")).as(Seq("b", "bkey")))
-      .repartition(col("b"), col("bkey"))
-    bands.write.mode("overwrite").parquet(s"$path/bands")
-    StoredIndex.commit(s, path, "band",
-      Seq("docs" -> docsSchema, "bands" -> StoredIndex.schemaOf(bands)))
+    StoredIndex.write(standing.sparkSession, path, "band") { w =>
+      w.put("docs", standingBandIndex(standing)._2)
+      w.put("bands", w.stored("docs")
+        .select(col("doc_id"), posexplode(col("bkeys")).as(Seq("b", "bkey")))
+        .repartition(col("b"), col("bkey")))
+    }
   }
 
   /** Re-open a [[writeBandIndex]] artifact: (bands, docs), located and
@@ -691,16 +685,11 @@ object Streaming {
     * `outPath` (never in-place: `outPath` may not be `path`). */
   def refreshStoredBandIndex(s: SparkSession, path: String,
                              delta: DataFrame, outPath: String): Unit = {
-    val base = StoredIndex.load(s, path, "band")
-    StoredIndex.requireNewGeneration("refreshStoredBandIndex", s, base, outPath)
-    val (bands, docs) = refreshBandIndex(bandPieces(s, base), delta)
-    val docsOut = docs.repartition(col("doc_id"))
-    val bandsOut = bands.repartition(col("b"), col("bkey"))
-    StoredIndex.retire(s, outPath)
-    docsOut.write.mode("overwrite").parquet(s"$outPath/docs")
-    bandsOut.write.mode("overwrite").parquet(s"$outPath/bands")
-    StoredIndex.commit(s, outPath, "band", Seq("docs" -> StoredIndex.schemaOf(docsOut),
-      "bands" -> StoredIndex.schemaOf(bandsOut)))
+    StoredIndex.refresh("refreshStoredBandIndex", s, path, "band", outPath) { (base, w) =>
+      val (bands, docs) = refreshBandIndex(bandPieces(s, base), delta)
+      w.put("docs", docs.repartition(col("doc_id")))
+      w.put("bands", bands.repartition(col("b"), col("bkey")))
+    }
   }
 
   /** q207: [[refreshBandIndex]] oracle-gated — the ENGINE builds the

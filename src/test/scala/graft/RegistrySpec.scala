@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Registry-wide invariants — the contracts every entry must honor for
   * the driver's hash-compared gate to stay meaningful:
@@ -41,6 +42,23 @@ class RegistrySpec extends AnyFunSuite {
     val qnames = rows.flatMap(r => "q\\d+[a-z0-9_]+".r.findAllIn(r)).distinct
     assert(qnames.nonEmpty && qnames.forall(registered),
       s"table references unregistered queries: ${qnames.filterNot(registered)}")
+  }
+
+  test("no scaladoc is stacked on another: a `*/` line is never followed by a `/**` line") {
+    // scaladoc keeps only the last of two stacked blocks, so the first
+    // documents nothing and its definition goes undocumented
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally walk.close()
+    }
+    val stacked = files.flatMap { p =>
+      val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
+      lines.indices.drop(1).collect {
+        case i if lines(i - 1).trim.endsWith("*/") && lines(i).trim.startsWith("/**") => s"$p:${i + 1}"
+      }
+    }
+    assert(files.nonEmpty)
+    assert(stacked.isEmpty, s"${stacked.size} stacked scaladoc blocks")
   }
 
   test("README scale-knob table matches Knobs; every knob is a real named facade parameter") {

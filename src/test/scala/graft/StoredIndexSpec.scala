@@ -290,6 +290,30 @@ class StoredIndexSpec extends AnyFunSuite {
     finally Files.move(parked, Paths.get(tree))
   }
 
+  test("a refresh or write that fails before its first put leaves the generation at its root intact") {
+    val d = docs.select(col("doc_id"), col("text"))
+    val (p0, p1) = (Files.createTempDirectory("bm25w0").toString, Files.createTempDirectory("bm25w1").toString)
+    Graft.writeBm25Index(d.filter(col("doc_id") % 3 =!= 0), p0)
+    Graft.refreshStoredBm25Index(spark, p0, d.filter(col("doc_id") % 3 === 0), p1)
+    val manifest = Paths.get(p1, ops.StoredIndex.ManifestFile)
+    def state(p: String) = opened("bm25", p).map(sortedRows)
+    val (m1, rows1) = (Files.readAllBytes(manifest).toSeq, state(p1))
+    // the ADD-only collision guard fails before the refresh puts a piece
+    val ex = intercept[IllegalArgumentException] {
+      Graft.refreshStoredBm25Index(spark, p0, d.filter(col("doc_id") === 1), p1)
+    }
+    assert(ex.getMessage.contains("ADD-only"))
+    assert(Files.readAllBytes(manifest).toSeq == m1 && state(p1) == rows1,
+      "a refused refresh must leave the generation at outPath readable as it was")
+    // a write whose body fails before any put
+    val boom = intercept[IllegalStateException] {
+      ops.StoredIndex.write(spark, p1, "bm25")(_ => throw new IllegalStateException("boom"))
+    }
+    assert(boom.getMessage == "boom")
+    assert(Files.readAllBytes(manifest).toSeq == m1 && state(p1) == rows1,
+      "a failed write must leave the generation at its path readable as it was")
+  }
+
   test("an ANN refresh writes only codes/: its manifest references the base's quantizers") {
     val (g0, g1) = (s"$tree/ann/gen0", s"$tree/ann/gen1")
     assert(!Files.exists(Paths.get(s"$g1/centroids")) && !Files.exists(Paths.get(s"$g1/codebook")))

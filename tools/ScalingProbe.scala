@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * candidate work (each band bucket holds `Copies` colliding members —
   * per-group pair count is the constant C(Copies,2), so total TRUE pair
   * volume grows linearly and any super-linear time growth is the
-  * OPERATOR, not the data). Run: `sbt "runMain graft.ScalingProbe"`,
+  * OPERATOR, not the data). Run: `sbt "Test/runMain graft.ScalingProbe"`,
   * optional env SPARK_GRAFT_SCALE_COPIES (default 10). */
 object ScalingProbe {
   private val Queries = Seq(

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * whether one reduce task owns a quadratic blob at 100 TB.
   *
   * Results: plans/R15_SKEW.md. Dev-only probe, not driver contract —
-  * run via tools/graftrun.sh once compiled. */
+  * run `sbt Test/compile`, then `tools/graftrun.sh graft.SkewProbe`. */
 object SkewProbe {
   private val HotCopies = 1000
 

@@ -2,7 +2,12 @@
 # Direct-JVM runner for graft mains (probe/plan work): mirrors build.sbt's
 # forked-run JVM flags without paying sbt startup or fighting its build
 # lock. Usage: tools/graftrun.sh graft.PlanDump q158_best_survivors ...
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# The classpath holds the main classes and the test classes, where the
+# probes in tools/ compile (run `sbt Test/compile` first), e.g.
+# tools/graftrun.sh graft.SkewProbe
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+: "${SPARK_HOME:?set SPARK_HOME to the Spark distribution}"
+CP="$ROOT/target/scala-2.13/classes:$ROOT/target/scala-2.13/test-classes:$(ls "$SPARK_HOME"/jars/*.jar | tr '\n' ':')"
 ADD_OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
          java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
