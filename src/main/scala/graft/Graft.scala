@@ -237,14 +237,7 @@ object Graft {
   /** Greedy token-budget packing: (shard, bin, n_docs, sum_tokens) with
     * `shards`-way parallelism and deterministic membership. */
   def packTokens(docs: DataFrame, budget: Long): DataFrame =
-    ops.Packing.pack(
-      docs.select(
-        (call_function("graft_md5long64",
-          concat(lit("pack:"), col("doc_id").cast("string"))) % 32).as("shard"),
-        col("doc_id"),
-        size(regexp_extract_all(col("text"), lit("[a-z]+|[0-9]+"), lit(0)))
-          .cast("long").as("tokens")),
-      budget)
+    ops.Packing.pack(ops.Packing.shardedTokens(docs), budget)
 
   /** Deterministic stratified sample over (doc_id, lang, …): keep each
     * row iff md5(salt+doc_id) mod 10⁴ falls under its language's rate —
@@ -280,32 +273,13 @@ object Graft {
 
   /** SimHash-banded near-dup pairs (i, j, hamming ≤ 3) — exact by
     * pigeonhole over 4×12-bit bands of the 48-bit shingle fingerprint. */
-  def simhashNearDupPairs(docs: DataFrame): DataFrame = {
-    val sim = ops.Dedup.hashedShinglesOf(docs)
-      .select(col("doc_id"), call_function("graft_simhash48", col("hs")).as("sim"))
-    val bands = sim.select(col("doc_id"),
-      array((0 until 4).map(b =>
-        lit(b * 4096L) + shiftright(col("sim"), 12 * b) % 4096): _*).as("hs"))
-    ops.Dedup.jaccardCandidates(bands, ops.Dedup.MaxShingleDf)
-      .join(sim.select(col("doc_id").as("i"), col("sim").as("si")), "i")
-      .join(sim.select(col("doc_id").as("j"), col("sim").as("sj")), "j")
-      .withColumn("hamming", expr("bit_count(si ^ sj)"))
-      .filter(col("hamming") <= 3)
-      .select(col("i"), col("j"), col("hamming"))
-  }
+  def simhashNearDupPairs(docs: DataFrame): DataFrame =
+    ops.Dedup.simhashPairsOf(docs)
 
   /** Sliding-window chunking over (doc_id, text): (doc_id, chunk_id,
     * n_words, chunk_md5) with `window`-word windows at `stride`. */
   def chunkDocs(docs: DataFrame, window: Int = 32, stride: Int = 24): DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"),
-        posexplode(transform(
-          sequence(lit(0), floor((size(col("w")) - 1) / lit(stride)).cast("int")),
-          k => slice(col("w"), k * stride + 1, lit(window)))))
-      .select(col("doc_id"), col("pos").as("chunk_id"),
-        size(col("col")).as("n_words"),
-        md5(concat_ws(" ", col("col"))).as("chunk_md5"))
+    ops.TextAnalysis.chunksOf(docs, window, stride)
 
   /** Streaming first-seen dedup over (doc_id, content_hash) rows. */
   def dedupStream(docs: Dataset[streaming.Streaming.Doc]): Dataset[streaming.Streaming.Doc] =
@@ -1040,9 +1014,10 @@ object Graft {
     * grain (one corpus pass builds the word-count table; every round
     * then touches |vocabulary| rows); argmax tie-breaks totally, so the
     * learned table is a pure function of the corpus. May return fewer
-    * than `n` rows if no pair occurs twice. */
+    * than `n` rows if no pair occurs twice. Sequential: one merge per
+    * recount round — [[bpeMergesBatched]] at maxBatch = 1. */
   def bpeMerges(docs: DataFrame, n: Int = 10): DataFrame =
-    ops.Bpe.trainMerges(docs, n)
+    ops.Bpe.trainMerges(docs, n, maxBatch = 1)
 
   /** Batched twin of [[bpeMerges]] for REAL vocabulary sizes: the
     * sequential trainer costs one Spark job + driver argmax per merge
@@ -1051,10 +1026,10 @@ object Graft {
     * round (longest rank-order prefix rule), so the job count falls
     * toward n/maxBatch on Zipf-shaped pair heads while the learned
     * table matches sequential training on non-interacting batches
-    * (see the ops.Bpe scaladoc for the exactness contract;
-    * maxBatch = 1 IS the sequential trainer). */
+    * (see the ops.Bpe scaladoc for the exactness contract; both
+    * methods run the one trainer, and maxBatch = 1 IS [[bpeMerges]]). */
   def bpeMergesBatched(docs: DataFrame, n: Int, maxBatch: Int = 16): DataFrame =
-    ops.Bpe.trainMergesBatched(docs, n, maxBatch)
+    ops.Bpe.trainMerges(docs, n, maxBatch)
 
   /** Leakage-safe k-fold CV assignment: [[leakageSafeSplit]] generalized
     * to folds — fold = md5(near-dup component) % k, so transitive

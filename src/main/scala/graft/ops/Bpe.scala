@@ -13,11 +13,13 @@ import graft.{Q, Tables}
   * The industrial-scale structure: BPE statistics live at WORD-TYPE
   * grain, not corpus grain — one corpus pass builds the (word, count)
   * table, and every merge round then works on |vocabulary| rows
-  * (millions at 100 TB, not billions). Per round: adjacent-pair counts
-  * via one explode + map-side-combined aggregation, ONE argmax row
-  * collected to the driver (scalars-only driver state, the CC-loop
-  * discipline), and a row-local fold applying the merge left-to-right
-  * non-overlapping — then a lineage-truncating [[Barrier]].
+  * (millions at 100 TB, not billions). Per round of the one trainer,
+  * [[trainMerges]]: adjacent-pair counts via one explode + map-side-
+  * combined aggregation, the top ≤ maxBatch ranked rows collected to the
+  * driver (scalars-only driver state, the CC-loop discipline), and a
+  * row-local fold applying the accepted merges left-to-right
+  * non-overlapping — then a lineage-truncating [[Barrier]]. maxBatch = 1
+  * is the sequential trainer; larger batches cut the job count.
   *
   * Determinism: the argmax tie-breaks on (count DESC, left, right) — a
   * total order — so the learned merge table is a pure function of the
@@ -72,81 +74,27 @@ object Bpe {
   /** Train `nMerges` BPE merges on (doc_id, text) docs. Returns the
     * merge table (step, left, right, pair_count) in learning order.
     *
-    * COST CONTRACT — O(nMerges) sequential Spark jobs: Sennrich BPE is
-    * inherently sequential (each argmax depends on the previous
-    * merge's recount), so every merge costs one pair-aggregation job
-    * plus one 1-row driver argmax, checkpointed. Fine at the shipped
-    * nMerges=10; at a REAL vocabulary (50k merges) that is 50k Spark
-    * jobs / driver round-trips — hours of scheduler overhead before
-    * any data is touched. That is this trainer's practical ceiling
-    * (≲ a few hundred merges). Past it, use [[trainMergesBatched]],
-    * which learns several non-interacting merges per recount round;
-    * statistics run at word-TYPE grain either way, so the per-round
-    * data cost is |vocabulary|, not corpus size. */
-  private[graft] def trainMerges(docs: DataFrame, nMerges: Int): DataFrame = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    val spark = docs.sparkSession
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    // every round's state is a barrier of this scope: a round frees its
-    // predecessor once it has materialized, and the scope frees the last
-    // one (the merge table lives in driver memory), a failed round included
-    Barrier.scoped { scope =>
-      var state = scope.pin(wordTable(docs))
-      var step = 1
-      var exhausted = false
-      while (step <= nMerges && !exhausted) {
-        // one aggregated pair table per round; the argmax is ONE driver row
-        val top = pairCounts(state)
-          .filter(col("cnt") >= 2) // a pair seen once compresses nothing
-          .orderBy(col("cnt").desc, col("left"), col("right"))
-          .limit(1).collect()
-        if (top.isEmpty) exhausted = true
-        else {
-          val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-          merges += ((step, l, r, c))
-          val lq = l.replace("\\", "\\\\").replace("'", "\\'")
-          val rq = r.replace("\\", "\\\\").replace("'", "\\'")
-          // left-to-right non-overlapping fold: (out, pend) state walks the
-          // symbol array once; pend holds the candidate left element
-          val mergedSyms = expr(
-            s"""CASE WHEN x.pend = '' THEN x.out
-               |     ELSE concat(x.out, array(x.pend)) END""".stripMargin)
-          val folded = expr(
-            s"""aggregate(syms,
-               |  named_struct('out', CAST(array() AS ARRAY<STRING>), 'pend', ''),
-               |  (st, s) -> CASE
-               |    WHEN st.pend = '$lq' AND s = '$rq'
-               |      THEN named_struct('out', concat(st.out, array('$lq$rq')), 'pend', '')
-               |    WHEN st.pend = '' THEN named_struct('out', st.out, 'pend', s)
-               |    ELSE named_struct('out', concat(st.out, array(st.pend)), 'pend', s)
-               |  END)""".stripMargin)
-          val next = scope.pin(
-            state.withColumn("x", folded)
-              .select(col("word"), col("n"), mergedSyms.as("syms")))
-          // next is materialized: the superseded round's blocks are dead
-          Barrier.release(state)
-          state = next
-          step += 1
-        }
-      }
-    }
-    spark.createDataFrame(merges.toSeq)
-      .toDF("step", "left", "right", "pair_count")
-      .orderBy(col("step"))
-  }
-
-  /** Batched BPE training — [[trainMerges]]' answer to its own
-    * O(nMerges)-jobs ceiling: per recount round, accept the longest
-    * RANK-ORDER PREFIX of the (cnt DESC, left, right) pair list whose
-    * members are pairwise symbol-disjoint (no shared left/right/merged
-    * symbol, capped at `maxBatch`), apply them in one fold pass, and
-    * recount once. Job count drops from nMerges to the number of
-    * rounds — on Zipf-shaped heads (frequent pairs from different
-    * words) that approaches nMerges/maxBatch; on chained heads (a
-    * word's internal pairs all tie) a round degrades to one merge,
-    * never to wrong output.
+    * Per recount round, accept the longest RANK-ORDER PREFIX of the
+    * (cnt DESC, left, right) pair list whose members are pairwise
+    * symbol-disjoint (no shared left/right/merged symbol, capped at
+    * `maxBatch`), apply them in one fold pass, and recount once.
+    * `maxBatch` = 1 is Sennrich's sequential trainer (one merge per
+    * round — what q191's oracle replays and `Graft.bpeMerges` runs).
     *
-    * Equivalence to the sequential trainer: a batch applies merges in
+    * COST CONTRACT — O(rounds) sequential Spark jobs: each argmax
+    * depends on the previous round's recount, so every round costs one
+    * pair-aggregation job plus one ≤ maxBatch-row driver collect,
+    * checkpointed. At maxBatch = 1 that is one job per merge — fine at
+    * q191's 10 merges, but a REAL vocabulary (50k merges) would pay 50k
+    * Spark jobs / driver round-trips, hours of scheduler overhead before
+    * any data is touched. Batching is the answer: on Zipf-shaped heads
+    * (frequent pairs from different words) the round count approaches
+    * nMerges/maxBatch; on chained heads (a word's internal pairs all
+    * tie) a round degrades to one merge, never to wrong output.
+    * Statistics run at word-TYPE grain either way, so the per-round data
+    * cost is |vocabulary|, not corpus size.
+    *
+    * Equivalence to sequential training: a batch applies merges in
     * rank order, and symbol-disjointness makes each accepted pair's
     * count invariant under the others' application, so the table
     * matches sequential training whenever every pair INTERACTING with
@@ -158,10 +106,8 @@ object Bpe {
     * count and re-rank above a later batch member purely through the
     * lexicographic tiebreak on the new concatenated symbol name.
     * BpeSpec pins batched == sequential on an interacting multi-word
-    * fixture and maxBatch=1 == sequential on the real corpus;
-    * maxBatch=1 eliminates the gap entirely. */
-  private[graft] def trainMergesBatched(docs: DataFrame, nMerges: Int,
-                                        maxBatch: Int = 16): DataFrame = {
+    * fixture; maxBatch = 1 eliminates the gap entirely. */
+  private[graft] def trainMerges(docs: DataFrame, nMerges: Int, maxBatch: Int = 1): DataFrame = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     require(maxBatch >= 1, s"maxBatch must be >= 1, got $maxBatch")
     val spark = docs.sparkSession
@@ -176,7 +122,7 @@ object Bpe {
       while (step <= nMerges && !exhausted) {
         val want = math.min(maxBatch, nMerges - step + 1)
         val ranked = pairCounts(state)
-          .filter(col("cnt") >= 2)
+          .filter(col("cnt") >= 2) // a pair seen once compresses nothing
           .orderBy(col("cnt").desc, col("left"), col("right"))
           .limit(want).collect()
         if (ranked.isEmpty) exhausted = true
@@ -196,6 +142,7 @@ object Bpe {
           }
           val next = scope.pin(
             state.select(col("word"), col("n"), expr(folded).as("syms")))
+          // next is materialized: the superseded round's blocks are dead
           Barrier.release(state)
           state = next
         }
@@ -265,8 +212,8 @@ object Bpe {
     * drift, an overlapping-merge difference, or a missed exhaustion
     * all pick a different merge at some step and break the compare.
     * (The one remaining genuinely non-SQL surface in this family is
-    * the batched trainer's prefix rule — q191 runs maxBatch=1
-    * semantics, and BpeSpec pins batched == sequential.) */
+    * the trainer's batching prefix rule — q191 runs maxBatch = 1, and
+    * BpeSpec pins batched == sequential.) */
   val q191BpeMerges: Q = Q.sql(
     "q191_bpe_merges",
     s"""WITH wt0 AS (
@@ -285,15 +232,16 @@ object Bpe {
             s" CAST(cnt AS BIGINT) AS pair_count FROM m$i").mkString("\nUNION ALL ")})
        |ORDER BY step""".stripMargin
   ) { (s, dir) =>
-    trainMerges(Tables.documents(s, dir), 10)
+    trainMerges(Tables.documents(s, dir), 10, maxBatch = 1)
   }
 
   private def esc(s: String): String =
     s.replace("\\", "\\\\").replace("'", "\\'")
 
   /** One merge application as a SQL-expression string over an
-    * ARRAY<STRING> symbol expression: the same (out, pend) left-to-right
-    * non-overlapping fold [[trainMerges]] trains with, here with the
+    * ARRAY<STRING> symbol expression: the (out, pend) left-to-right
+    * non-overlapping fold — `out` the symbols emitted so far, `pend` the
+    * candidate left element — that [[trainMerges]] trains with, with the
     * 4-arg `aggregate` finish lambda so chained merges nest LINEARLY
     * (each step references the previous once — no expression blow-up). */
   private def foldOnceExpr(inner: String, l: String, r: String): String = {

@@ -17,7 +17,9 @@ import graft.{Q, Tables}
   * partial+final aggregate keyed by doc_id. Shingling and 60-bit hashing
   * are shared with the dedup family ([[Dedup.hashedShinglesOf]]), so one
   * materialized shingle pass can feed dedup AND decontamination in a real
-  * pipeline run.
+  * pipeline run; the positional span probes cut their 5-grams with the
+  * same [[Dedup.wordWindows]], so a corpus window and an eval shingle
+  * hash alike by construction, not by a second spelling of the format.
   */
 object Decontam {
 
@@ -562,10 +564,7 @@ object Decontam {
     val base = corpus.select(col("doc_id"), split(col("text"), " ").as("w"))
     val hits = base
       .filter(size(col("w")) >= 5)
-      .select(col("doc_id"), posexplode(transform(
-        expr("sequence(0, size(w) - 5)"), i =>
-          Hashes.hexLong(concat_ws(" ", get(col("w"), i), get(col("w"), i + 1),
-            get(col("w"), i + 2), get(col("w"), i + 3), get(col("w"), i + 4))))))
+      .select(col("doc_id"), posexplode(Dedup.wordWindows(col("w"), 5, each = Hashes.hexLong)))
       .select(col("doc_id"), col("pos").as("j"), col("col").as("h"))
       .join(broadcast(evalH), Seq("h"), "left_semi")
       .groupBy(col("doc_id")).agg(sort_array(collect_list(col("j"))).as("s"))
@@ -697,10 +696,7 @@ object Decontam {
     val dh = Barrier.pin(evalShingleHashes(deltaEval))
     val affected0 = corpus.select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
-      .select(col("doc_id"), explode(transform(
-        expr("sequence(0, size(w) - 5)"), i =>
-          Hashes.hexLong(concat_ws(" ", get(col("w"), i), get(col("w"), i + 1),
-            get(col("w"), i + 2), get(col("w"), i + 3), get(col("w"), i + 4))))).as("h"))
+      .select(col("doc_id"), explode(Dedup.wordWindows(col("w"), 5, each = Hashes.hexLong)).as("h"))
       .join(broadcast(dh), Seq("h"), "left_semi")
       .select(col("doc_id")).distinct()
     val affected = Barrier.pin(affected0)

@@ -54,19 +54,39 @@ object Dedup {
     (h("mh_a") % (P - 1) + 1, h("mh_b") % P)
   }
 
-  /** Word 5-gram shingling, Spark side: 0-based `get`, position order
-    * identical to the oracle's 1-based `range(1, len(w)-3)`. */
-  private def shingles5(w: Column): Column =
-    array_distinct(transform(sequence(lit(0), size(w) - 5), i =>
-      concat_ws(" ", get(w, i), get(w, i + 1), get(w, i + 2), get(w, i + 3), get(w, i + 4))))
+  /** The one word-window format: the `width`-word windows of the word
+    * array `w` (a space-split text) starting every `stride` words, each
+    * window its words joined by single spaces, with `each` applied per
+    * window inside the lambda (pass [[Hashes.hexLong]] to hash in
+    * place). Shingles, segment grids, passage and winnowing indexes, the
+    * decontamination probes and the n-gram signals all cut text here,
+    * so they agree with each other — and with the DuckDB oracles'
+    * 1-based `w[k+1:k+width]` slices — by construction. Window k starts
+    * at word k·stride (0-based `get`); the last window is the last one
+    * that fits, `(size(w) - width) div stride`.
+    *
+    * Precondition: `size(w) >= width`, which every caller filters for
+    * first — Spark's `sequence(0, n)` counts DOWN for n < 0, so a shorter
+    * array would yield null-padded windows instead of none. */
+  private[graft] def wordWindows(w: Column, width: Int, stride: Int = 1,
+                                 each: Column => Column = identity): Column = {
+    require(width >= 1 && stride >= 1,
+      s"wordWindows needs width >= 1 and stride >= 1, got width=$width stride=$stride")
+    val last = if (stride == 1) size(w) - width
+      else call_function("div", size(w) - width, lit(stride))
+    transform(sequence(lit(0), last), k => {
+      val start = if (stride == 1) k else k * stride
+      each(concat_ws(" ", (0 until width).map(o => get(w, if (o == 0) start else start + o)): _*))
+    })
+  }
 
   /** (doc_id, text) → (doc_id, sh: distinct 5-gram shingles); <5-token
-    * rows dropped (Spark `sequence` counts DOWN for start>stop). */
+    * rows dropped ([[wordWindows]]' precondition). */
   private[graft] def shinglesOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
-      .select(col("doc_id"), shingles5(col("w")).as("sh"))
+      .select(col("doc_id"), array_distinct(wordWindows(col("w"), 5)).as("sh"))
 
   private def docShingles(s: SparkSession, dir: String): DataFrame =
     shinglesOf(Tables.documents(s, dir))
@@ -768,10 +788,10 @@ object Dedup {
     * 31-word vocabulary's token SETS collide: measured at sf0.01, token
     * simhash puts 33% of docs in one band bucket and 496 random pairs at
     * Hamming 0; shingle simhash maxes band df at 4 with only true
-    * near-dups below distance 4. Reuses [[docHashedShingles]]'s
+    * near-dups below distance 4. Reuses [[hashedShinglesOf]]'
     * materialized arrays (ReuseExchange with q25/q26 when composed). */
-  private[graft] def simhash48(s: SparkSession, dir: String): DataFrame =
-    docHashedShingles(s, dir)
+  private[graft] def simhash48(docs: DataFrame): DataFrame =
+    hashedShinglesOf(docs)
       .select(col("doc_id"),
         call_function("graft_simhash48", col("hs")).as("sim"))
 
@@ -811,7 +831,13 @@ object Dedup {
        |WHERE bit_count(xor(si.sim, sj.sim)) <= 3
        |ORDER BY i, j""".stripMargin
   ) { (s, dir) =>
-    val sim = simhash48(s, dir)
+    simhashPairsOf(Tables.documents(s, dir)).orderBy(col("i"), col("j"))
+  }
+
+  /** (doc_id, text) → the unordered (i, j, hamming ≤ 3) pairs of
+    * [[q70SimhashNeardup]]. Exposed for the facade. */
+  private[graft] def simhashPairsOf(docs: DataFrame): DataFrame = {
+    val sim = simhash48(docs)
     val bands = sim.select(col("doc_id"),
       array((0 until 4).map(b =>
         lit(b * 4096L) + shiftright(col("sim"), 12 * b) % 4096): _*).as("hs"))
@@ -821,7 +847,6 @@ object Dedup {
       .withColumn("hamming", expr("bit_count(si ^ sj)"))
       .filter(col("hamming") <= 3)
       .select(col("i"), col("j"), col("hamming"))
-      .orderBy(col("i"), col("j"))
   }
 
   /** C4-style boilerplate detection: per-doc share of 8-word segments
@@ -861,18 +886,13 @@ object Dedup {
     boilerplateShare(Tables.documents(s, dir), 8).orderBy(col("doc_id"))
   }
 
-  /** (doc_id, text) → (doc_id, n_seg, n_dup, dup_frac) over
-    * non-overlapping `width`-word segments; duplicate segments WITHIN a
-    * doc count as recurrences too (each occurrence sees the global
-    * count). Exposed for the facade and [[q109Boilerplate]]. */
+  /** (doc_id, text) → (doc_id, n_seg, n_dup, dup_frac) over the
+    * non-overlapping `width`-word segments of [[segRowsOf]]; duplicate
+    * segments WITHIN a doc count as recurrences too (each occurrence
+    * sees the global count). Exposed for the facade and
+    * [[q109Boilerplate]]. */
   private[graft] def boilerplateShare(docs: DataFrame, width: Int): DataFrame = {
-    val segs = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= width)
-      .select(col("doc_id"),
-        explode(transform(expr(s"sequence(0, size(w) div $width - 1)"), k =>
-          hexLong(concat_ws(" ",
-            (0 until width).map(o => get(col("w"), k * width + o)): _*)))).as("h"))
+    val segs = segRowsOf(docs, width).select(col("doc_id"), col("h"))
     val occ = segs.groupBy(col("h")).agg(count(lit(1)).as("n"))
     segs.join(occ, "h")
       .groupBy(col("doc_id"))
@@ -884,7 +904,8 @@ object Dedup {
 
   /** (doc_id, text) → one row per non-overlapping `width`-word segment:
     * (doc_id, k, h) with k the segment ordinal and h the 60-bit hash of
-    * the segment text — fully row-local (streaming-safe), shared by
+    * the segment text — [[wordWindows]] at stride = width, fully
+    * row-local (streaming-safe), shared by [[boilerplateShare]],
     * [[segmentDedup]], [[segmentIndex]], and the streaming gate. */
   private[graft] def segRowsOf(docs: DataFrame, width: Int,
                                carry: Seq[String] = Nil): DataFrame = {
@@ -892,9 +913,8 @@ object Dedup {
     val cs = carry.map(col)
     docs.select(col("doc_id") +: cs :+ split(col("text"), " ").as("w"): _*)
       .filter(size(col("w")) >= width)
-      .select(col("doc_id") +: cs :+ posexplode(transform(
-        expr(s"sequence(0, size(w) div $width - 1)"), k =>
-          hexLong(concat_ws(" ", (0 until width).map(o => get(col("w"), k * width + o)): _*)))): _*)
+      .select(col("doc_id") +: cs :+
+        posexplode(wordWindows(col("w"), width, stride = width, each = hexLong)): _*)
       .select(col("doc_id") +: cs :+ col("pos").as("k") :+ col("col").as("h"): _*)
   }
 
@@ -941,43 +961,9 @@ object Dedup {
                                   qualityCol: Option[String] = None): DataFrame = {
     require(width >= 1, s"width must be >= 1, got $width")
     val base = docs.select(col("doc_id"), col("text"), split(col("text"), " ").as("w"))
-    val segs = segRowsOf(docs, width, carry = qualityCol.toSeq)
-      // the packed key carries its OWN validity guard: computing it for
-      // an oversized doc — or a doc_id outside [0, 9.2e12), where
-      // doc_id·10^6 + k overflows long or a negative doc_id mis-orders
-      // the MIN — fails loudly (raise_error inside the expression that
-      // is actually consumed; a standalone assert column would be
-      // pruned away)
-      .withColumn("pk", when(col("k") >= 1000000L, raise_error(lit(
-          "segmentDedup: doc exceeds 10^6 segments — widen the packed keeper key"))
-          .cast("long"))
-        .when(col("doc_id") < 0L || col("doc_id") >= 9200000000000L, raise_error(lit(
-          "segmentDedup: doc_id outside [0, 9.2e12) — the packed keeper key would overflow/mis-order"))
-          .cast("long"))
-        .otherwise(col("doc_id") * 1000000L + col("k")))
-    // keeper election: default = packed-long MIN (the r11 shape);
-    // quality-aware = MIN over (invq, pk) — still one map-side-combined
-    // aggregate at hash grain, still window-free (the struct only adds
-    // 8 bytes of agg state per distinct segment), keeper = occurrence
-    // in the HIGHEST-quality doc, ties to the packed (doc_id, position)
-    val survivors = qualityCol match {
-      case None =>
-        val occ = segs.groupBy(col("h")).agg(
-          count(lit(1)).as("n"),
-          min(col("pk")).as("keymin"))
-        segs.join(occ, "h")
-          .filter(col("n") === 1 || col("pk") === col("keymin"))
-      case Some(qc) =>
-        val keyed = segs.withColumn("__graft_invq", invQualityKey(qc))
-        val occ = keyed.groupBy(col("h")).agg(
-          count(lit(1)).as("n"),
-          min(struct(col("__graft_invq").as("invq"), col("pk").as("pk"))).as("keymin"))
-        keyed.join(occ, "h")
-          .filter(col("n") === 1 ||
-            (col("__graft_invq") === col("keymin.invq") && col("pk") === col("keymin.pk")))
-    }
-    val kept = survivors
-      .groupBy(col("doc_id")).agg(sort_array(collect_list(col("k"))).as("ks"))
+    val kept = keptSpans(segRowsOf(docs, width, carry = qualityCol.toSeq), "segmentDedup",
+      col("k") >= 1000000L, "doc exceeds 10^6 segments — widen the packed keeper key",
+      qualityCol, col("k"), "ks")
     base.join(kept, Seq("doc_id"), "left")
       .withColumn("ks2", coalesce(col("ks"), expr("cast(array() as array<int>)")))
       .select(col("doc_id"),
@@ -987,6 +973,50 @@ object Dedup {
                 |  flatten(transform(ks2, k -> slice(w, k * $width + 1, $width))),
                 |  slice(w, (size(w) div $width) * $width + 1, size(w) % $width)), ' ')"""
           .stripMargin).as("clean_text"))
+  }
+
+  /** The keeper election of the span rewrites ([[segmentDedup]]'s grid,
+    * [[cdcDedup]]'s content-defined chunks) over span rows (doc_id, k,
+    * h, …): one keeper per span hash h, every other occurrence dropped.
+    * The keeper key packs (doc_id, ordinal) into one long, pk =
+    * doc_id·10^6 + k, and carries its OWN validity guard: computing it
+    * where `tooLarge` holds (the family's packing bound, raised as
+    * "`who`: `tooLargeMsg`") or for a doc_id outside [0, 9.2e12), where
+    * pk overflows long or a negative doc_id mis-orders the MIN, fails
+    * loudly — raise_error inside the expression that is actually
+    * consumed (a standalone assert column would be pruned away).
+    * Election: default = packed-long MIN (the r11 shape); quality-aware
+    * = MIN over (invq, pk), keeper = the occurrence in the HIGHEST-
+    * quality doc, ties to the packed (doc_id, position). Either way one
+    * map-side-combined aggregate at hash grain, window-free (the struct
+    * only adds 8 bytes of agg state per distinct span). Returns
+    * (doc_id, `as`): each doc's sorted list of `keep` over its surviving
+    * spans — the ints or longs its reassembly slices by. */
+  private def keptSpans(spans: DataFrame, who: String, tooLarge: Column, tooLargeMsg: String,
+                        qualityCol: Option[String], keep: Column, as: String): DataFrame = {
+    val keyed = spans
+      .withColumn("pk", when(tooLarge, raise_error(lit(s"$who: $tooLargeMsg")).cast("long"))
+        .when(col("doc_id") < 0L || col("doc_id") >= 9200000000000L, raise_error(lit(
+          s"$who: doc_id outside [0, 9.2e12) — the packed keeper key would overflow/mis-order"))
+          .cast("long"))
+        .otherwise(col("doc_id") * 1000000L + col("k")))
+    val survivors = qualityCol match {
+      case None =>
+        val occ = keyed.groupBy(col("h")).agg(
+          count(lit(1)).as("n"),
+          min(col("pk")).as("keymin"))
+        keyed.join(occ, "h")
+          .filter(col("n") === 1 || col("pk") === col("keymin"))
+      case Some(qc) =>
+        val ranked = keyed.withColumn("__graft_invq", invQualityKey(qc))
+        val occ = ranked.groupBy(col("h")).agg(
+          count(lit(1)).as("n"),
+          min(struct(col("__graft_invq").as("invq"), col("pk").as("pk"))).as("keymin"))
+        ranked.join(occ, "h")
+          .filter(col("n") === 1 ||
+            (col("__graft_invq") === col("keymin.invq") && col("pk") === col("keymin.pk")))
+    }
+    survivors.groupBy(col("doc_id")).agg(sort_array(collect_list(keep)).as(as))
   }
 
   /** q221: the segment-dedup rewrite, oracle-gated end to end — the
@@ -1095,22 +1125,28 @@ object Dedup {
       .orderBy(col("h"))
   }
 
+  /** The CDC boundary array `b` of a word array `w`: 0, every cut
+    * position (a word whose hash ≡ 0 mod `divisor` starts a chunk), and
+    * size(w) — chunk k spans words [b[k], b[k+1]). Guarded for 1-word
+    * docs (Spark sequence() counts DOWN for start > stop). */
+  private def cdcBounds(divisor: Int): Column = expr(
+    s"""concat(array(0),
+       |  if(size(w) < 2, cast(array() as array<int>),
+       |     filter(sequence(1, size(w) - 1),
+       |            i -> graft_md5long64(element_at(w, i + 1)) % $divisor = 0)),
+       |  array(size(w)))""".stripMargin)
+
   /** The (doc_id, k, start, n_words, h) chunk rows behind [[cdcChunks]]
-    * and [[cdcDedup]] — boundary scan + slice hashing, fully row-local. */
+    * and [[cdcDedup]] — the [[cdcBounds]] boundary scan + slice hashing,
+    * fully row-local. Chunks are content-cut, not [[wordWindows]]: their
+    * lengths vary, so each is one `slice` of the word array. */
   private[graft] def cdcChunkRows(docs: DataFrame, divisor: Int,
                                   carry: Seq[String] = Nil): DataFrame = {
     require(divisor >= 2, s"divisor must be >= 2, got $divisor")
     val cs = carry.map(col)
     docs
       .select(col("doc_id") +: cs :+ split(col("text"), " ").as("w"): _*)
-      // cut positions: word hash ≡ 0 (mod divisor); guarded for 1-word
-      // docs (Spark sequence() counts DOWN for start > stop)
-      .withColumn("b", expr(
-        s"""concat(array(0),
-           |  if(size(w) < 2, cast(array() as array<int>),
-           |     filter(sequence(1, size(w) - 1),
-           |            i -> graft_md5long64(element_at(w, i + 1)) % $divisor = 0)),
-           |  array(size(w)))""".stripMargin))
+      .withColumn("b", cdcBounds(divisor))
       .select(col("doc_id") +: cs :+ posexplode(expr(
         s"""transform(sequence(0, size(b) - 2), k -> named_struct(
            |  'start', b[k],
@@ -1136,8 +1172,8 @@ object Dedup {
     * Output is chunk grain: (doc_id, k, start, n_words, n_occ) — k the
     * doc's chunk ordinal, start its word offset, n_occ the corpus-wide
     * occurrence count of the chunk's content. Expected chunk length is
-    * `divisor` words (geometric); a downstream rewrite is [[segmentDedup]]'s
-    * election over these hashes instead of the grid's.
+    * `divisor` words (geometric); the downstream rewrite, [[cdcDedup]],
+    * runs [[segmentDedup]]'s election ([[keptSpans]]) over these hashes.
     *
     * Scale (100 TB): chunking is ONE row-local projection (boundary
     * scan + slice hashing, no shuffle); the occurrence count is the
@@ -1182,8 +1218,8 @@ object Dedup {
     cdcChunks(Tables.documents(s, dir), 8).orderBy(col("doc_id"), col("k"))
   }
 
-  /** The CDC REWRITE — [[segmentDedup]]'s keeper election run over
-    * [[cdcChunks]]' shift-robust chunk hashes instead of the fixed
+  /** The CDC REWRITE — the [[keptSpans]] election [[segmentDedup]] runs,
+    * here over [[cdcChunks]]' shift-robust chunk hashes instead of the fixed
     * grid: every chunk whose content occurs more than once corpus-wide
     * is dropped from all but its first (min doc_id, ordinal)
     * occurrence, and each document is re-assembled from its surviving
@@ -1201,50 +1237,22 @@ object Dedup {
   private[graft] def cdcDedup(docs: DataFrame, divisor: Int = 8,
                               qualityCol: Option[String] = None): DataFrame = {
     val base = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
-      .withColumn("b", expr(
-        s"""concat(array(0),
-           |  if(size(w) < 2, cast(array() as array<int>),
-           |     filter(sequence(1, size(w) - 1),
-           |            i -> graft_md5long64(element_at(w, i + 1)) % $divisor = 0)),
-           |  array(size(w)))""".stripMargin))
-    val chunks = cdcChunkRows(docs, divisor, carry = qualityCol.toSeq)
-      .withColumn("pk", when(col("k") >= 1000000L || col("start") >= 1000000L,
-          raise_error(lit("cdcDedup: doc exceeds 10^6 chunks/words — widen the packed keys"))
-            .cast("long"))
-        .when(col("doc_id") < 0L || col("doc_id") >= 9200000000000L, raise_error(lit(
-          "cdcDedup: doc_id outside [0, 9.2e12) — the packed keeper key would overflow/mis-order"))
-          .cast("long"))
-        .otherwise(col("doc_id") * 1000000L + col("k")))
-      // surviving spans travel as ONE packed long: start·10^6 + n_words.
-      // n_words needs its own bound — a single ≥10^6-word chunk (a 1M+-
-      // word doc whose words never hit a cut boundary) would pack
-      // ambiguously and unpack to a wrong (start, n_words); the start
-      // guard above does NOT imply this one (start is the chunk's
-      // offset, n_words its length). The q225 oracle packs identically,
-      // so only this guard — not the compare — can catch it.
-      .withColumn("sp", when(col("n_words") >= 1000000L, raise_error(lit(
-          "cdcDedup: chunk exceeds 10^6 words — widen the packed span key"))
-          .cast("long"))
-        .otherwise(col("start") * 1000000L + col("n_words")))
-    // same election split as segmentDedup: default packed-long MIN;
-    // quality-aware (invq, pk) struct MIN — window-free either way
-    val survivors = qualityCol match {
-      case None =>
-        val occ = chunks.groupBy(col("h")).agg(
-          count(lit(1)).as("n"), min(col("pk")).as("keymin"))
-        chunks.join(occ, "h")
-          .filter(col("n") === 1 || col("pk") === col("keymin"))
-      case Some(qc) =>
-        val keyed = chunks.withColumn("__graft_invq", invQualityKey(qc))
-        val occ = keyed.groupBy(col("h")).agg(
-          count(lit(1)).as("n"),
-          min(struct(col("__graft_invq").as("invq"), col("pk").as("pk"))).as("keymin"))
-        keyed.join(occ, "h")
-          .filter(col("n") === 1 ||
-            (col("__graft_invq") === col("keymin.invq") && col("pk") === col("keymin.pk")))
-    }
-    val kept = survivors
-      .groupBy(col("doc_id")).agg(sort_array(collect_list(col("sp"))).as("sps"))
+      .withColumn("b", cdcBounds(divisor))
+    // surviving spans travel as ONE packed long: start·10^6 + n_words.
+    // n_words needs its own bound — a single ≥10^6-word chunk (a 1M+-
+    // word doc whose words never hit a cut boundary) would pack
+    // ambiguously and unpack to a wrong (start, n_words); the start
+    // guard on the keeper key does NOT imply this one (start is the
+    // chunk's offset, n_words its length). The q225 oracle packs
+    // identically, so only this guard — not the compare — can catch it.
+    val span = when(col("n_words") >= 1000000L, raise_error(lit(
+        "cdcDedup: chunk exceeds 10^6 words — widen the packed span key"))
+        .cast("long"))
+      .otherwise(col("start") * 1000000L + col("n_words"))
+    val kept = keptSpans(cdcChunkRows(docs, divisor, carry = qualityCol.toSeq), "cdcDedup",
+      col("k") >= 1000000L || col("start") >= 1000000L,
+      "doc exceeds 10^6 chunks/words — widen the packed keys",
+      qualityCol, span, "sps")
     base.join(kept, Seq("doc_id"), "left")
       .withColumn("sps2", coalesce(col("sps"), expr("cast(array() as array<bigint>)")))
       .select(col("doc_id"),
@@ -1447,25 +1455,18 @@ object Dedup {
     * agree mod s (fine for shared prefixes / whole-doc copies; wrong
     * tool for arbitrary-offset quotes). Exposed for the facade and
     * [[q128DupPassages]]. */
-  private[graft] def dupPassages(docs: DataFrame, width: Int, stride: Int): DataFrame = {
-    // stride is interpolated into the window sequence: 0 would be an
-    // integer div-by-zero inside the plan, width < 1 nonsense windows
-    require(width >= 1 && stride >= 1,
-      s"dupPassages needs width >= 1 and stride >= 1, got width=$width stride=$stride")
+  private[graft] def dupPassages(docs: DataFrame, width: Int, stride: Int): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= width)
       .select(col("doc_id"),
-        explode(transform(expr(s"sequence(0, (size(w) - $width) div $stride)"), k =>
-          hexLong(concat_ws(" ",
-            (0 until width).map(o => get(col("w"), k * stride + o)): _*)))).as("h"))
+        explode(wordWindows(col("w"), width, stride, each = hexLong)).as("h"))
       .groupBy(col("h"))
       .agg(
         count(lit(1)).as("n_occ"),
         countDistinct(col("doc_id")).as("n_docs"),
         min(col("doc_id")).as("first_doc"))
       .filter(col("n_docs") > 1)
-  }
 
   /** Near-dup pair DIFF — the audit view a human (or survivor-selection
     * policy) reads to see WHY a pair matched: per verified q26 pair, the
@@ -1612,9 +1613,7 @@ object Dedup {
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
       .select(col("doc_id"), (size(col("w")) - 4).as("nk"),
-        posexplode(transform(expr("sequence(0, size(w) - 5)"), k =>
-          hexLong(concat_ws(" ",
-            (0 until 5).map(o => get(col("w"), k + o)): _*)))))
+        posexplode(wordWindows(col("w"), 5, each = hexLong)))
       .withColumnRenamed("col", "h")
     val win = Window.partitionBy(col("doc_id")).orderBy(col("pos")).rowsBetween(0, 3)
     kg.withColumn("wmin", min(col("h")).over(win))
@@ -1716,10 +1715,7 @@ object Dedup {
     val seg = docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 12)
-      .select(col("doc_id"),
-        posexplode(transform(expr("sequence(0, size(w) - 12)"), k =>
-          hexLong(concat_ws(" ",
-            (0 until 12).map(o => get(col("w"), k + o)): _*)))))
+      .select(col("doc_id"), posexplode(wordWindows(col("w"), 12, each = hexLong)))
       .withColumnRenamed("col", "h")
     val elig = seg.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("nd"), count(lit(1)).as("no"))

@@ -42,9 +42,10 @@ object Packing {
       .orderBy(col("shard"), col("bin"))
   }
 
-  /** documents → (shard, doc_id, tokens) with the md5 shard tag. */
-  private[graft] def shardedTokens(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    Tables.documents(s, dir).select(
+  /** (doc_id, text) → (shard, doc_id, tokens) with the md5 shard tag —
+    * [[q74TokenPacking]]'s and the facade's input to [[pack]]. */
+  private[graft] def shardedTokens(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs.select(
       (call_function("graft_md5long64",
         concat(lit("pack:"), col("doc_id").cast("string"))) % 32).as("shard"),
       col("doc_id"),
@@ -68,7 +69,7 @@ object Packing {
        |  WINDOW w AS (PARTITION BY shard ORDER BY doc_id ROWS UNBOUNDED PRECEDING))
        |GROUP BY shard, bin
        |ORDER BY shard, bin""".stripMargin
-  ) { (s, dir) => pack(shardedTokens(s, dir), BinBudget) }
+  ) { (s, dir) => pack(shardedTokens(Tables.documents(s, dir)), BinBudget) }
 
   /** Generic mixture report over any (source, text) frame. */
   private[graft] def mixtureReportOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {

@@ -244,8 +244,7 @@ object TextAnalysis {
   ) { (s, dir) =>
     val words = Tables.documents(s, dir).select(split(col("text"), " ").as("w"))
     val bigrams = words.filter(size(col("w")) >= 2)
-      .select(explode(transform(sequence(lit(0), size(col("w")) - 2), i =>
-        concat(get(col("w"), i), lit(" "), get(col("w"), i + 1)))).as("bigram"))
+      .select(explode(Dedup.wordWindows(col("w"), 2)).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
     // coalesce: non-nullable term, so the two collocation joins push no
     // isnotnull(term) below the count aggregate (grouping-key filters
@@ -291,18 +290,23 @@ object TextAnalysis {
       |    FROM documents))
       |ORDER BY doc_id, chunk_id""".stripMargin
   ) { (s, dir) =>
-    Tables.documents(s, dir)
+    chunksOf(Tables.documents(s, dir), 32, 24).orderBy(col("doc_id"), col("chunk_id"))
+  }
+
+  /** (doc_id, text) → the unordered (doc_id, chunk_id, n_words,
+    * chunk_md5) rows of [[q85DocChunks]] at any `window` / `stride`.
+    * Exposed for the facade. */
+  private[graft] def chunksOf(docs: DataFrame, window: Int, stride: Int): DataFrame =
+    docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"),
         posexplode(transform(
           // Spark's `/` is always double division — floor for the count
-          sequence(lit(0), floor((size(col("w")) - 1) / lit(24)).cast("int")),
-          k => slice(col("w"), k * 24 + 1, lit(32)))))
+          sequence(lit(0), floor((size(col("w")) - 1) / lit(stride)).cast("int")),
+          k => slice(col("w"), k * stride + 1, lit(window)))))
       .select(col("doc_id"), col("pos").as("chunk_id"),
         size(col("col")).as("n_words"),
         md5(concat_ws(" ", col("col"))).as("chunk_md5"))
-      .orderBy(col("doc_id"), col("chunk_id"))
-  }
 
   /** The search terms shared by [[q120BoolSearch]] and
     * [[q121RankedSearch]] — a conjunctive query over the corpus
@@ -487,10 +491,7 @@ object TextAnalysis {
     val wl = Barrier.pin(docs
       .select(col(groupCol).as("__graft_g"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 5)
-      .select(col("__graft_g"), explode(expr(
-        """transform(sequence(0, size(w) - 5), i ->
-          |  concat_ws(' ', w[i], w[i+1], w[i+2], w[i+3], w[i+4]))""".stripMargin)).as("sh"))
-      .select(col("__graft_g"), Hashes.hexLong(col("sh")).as("h"))
+      .select(col("__graft_g"), explode(Dedup.wordWindows(col("w"), 5, each = Hashes.hexLong)).as("h"))
       .distinct())
     val sz = wl.groupBy(col("__graft_g")).agg(count(lit(1)).as("n"))
     wl.as("a")
@@ -581,8 +582,7 @@ object TextAnalysis {
     val bi = docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(w) - 2), i -> concat_ws(' ', w[i], w[i+1]))")).as("bg"))
+      .select(col("doc_id"), explode(Dedup.wordWindows(col("w"), 2)).as("bg"))
       .select(col("doc_id"), coalesce(Hashes.hexLong(col("bg")), lit(0L)).as("h"))
     val pairs = bi.groupBy(col("h"), col("doc_id")).agg(count(lit(1)).as("occ"))
     // count(occ >= 1) ≡ count(*) (occ is a group count) but REFERENCES
@@ -669,10 +669,8 @@ object TextAnalysis {
     docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= 10)
-      .withColumn("g2",
-        expr("transform(sequence(0, size(w) - 2), i -> concat_ws(' ', w[i], w[i+1]))"))
-      .withColumn("g10",
-        expr("transform(sequence(0, size(w) - 10), i -> array_join(slice(w, i + 1, 10), ' '))"))
+      .withColumn("g2", Dedup.wordWindows(col("w"), 2))
+      .withColumn("g10", Dedup.wordWindows(col("w"), 10))
       // 6-dp rounding as exact int64 half-up — (2e6·a + b) DIV (2b) —
       // not round() of a double quotient: a ratio landing exactly on a
       // 6th-decimal half rounds differently through the two engines'

@@ -94,7 +94,7 @@ class BlockLedgerSpec extends AnyFunSuite {
 
   test("BPE training leaves no blocks") {
     leavesNothing(Bpe.trainMerges(corpus, 3))
-    leavesNothing(Bpe.trainMergesBatched(corpus, 3, maxBatch = 2))
+    leavesNothing(Bpe.trainMerges(corpus, 3, maxBatch = 2))
   }
 
   test("index writes and a BM25 refresh leave no blocks") {

@@ -129,7 +129,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash banding finds EXACTLY the brute-force Hamming<=3 pairs (pigeonhole)") {
-    val sims = graft.ops.Dedup.simhash48(spark, Sf0001)
+    val sims = graft.ops.Dedup.simhash48(Tables.documents(spark, Sf0001))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
     val brute = (for {
       ai <- sims.indices; bi <- ai + 1 until sims.length

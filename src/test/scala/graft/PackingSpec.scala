@@ -23,7 +23,7 @@ class PackingSpec extends AnyFunSuite {
   }
 
   test("greedy bound at a bin-splitting budget: sum <= budget + one max doc") {
-    val sharded = graft.ops.Packing.shardedTokens(spark, Sf0001)
+    val sharded = graft.ops.Packing.shardedTokens(Tables.documents(spark, Sf0001))
     val maxDocTokens = sharded.agg(max("tokens")).head.getLong(0)
     // budget > max doc keeps bins dense (quotient can only step by 1);
     // small enough that busy shards must split

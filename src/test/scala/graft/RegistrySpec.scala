@@ -61,6 +61,36 @@ class RegistrySpec extends AnyFunSuite {
     assert(stacked.isEmpty, s"${stacked.size} stacked scaladoc blocks")
   }
 
+  test("text is cut into n-word windows only by Dedup.wordWindows") {
+    // the window is the format dedup, decontamination, stored indexes
+    // and the DuckDB oracles must agree on: a second Spark-side spelling
+    // agrees with it only by convention
+    val spelling = """get\((col\("w"\)|w), |concat_ws\(' ', w\[i\]|array_join\(slice\(w, i""".r
+    // (file, trimmed line) → why that spelling stays
+    val allowed = Map(
+      ("TextAnalysis.scala",
+        """s"transform(sequence(0, size(w) - $n), i -> array_join(slice(w, i + 1, $n), ' '))"""") ->
+        "gopher's gramCol is interpolated into SQL-string folds that PlanSpec pins to one scan")
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally walk.close()
+    }
+    val hits = files.flatMap { p =>
+      val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
+      val name = p.getFileName.toString
+      // the helper's own body: its `def` line to the first closing brace
+      // at the def's indentation
+      val d = if (name == "Dedup.scala") lines.indexWhere(_.contains("def wordWindows(")) else -1
+      val helper = if (d < 0) Range(0, 0) else d to lines.indexWhere(_ == "  }", d)
+      lines.indices.collect {
+        case i if spelling.findFirstIn(lines(i)).nonEmpty && !helper.contains(i) &&
+          !allowed.contains((name, lines(i).trim)) => s"$p:${i + 1}: ${lines(i).trim}"
+      }
+    }
+    assert(files.nonEmpty)
+    assert(hits.isEmpty, s"${hits.size} window spellings outside Dedup.wordWindows:\n${hits.mkString("\n")}")
+  }
+
   test("README scale-knob table matches Knobs; every knob is a real named facade parameter") {
     val readme = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("README.md")), java.nio.charset.StandardCharsets.UTF_8)

@@ -12,6 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - CDC second implementation: `cdcChunks` must equal an independent
   *    JVM-side re-derivation of the boundary rule, chunking, and
   *    occurrence counts on random docs.
+  *  - Window second implementation: `Dedup.wordWindows`, the one n-word
+  *    window format, must equal a JVM-side slicing at every width and
+  *    stride its callers use.
   *
   * Seeded generators: failures reproduce. */
 class SegmentLawsSpec extends AnyFunSuite {
@@ -71,6 +74,42 @@ class SegmentLawsSpec extends AnyFunSuite {
     assert(got == expected, "engine CDC diverged from the JVM re-derivation")
   }
 
+  test("wordWindows == independent JVM derivation at every (width, stride)") {
+    import TestSpark.spark.implicits._
+    import org.apache.spark.sql.functions.{col, size, split}
+    val rnd = new scala.util.Random(31)
+    for ((width, stride) <- Seq((2, 1), (5, 1), (8, 8), (12, 1), (12, 3))) {
+      // random lengths 1-30 (many below 12) plus a doc of exactly
+      // `width` words (one window) and one a word short (no windows)
+      val docs = (1L to 30L).map { i =>
+        (i, Seq.fill(1 + rnd.nextInt(30))(s"u${rnd.nextInt(5)}").mkString(" "))
+      } ++ Seq(
+        (31L, (1 to width).map(j => s"x$j").mkString(" ")),
+        (32L, (1 until width).map(j => s"y$j").mkString(" ")))
+      // second implementation: window starts 0, stride, … while a whole
+      // window fits, each window's words joined by single spaces
+      def jvm(text: String): Seq[String] = {
+        val w = text.split(" ", -1).toSeq
+        (0 to w.length - width by stride).map(st => w.slice(st, st + width).mkString(" "))
+      }
+      val got = docs.toDF("doc_id", "text")
+        .select(col("doc_id"), split(col("text"), " ").as("w"))
+        .filter(size(col("w")) >= width) // the callers' guard (wordWindows' precondition)
+        .select(col("doc_id"),
+          ops.Dedup.wordWindows(col("w"), width, stride),
+          ops.Dedup.wordWindows(col("w"), width, stride, each = ops.Hashes.hexLong))
+        .collect().map(r => r.getLong(0) -> ((r.getSeq[String](1), r.getSeq[Long](2)))).toMap
+      val tag = s"(width=$width, stride=$stride)"
+      for ((id, text) <- docs) {
+        val (windows, hashes) = got.getOrElse(id, (Seq.empty[String], Seq.empty[Long]))
+        assert(windows == jvm(text), s"$tag doc $id: windows diverged from the JVM derivation")
+        assert(hashes == jvm(text).map(h60), s"$tag doc $id: per-window hashes diverged")
+      }
+      assert(got(31L)._1 == Seq((1 to width).map(j => s"x$j").mkString(" ")), s"$tag exact-width doc")
+      assert(!got.contains(32L), s"$tag a doc one word short carries no windows")
+    }
+  }
+
   test("best-quality keeper: highest quality wins, quality ties fall to the packed key, " +
     "election invariant under row permutation") {
     import TestSpark.spark.implicits._
@@ -103,14 +142,17 @@ class SegmentLawsSpec extends AnyFunSuite {
         8, Some("quality"))
       .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
     assert(cdc(5L) == s"$seg a b" && cdc(1L) == "")
-    // out-of-range quality fails loudly, not silently clamps
-    val boom = intercept[Exception] {
-      ops.Dedup.segmentDedup(
-        Seq((1L, s"$seg x y", 1.5)).toDF("doc_id", "text", "quality"), 8,
-        Some("quality")).collect()
+    // out-of-range quality fails loudly, not silently clamps — on both
+    // rewrites that share the election
+    for (rewrite <- Seq[(org.apache.spark.sql.DataFrame, Int, Option[String]) =>
+        org.apache.spark.sql.DataFrame](ops.Dedup.segmentDedup, ops.Dedup.cdcDedup)) {
+      val boom = intercept[Exception] {
+        rewrite(Seq((1L, s"$seg x y", 1.5)).toDF("doc_id", "text", "quality"), 8,
+          Some("quality")).collect()
+      }
+      val chain = Iterator.iterate(boom: Throwable)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      assert(chain.contains("quality must be in [0,1]"), s"expected the quality guard, got: $chain")
     }
-    val chain = Iterator.iterate(boom: Throwable)(_.getCause)
-      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
-    assert(chain.contains("quality must be in [0,1]"), s"expected the quality guard, got: $chain")
   }
 }
